@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * (reference `Store.getByUuid` — the interactive "fetch one occurrence
   * by id" path a serving JVM answers thousands of times an hour).
   *
-  * The correctness of the keyed lookup is oracle-gated (q24, q203); this
-  * probe records the NUMBER the contract is really about: per-lookup
-  * latency, p50/p99 over `n` point lookups, for the three physical
-  * layouts the library offers —
+  * The correctness of the keyed lookup is oracle-gated (q24, q203) and
+  * pinned in `KeyLookupSpec`; this probe records the NUMBER the contract
+  * is really about: per-lookup latency, p50/p99 over `n` point lookups,
+  * for the physical layouts the library offers —
   *
   *   - `plain`: unsorted multi-file parquet, every lookup scans all
   *     row groups (the naive baseline);
@@ -19,13 +19,18 @@ import org.apache.spark.sql.functions._
   *     single-file serving layout);
   *   - `bucketed`: a `Store.writeBucketed` table — Spark bucket pruning
   *     reads exactly ONE bucket file per lookup (the layout that also
-  *     kills the join exchange, `PlanShapeSpec`).
+  *     kills the join exchange, `PlanShapeSpec`);
+  *   - `direct`: an index written by `Store.writeIndex` (range
+  *     partitioned and sorted by `id`) and read by `Store.getByKey`,
+  *     which reads the one candidate row group on the driver and starts
+  *     no Spark job.
   *
   * Run by the full [[Bench]] sweep in its own child JVM; results land
-  * under `"serving_probe"` in BENCH_FULL.json. Local-mode numbers carry
-  * scheduler overhead (~10 ms floor per query) — the signal is the
-  * RATIO between layouts, which survives on a real cluster where the
-  * scan cost dominates. */
+  * under `"serving_probe"` in BENCH_FULL.json. The first three rows are
+  * one Spark job per lookup each: in local mode, planning, job submit,
+  * task launch and the collect cost tens of milliseconds whatever the
+  * layout, so those rows barely separate. The `direct` row against them
+  * is the cost of that job on the same host. */
 object ServingProbe {
 
   final case class Stats(p50Ms: Double, p99Ms: Double, meanMs: Double)
@@ -46,7 +51,7 @@ object ServingProbe {
       times.sum / times.length)
   }
 
-  /** Build the three layouts from `sfDir`'s orders table, time `n`
+  /** Build the four layouts from `sfDir`'s orders table, time `n`
     * point lookups each, return the JSON fragment for BENCH_FULL. */
   def run(spark: SparkSession, sfDir: String, n: Int): String = {
     val orders = Tables.load(spark, sfDir, "orders")
@@ -79,6 +84,11 @@ object ServingProbe {
     Store.writeBucketed(orders, "probe_orders", "o_orderkey", 16)
     val bucketed = spark.table("probe_orders")
 
+    // direct: the serving index layout, answered on the driver
+    Store.writeIndex(orders.withColumn("id", col("o_orderkey").cast("string")),
+      s"$tmp/direct")
+    val direct = spark.read.parquet(s"$tmp/direct")
+
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     def js(name: String, s: Stats) =
       s""""$name":{"p50_ms":${f2(s.p50Ms)},"p99_ms":${f2(s.p99Ms)},""" +
@@ -90,7 +100,9 @@ object ServingProbe {
       js("bloom_sorted", timeLookups(
         k => bloom.filter(col("o_orderkey") === k), keys)),
       js("bucketed", timeLookups(
-        k => bucketed.filter(col("o_orderkey") === k), keys)))
+        k => bucketed.filter(col("o_orderkey") === k), keys)),
+      js("direct", timeLookups(
+        k => Store.getByKey(direct, k.toString), keys)))
     try spark.sql("DROP TABLE IF EXISTS probe_orders")
     catch { case _: Throwable => () }
     s"""{"n":$n,${rs.mkString(",")}}"""

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{IndexSupport, Serving}
+import graft.index.{IndexSupport, KeyLookup, Serving}
 import graft.operators._
 import graft.processors.Processors
 import graft.sources.DwcSource
@@ -51,8 +51,17 @@ object Store {
   // ── Index (reference index-local-node) ──
   def buildIndex(enriched: DataFrame): DataFrame = IndexSupport.project(enriched)
 
+  /** Index sink, range partitioned and sorted by `id`: every file holds a
+    * disjoint `id` range, so a keyed lookup reads one row group
+    * ([[getByKey]]). The partition count is AQE's, sized to the data as for
+    * any shuffle. Row groups hold at most [[KeyLookup.GroupRows]] rows, so
+    * on a wide index the one candidate row group stays small enough to
+    * read on the driver. */
   def writeIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").parquet(path)
+    index.repartitionByRange(col("id")).sortWithinPartitions("id")
+      .write.mode("overwrite")
+      .option("parquet.block.row.count.limit", KeyLookup.GroupRows.toString)
+      .parquet(path)
 
   /** Bucketed table sink: pre-shuffles rows into `numBuckets` by `key` at
     * WRITE time, so every later equi-join or aggregation on that key reads
@@ -77,9 +86,14 @@ object Store {
   def idsForQuery(index: DataFrame, predicate: Column, limit: Int): DataFrame =
     Serving.idsForQuery(index, predicate, limit)
 
-  /** Keyed lookup (reference Store.getByUuid). */
+  /** Keyed lookup (reference Store.getByUuid). On a bare Parquet index it
+    * reads, on the driver, only the row groups whose footer `id` range holds
+    * the key ([[KeyLookup]]); any other plan, or footers that prune to more
+    * row groups than the default parallelism or to more cells than
+    * [[KeyLookup.MaxCells]], runs the Spark filter. */
   def getByKey(index: DataFrame, rowKey: String): DataFrame =
-    index.filter(col("id") === rowKey)
+    Option(rowKey).flatMap(KeyLookup.direct(index, _))
+      .getOrElse(index.filter(col("id") === rowKey))
 
   // ── Download sinks (reference Store.writeToStream / DwC-A export) ──
   def download(index: DataFrame, rowKeys: DataFrame, fields: Seq[String],

@@ -513,7 +513,6 @@ object SparkEntry {
         cents.zipWithIndex
           .map { case (v, c) => (c, v.toSeq) }.toSeq
           .toDF("cell", "centroid"))
-      graft.plans.GraftFunctions.register(s)
       val cos = graft.plans.GraftFunctions.cosine_sim(
         col("embedding"), col("centroid"))
       // oracle audit (round 10): cell ids/sizes are seed-dependent, the
@@ -1025,7 +1024,6 @@ object SparkEntry {
     //    construction); the audit shows raw vs aligned agreement.
     //    Driver SVD of the d×d cross-covariance → rows-only ──
     "q246_procrustes" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings").limit(2000)
         .select(col("vec_id"), col("embedding").cast("array<double>")
           .as("x"))
@@ -1312,7 +1310,6 @@ object SparkEntry {
       val pairs = Dedup.embeddingNearDuplicates(emb, "vec_id",
           "embedding", threshold = 0.4, bits = 4)
         .select("id_a", "id_b")
-      graft.plans.GraftFunctions.register(s)
       val keyed = emb.select(col("vec_id").as("id"),
         col("embedding").as("v"),
         graft.functions.VectorFunctions
@@ -1654,7 +1651,6 @@ object SparkEntry {
       // boundaries (no under-merge), (b) every dropped doc is touched by
       // at least one such edge (no free drop), (c) each component keeps
       // exactly its min id. All three pinned TRUE; n_docs replays.
-      graft.plans.GraftFunctions.register(s)
       val cents = Similarity.trainCentroids(emb, "embedding", 4, 2,
         "vec_id")
       val celled = Similarity.cellAssignment(emb, "embedding", cents)
@@ -1830,7 +1826,6 @@ object SparkEntry {
     //    set); MinHashAggSpec additionally bounds it against exact
     //    Jaccard ──
     "q91_group_signature" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val sh = Dedup.wordShingleSet(docs, "doc_id", "text", 3)
       val sigs = sh.groupBy("id").agg(collect_list(col("sh")).as("_arr"))
@@ -1839,13 +1834,12 @@ object SparkEntry {
         .join(docs.select(col("doc_id").as("id"), col("source")), Seq("id"))
       val unionSig = udaf(graft.functions.MinHashUnionAgg)
       val gsigs = sigs.groupBy("source").agg(unionSig(col("sig")).as("gsig"))
-      val simUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-        graft.functions.HashKernels.signatureSimilarity(x, y))
       val a = gsigs.select(col("source").as("src_a"), col("gsig").as("sig_a"))
       val b = gsigs.select(col("source").as("src_b"), col("gsig").as("sig_b"))
       a.crossJoin(b).filter(col("src_a") < col("src_b"))
         .select(col("src_a"), col("src_b"),
-          round(simUdf(col("sig_a"), col("sig_b")), 4).as("est_jaccard"))
+          round(graft.plans.GraftFunctions.sig_sim(col("sig_a"),
+            col("sig_b")), 4).as("est_jaccard"))
         .orderBy("src_a", "src_b")
     }),
 
@@ -1986,7 +1980,6 @@ object SparkEntry {
     //    (nfc_normalize / strip_accents): the pre-hash normalisation step
     //    of text dedup, oracle-matched against DuckDB's built-ins ──
     "q77_normalize" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           md5(graft.plans.GraftFunctions.nfc_normalize(col("text")))
@@ -2060,7 +2053,6 @@ object SparkEntry {
       // (the rerank promise, bit-equal kernels); (b) ranked_desc: ranks
       // follow score order; (c) recall_ok: coverage of the global exact
       // top-10 above a floor (measured minima 0.8/0.6 at overfetch 16)
-      graft.plans.GraftFunctions.register(s)
       val ann = Similarity.pqTopK(corpus, queriesDf, 10, overfetch = 16)
       val exact = Similarity.bruteForceTopK(corpus, queriesDf, 10)
       val w = org.apache.spark.sql.expressions.Window
@@ -2267,7 +2259,6 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val qv = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
-      graft.plans.GraftFunctions.register(s)
       val dense = emb.filter(col("vec_id") >= 1).crossJoin(broadcast(qv))
         .select(col("vec_id").as("id"),
           round(graft.plans.GraftFunctions
@@ -2635,7 +2626,6 @@ object SparkEntry {
     //    (O(block·w), not O(block²)) scored with the codegen'd
     //    jaro_winkler — complements q108's exact-key blocking ──
     "q120_sorted_neighborhood" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val pairs = graft.operators.ScaleJoins.sortedNeighborhoodPairs(
         t(s, dir, "customer").select(col("c_nationkey").as("nk"),
           col("c_name").as("name"), col("c_custkey").as("id")),
@@ -2714,7 +2704,6 @@ object SparkEntry {
     //    restates quantise → bit-spread interleave → base32 as integer
     //    algebra, so the hash gate covers the bit layout exactly ──
     "q131_geohash_facet" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val k = col("o_orderkey")
       t(s, dir, "orders")
         .select(graft.plans.GraftFunctions.geohash(
@@ -2793,7 +2782,6 @@ object SparkEntry {
     //    blobs (high H). Codegen'd map-only Expression — the explode→
     //    groupBy restatement would shuffle one row per character ──
     "q136_char_entropy" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           round(graft.plans.GraftFunctions.char_entropy(col("text")), 6)
@@ -3193,7 +3181,6 @@ object SparkEntry {
     //    round trip — the oracle predicts the outcome from ascii-ness
     //    alone (only non-ASCII text is damaged, and repair is exact) ──
     "q155_fix_mojibake" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "documents")
         // every 3rd doc gets non-ASCII content (the synthetic corpus is
         // pure ASCII, which a legacy mis-decode cannot damage)
@@ -3995,7 +3982,6 @@ object SparkEntry {
     //    each doc straight into its 3-gram rows — no intermediate array
     //    column — feeding a plain shingle facet ──
     "q207_shingle_facet" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(graft.plans.GraftFunctions
           .word_shingles(col("text"), lit(3)).as("sh"))

@@ -45,8 +45,4 @@ object Tables {
       case _                => df
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` works against the dir. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -35,10 +35,6 @@ object CoordinateParsers {
     }
   }
 
-  /** True when the string is parseable as a plain decimal number. */
-  def isDecimal(s: String): Boolean =
-    s != null && s.trim.matches("""-?\d+(\.\d+)?""")
-
   private val rangePat =
     """(-?[\d.]+)\s*(km|kilometres|kilometers|m|metres|meters|ft|feet|f)?\s*-\s*([\d.]+)\s*(km|kilometres|kilometers|m|metres|meters|ft|feet|f)?""".r
   private val gtltPat =

@@ -194,9 +194,4 @@ object DateParser {
       parseSingle(s)
     }
   }
-
-  /** Millis since epoch (UTC midnight) of the start date — UDF-friendly. */
-  def parseStartMillis(raw: String): Option[Long] =
-    parseDate(raw).flatMap(_.startDate)
-      .map(_.atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli)
 }

@@ -26,10 +26,6 @@ object TextFunctions {
     when(length(trim(text)) === 0, lit(0L))
       .otherwise(size(split(trim(text), "(?<=\\W)|(?=\\W)")).cast("long"))
 
-  /** Count of alphabetic characters. */
-  def alphaCount(text: Column): Column =
-    length(regexp_replace(text, "[^A-Za-z]", "")).cast("long")
-
   /** Count of punctuation characters. */
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]{}-]", "")).cast("long")

@@ -370,11 +370,6 @@ object Serving {
       .groupBy(field).agg(count(lit(1)).as("count"))
       .orderBy(col("count").desc, col(field).asc)
 
-  /** A2 facet with minimum count. */
-  def facetWithMinCount(index: DataFrame, field: String, minCount: Long,
-      predicate: Option[Column] = None): DataFrame =
-    facet(index, field, predicate).filter(col("count") >= minCount)
-
   /** A3 distinct values, capped. */
   def distinctValues(index: DataFrame, field: String, max: Int,
       predicate: Option[Column] = None): DataFrame =

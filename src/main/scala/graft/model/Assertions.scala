@@ -173,26 +173,14 @@ object AssertionCodes {
 
   def isGeospatial(code: Int): Boolean = code >= 0 && code < 10000
   def isTaxonomic(code: Int): Boolean = code >= 10000 && code < 20000
-  def isTemporal(code: Int): Boolean = code >= 30000 && code < 40000
 
-  private val fatalGeoCodes = all.filter(c => c.fatal && isGeospatial(c.code)).map(_.code)
-  private val fatalTaxonCodes = all.filter(c => c.fatal && isTaxonomic(c.code)).map(_.code)
-
-  /** Column helpers: build one assertion struct (schema: name, code,
-    * qaStatus, comment); reference model `model/QualityAssertion.scala:20-57`.
-    * qaStatus 0 = failed test, 1 = passed. */
-  def assertion(ec: ErrorCode, comment: String = ""): Column =
-    struct(lit(ec.name).as("name"), lit(ec.code).as("code"),
-      lit(0).as("qaStatus"), lit(comment).as("comment"))
-
-  /** Conditional assertion: struct when `cond`, else null (compacted later). */
-  def assertIf(cond: Column, ec: ErrorCode, comment: String = ""): Column =
-    when(cond, assertion(ec, comment)).otherwise(lit(null))
-
-  /** Compact form: pipeline stages carry assertion CODES (array<int>) and
-    * the struct array is materialised once at the end — per-stage struct
-    * construction is interpreted (no codegen for array-of-struct building)
-    * and dominated enrichment cost when done eight times per row. */
+  /** Column helper for one assertion, in compact form: pipeline stages
+    * carry assertion CODES (array<int>) and the struct array (schema: name,
+    * code, qaStatus, comment; reference `model/QualityAssertion.scala:20-57`)
+    * is materialised once at the end by [[assembleFromCodes]] — per-stage
+    * struct construction is interpreted (no codegen for array-of-struct
+    * building) and dominated enrichment cost when done eight times per
+    * row. */
   def assertCodeIf(cond: Column, ec: ErrorCode): Column =
     when(cond, lit(ec.code)).otherwise(lit(null))
 
@@ -203,37 +191,16 @@ object AssertionCodes {
 
   private val nameByCode: Map[Int, String] = all.map(ec => ec.code -> ec.name).toMap
 
-  /** array<int> codes → the public array<struct> assertion column, built in
-    * one kernel pass (a per-element CASE-chain expression is interpreted and
-    * costs ~65µs/row at 44 codes). */
-  val structsFromCodes: Column => Column = {
-    val u = udf((codes: Seq[Int]) => codes.map(c =>
-      QualityAssertion(nameByCode.getOrElse(c, "unknown"), c, 0, "")))
-    (codes: Column) => u(codes)
-  }
-
-  /** geospatiallyKosher = no fatal geospatial assertion present
-    * (reference `load/FullRecordMapper.scala` kosher computation). */
-  def geospatiallyKosher(assertions: Column): Column =
-    !exists(assertions, a => a.getField("code").isin(fatalGeoCodes.map(Integer.valueOf): _*))
-
-  def taxonomicallyKosher(assertions: Column): Column =
-    !exists(assertions, a => a.getField("code").isin(fatalTaxonCodes.map(Integer.valueOf): _*))
-
-  /** Kosher flags over the compact code array. */
-  def geospatiallyKosherCodes(codes: Column): Column =
-    !arrays_overlap(codes, array(fatalGeoCodes.map(lit): _*))
-
-  def taxonomicallyKosherCodes(codes: Column): Column =
-    !arrays_overlap(codes, array(fatalTaxonCodes.map(lit): _*))
-
   /** Everything derived from the code array — the struct column and both
-    * kosher flags. */
+    * kosher flags (no fatal geospatial / taxonomic assertion present;
+    * reference `load/FullRecordMapper.scala` kosher computation). */
   case class AssembledAssertions(assertions: Seq[QualityAssertion],
       geospatiallyKosher: Boolean, taxonomicallyKosher: Boolean)
 
-  private val fatalGeoSet = fatalGeoCodes.toSet
-  private val fatalTaxonSet = fatalTaxonCodes.toSet
+  private val fatalGeoSet =
+    all.filter(c => c.fatal && isGeospatial(c.code)).map(_.code).toSet
+  private val fatalTaxonSet =
+    all.filter(c => c.fatal && isTaxonomic(c.code)).map(_.code).toSet
   private val assembleMemo = new java.util.concurrent.ConcurrentHashMap[
     Seq[Int], AssembledAssertions]()
 

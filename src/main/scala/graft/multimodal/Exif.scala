@@ -154,7 +154,6 @@ object Exif {
     val out = new java.io.ByteArrayOutputStream()
     def w8(v: Int): Unit = out.write(v & 0xff)
     def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def w32(v: Long): Unit = { w8((v >> 24).toInt); w8((v >> 16).toInt); w8((v >> 8).toInt); w8(v.toInt) }
 
     def toDms(x: Double): (Long, Long, Long) = {
       val a = x.abs

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column support for training-data pipelines.
   *
@@ -19,17 +18,6 @@ import org.apache.spark.sql.types._
   * kernel for an ffmpeg call with the SAME column shape).
   */
 object Multimodal {
-
-  val imageMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("channels", IntegerType)))
-
-  val audioMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("sampleRate", IntegerType),
-    StructField("durationMs", LongType)))
 
   /** Split an associatedMedia value into its media URLs (reference
     * `load/DownloadMedia.unpackAssociatedMedia:40-63`): pipe is the DwC
@@ -241,13 +229,6 @@ object Multimodal {
   def fingerprintBer(a: Column, b: Column): Column =
     udf((x: Seq[Int], y: Seq[Int]) =>
       AudioFingerprint.bitErrorRate(x.toArray, y.toArray)).apply(a, b)
-
-  val videoMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("usPerFrame", IntegerType),
-    StructField("nFrames", IntegerType)))
 
   /** Attach a REAL AVI/MJPEG payload + metadata per id: deterministic
     * synthetic frames ([[VideoCodec.syntheticVideo]]), byte-accurate RIFF
@@ -588,53 +569,6 @@ object Multimodal {
     df.withColumn("audio", gen(col(idCol).cast("long")))
   }
 
-  /** Attach a deterministic fake binary payload + metadata to a DataFrame —
-    * kept for payload-agnostic plumbing tests (e.g. frame sampling, where
-    * a real video codec is genuinely absent from the JDK). */
-  def withFakeImageColumn(df: DataFrame, idCol: String): DataFrame =
-    df.withColumn("image",
-        sha2(col(idCol).cast("string"), 256).cast("binary"))
-      .withColumn("imageMeta", struct(
-        lit("fake/raw").as("format"),
-        (pmod(crc32(col(idCol).cast("string")), lit(1920)) + 32).cast("int").as("width"),
-        (pmod(crc32(col(idCol).cast("string")) * 7, lit(1080)) + 32).cast("int").as("height"),
-        lit(3).as("channels")))
-
-  /** STUBBED image decode → fixed-length feature vector. A real
-    * implementation decodes `bytes` with a codec and runs an encoder; shape
-    * and determinism are what the pipeline depends on, and those are real. */
-  def imageFeatureKernel(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    var h = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < bytes.length) {
-      h = graft.functions.HashKernels.mix64(h ^ bytes(i))
-      out(i % dim) += ((h & 0xFFFF).toFloat / 65535f - 0.5f)
-      i += 1
-    }
-    var d = 0
-    while (d < dim) { out(d) = out(d) / math.max(1, bytes.length / dim); d += 1 }
-    out
-  }
-
-  /** Feature-extraction column over a binary media column: the batch shape is
-    * one vector per row, partition-parallel, no shuffle. */
-  def imageFeatures(bytesCol: Column, dim: Int = 64): Column =
-    udf((b: Array[Byte]) => imageFeatureKernel(b, dim)).apply(bytesCol)
-
-  /** STUBBED resize: a real kernel rescales pixels; the stub rescales the
-    * byte payload deterministically so output size tracks (w, h). */
-  def resizeImage(bytesCol: Column, metaCol: Column, w: Int, h: Int): Column = {
-    val resized = udf { (b: Array[Byte]) =>
-      val targetLen = math.max(16, (w * h) / 1024)
-      Array.tabulate[Byte](targetLen)(i => b(i % b.length))
-    }
-    struct(resized(bytesCol).as("bytes"),
-      struct(metaCol.getField("format").as("format"),
-        lit(w).as("width"), lit(h).as("height"),
-        metaCol.getField("channels").as("channels")).as("meta"))
-  }
-
   /** PNG-stream container: frames stored back-to-back as whole PNG files —
     * the synthetic stand-in for a video bitstream (the JDK ships no video
     * codec). Frame boundaries are found by scanning for the 8-byte PNG
@@ -692,24 +626,5 @@ object Multimodal {
       .withColumn("frameHeight", col("frame._3"))
       .withColumn("frameFeatures", col("frame._4"))
       .drop("_frames", "frame")
-  }
-
-  /** Frame sampling plumbing for video-like payloads: split the payload into
-    * `frameCount` deterministic "frames" → one output row per frame via
-    * explode. A real kernel seeks keyframes; the row-explosion shape, frame
-    * index column, and per-frame feature hook are the real pipeline. */
-  def sampleFrames(df: DataFrame, bytesCol: String, frameCount: Int): DataFrame = {
-    val splitUdf = udf { (b: Array[Byte]) =>
-      val n = math.max(1, math.min(frameCount, b.length))
-      val step = math.max(1, b.length / n)
-      (0 until n).map(i =>
-        (i, b.slice(i * step, math.min(b.length, i * step + step)))).toArray
-    }
-    df.withColumn("_frames", splitUdf(col(bytesCol)))
-      .select(col("*"), posexplode(col("_frames")).as(Seq("framePos", "frame")))
-      .drop("_frames")
-      .withColumn("frameIndex", col("frame._1"))
-      .withColumn("frameBytes", col("frame._2"))
-      .drop("frame", "framePos")
   }
 }

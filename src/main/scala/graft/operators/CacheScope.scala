@@ -42,20 +42,17 @@ object CacheScope {
     * the returned DataFrame carries an `observe` marker, and a one-shot
     * [[org.apache.spark.sql.util.QueryExecutionListener]] unpersists
     * `caches` the first time any action drives a plan containing that
-    * marker (success OR failure). The caller's first materialization
-    * still reads the caches warm; afterwards the session holds no leaked
-    * storage — the long-lived-JVM contract the plain (non-`*Scoped`)
-    * linkage entry points promise.
+    * marker (success OR failure), then unregisters itself. The caller's
+    * first materialization still reads the caches warm; afterwards the
+    * session holds neither leaked storage nor the listener — the
+    * long-lived-JVM contract the plain (non-`*Scoped`) entry points
+    * promise, also when a stream calls them once per micro-batch.
     *
     * Re-materializing the returned frame after the first action
-    * recomputes the released internals (correct, just cold) — and since
-    * the listener already knows, the SECOND materialization logs a
-    * one-shot WARN pointing at the `*Scoped` form, so the footgun is
-    * loud instead of a silent slowdown; callers that drive a result
-    * repeatedly should bracket with [[scoped]] instead. The listener
-    * matches the exact marker name in the analyzed plan, so unrelated
-    * queries on the session never trigger an early release or a false
-    * warning. */
+    * recomputes the released internals (correct, just cold); callers that
+    * drive a result repeatedly should bracket with [[scoped]] instead. The
+    * listener matches the exact marker name in the analyzed plan, so
+    * unrelated queries on the session never trigger an early release. */
   def releaseOnFirstMaterialization(result: DataFrame,
       caches: Seq[DataFrame]): DataFrame = {
     import org.apache.spark.sql.execution.QueryExecution
@@ -67,40 +64,23 @@ object CacheScope {
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
     val listener = new QueryExecutionListener {
-      // 0 = caches warm, 1 = released, 2 = recompute warned + detached
-      private val state = new java.util.concurrent.atomic.AtomicInteger(0)
+      private val released = new java.util.concurrent.atomic.AtomicBoolean()
       private def hasMarker(qe: QueryExecution): Boolean =
         qe.analyzed.collectFirst {
           case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
               if c.name == marker => c
         }.nonEmpty
-      private def advance(qe: QueryExecution): Unit =
-        if (hasMarker(qe)) {
-          if (state.compareAndSet(0, 1))
-            caches.foreach(_.unpersist(blocking = false))
-          else if (state.compareAndSet(1, 2)) {
-            recomputeWarnSink(
-              "second materialization of a releaseOnFirstMaterialization " +
-                "result recomputed its released internals cold; bracket " +
-                "repeated consumption with the *Scoped entry point or " +
-                "CacheScope.scoped instead")
-            spark.listenerManager.unregister(this)
-          }
+      private def release(qe: QueryExecution): Unit =
+        if (hasMarker(qe) && released.compareAndSet(false, true)) {
+          caches.foreach(_.unpersist(blocking = false))
+          spark.listenerManager.unregister(this)
         }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = advance(qe)
+          durationNs: Long): Unit = release(qe)
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = advance(qe)
+          exception: Exception): Unit = release(qe)
     }
     spark.listenerManager.register(listener)
     observed
   }
-
-  private lazy val log =
-    org.slf4j.LoggerFactory.getLogger(CacheScope.getClass)
-
-  /** Where the one-shot recompute warning goes — a WARN log in
-    * production; specs swap it to count invocations. */
-  private[graft] var recomputeWarnSink: String => Unit =
-    msg => log.warn(msg)
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
+import graft.plans.GraftFunctions.{containment_long, cosine_sim,
+  jaccard_long, minhash_md5, sig_sim}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -96,16 +98,6 @@ object Dedup {
     docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** MinHash signatures as one tight text→shingles→signature kernel pass per
-    * row (see `HashKernels` for why this beats higher-order-function
-    * expressions). Returns (id, sig: array<long>). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int, numHashes: Int): DataFrame = {
-    val mh = udf((text: String) => graft.functions.HashKernels.minhash(
-      graft.functions.HashKernels.charShingles(text, shingleLen), numHashes))
-    docs.select(col(idCol).as("id"), mh(col(textCol)).as("sig"))
-  }
-
   /** MinHash + LSH near-duplicate candidate pairs.
     * Pipeline: shingle → minhash(numHashes) + band hashes (one kernel pass) →
     * collapse identical signatures to one representative → explode tiny
@@ -152,15 +144,13 @@ object Dedup {
       boundedSelfPairs(banded, Seq("band", "bandHash"), "rep", maxBucket)
         .distinct()
 
-    val simUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-      graft.functions.HashKernels.signatureSimilarity(x, y))
     val verified = candidates
       .join(repTable.select(col("rep").as("rep_a"), col("sig").as("sig_a")),
         Seq("rep_a"))
       .join(repTable.select(col("rep").as("rep_b"), col("sig").as("sig_b")),
         Seq("rep_b"))
       .select(col("rep_a"), col("rep_b"),
-        simUdf(col("sig_a"), col("sig_b")).as("est_jaccard"))
+        sig_sim(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= jaccardThreshold)
     val cross = verified
       .join(members.select(col("rep").as("rep_a"), col("id").as("_ia")),
@@ -221,15 +211,13 @@ object Dedup {
     // verify on REP pairs (one est per signature pair), expand to id pairs
     // only for the survivors — duplicate-heavy corpora verify once per
     // distinct-content pair instead of once per copy pair
-    val simUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-      graft.functions.HashKernels.signatureSimilarity(x, y))
     val verified = repCandidates
       .join(repTable(sigC).select(col("rep").as("corpus_rep"),
         col("sig").as("sig_c")), Seq("corpus_rep"))
       .join(repTable(sigP).select(col("rep").as("probe_rep"),
         col("sig").as("sig_p")), Seq("probe_rep"))
       .select(col("corpus_rep"), col("probe_rep"),
-        simUdf(col("sig_c"), col("sig_p")).as("est_jaccard"))
+        sig_sim(col("sig_c"), col("sig_p")).as("est_jaccard"))
       .filter(col("est_jaccard") >= jaccardThreshold)
     verified
       .join(sigC.select(col("rep").as("corpus_rep"), col("id").as("corpus_id")),
@@ -414,13 +402,11 @@ object Dedup {
       .select("id_a", "id_b").distinct()
 
     // verify candidates with the exact set Jaccard
-    val jacUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-      graft.functions.HashKernels.jaccardLong(x, y))
     candidates
       .join(sh.select(col("id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jacUdf(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccard_long(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -463,15 +449,13 @@ object Dedup {
       .filter(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b").distinct()
 
-    val contUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-      graft.functions.HashKernels.containmentLong(x, y))
     candidates
       .join(sh.select(col("id").as("id_a"), col("shingles").as("sh_a")),
         Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        contUdf(col("sh_a"), col("sh_b")).as("containment"))
+        containment_long(col("sh_a"), col("sh_b")).as("containment"))
       .filter(col("containment") >= threshold)
   }
 
@@ -499,7 +483,7 @@ object Dedup {
     val pairs = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        Similarity.cosineCol(emb)(col("v_a"), col("v_b")).as("cos"))
+        cosine_sim(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= threshold)
     val comps = Components.connectedComponents(pairs, "id_a", "id_b")
       .withColumnRenamed("node", "id")
@@ -529,7 +513,7 @@ object Dedup {
       .join(keyed.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
       .join(keyed.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        Similarity.cosineCol(emb)(col("v_a"), col("v_b")).as("cosine"))
+        cosine_sim(col("v_a"), col("v_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -587,26 +571,6 @@ object Dedup {
         .as("shs"))
   }
 
-  /** Exact Jaccard for given candidate pairs over a (id, sh) shingle set:
-    * each doc's set is collapsed to a 64-bit-hashed array ONCE, the pairs
-    * join picks up two arrays, and a tight set-intersection kernel scores
-    * each pair in one pass — no per-shingle explode on the (potentially
-    * large) candidate set. Returns (id_a, id_b, jaccard) — an exact
-    * rational of integer counts, reproducible on any engine; hashing
-    * preserves set equality up to 64-bit collisions (~2⁻⁵⁰ across a
-    * billion-shingle corpus — the same contract as [[ngramJaccardPairs]],
-    * whose string-side oracle has hash-matched since round 1). */
-  def exactJaccardOfPairs(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val shArr = sh.groupBy("id")
-      .agg(collect_list(xxhash64(col("sh"))).as("hs"))
-    val jac = udf((a: Seq[Long], b: Seq[Long]) =>
-      graft.functions.HashKernels.jaccardLong(a, b))
-    pairs
-      .join(shArr.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
-      .join(shArr.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jac(col("ha"), col("hb")).as("jaccard"))
-  }
-
   /** LSH candidate pairs from md5-derived MinHash signatures.
     *
     * For hash `h` of `numHashes`, the signature value is
@@ -622,10 +586,9 @@ object Dedup {
     * instead of the relational explode-×k → (id, h) groupBy form: same
     * bytes, one shuffle fewer and k× fewer intermediate rows. */
   def signaturesPortable(sh: DataFrame, numHashes: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(sh.sparkSession)
     sh.groupBy("id").agg(collect_list(col("sh")).as("_arr"))
-      .select(col("id"), posexplode(graft.plans.GraftFunctions
-        .minhash_md5(col("_arr"), lit(numHashes))).as(Seq("h", "mv")))
+      .select(col("id"), posexplode(
+        minhash_md5(col("_arr"), lit(numHashes))).as(Seq("h", "mv")))
   }
 
   /** Signature ARRAYS from per-doc shingle arrays: (id, mvs) with
@@ -636,9 +599,8 @@ object Dedup {
     * is duplicate- and order-insensitive). */
   private[graft] def signatureArrays(shArr: DataFrame,
       numHashes: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(shArr.sparkSession)
-    shArr.select(col("id"), graft.plans.GraftFunctions
-      .minhash_md5(col("shs"), lit(numHashes)).as("mvs"))
+    shArr.select(col("id"),
+      minhash_md5(col("shs"), lit(numHashes)).as("mvs"))
   }
 
   /** Per-band LSH bucket keys from a signature array, as an array indexed
@@ -681,28 +643,36 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** [[exactJaccardOfPairs]] over shingle ARRAYS: the per-doc hashed set
-    * comes from a map-only `transform(shs, xxhash64)` instead of a
-    * groupBy(id) collect — duplicate-free and order-irrelevant for the
-    * set kernel, so values are identical. */
+  /** Exact Jaccard for given candidate pairs over per-doc shingle ARRAYS:
+    * each doc's set is hashed map-only (`transform(shs, xxhash64)`), the
+    * pairs join picks up two arrays, and the codegen'd `jaccard_long`
+    * kernel scores each pair in one pass — no per-shingle explode on the
+    * (potentially large) candidate set. Returns (id_a, id_b, jaccard) — an
+    * exact rational of integer counts, reproducible on any engine; hashing
+    * preserves set equality up to 64-bit collisions (~2⁻⁵⁰ across a
+    * billion-shingle corpus — the same contract as [[ngramJaccardPairs]],
+    * whose string-side oracle has hash-matched since round 1). */
   private[graft] def exactJaccardOfPairsArr(pairs: DataFrame,
       shArr: DataFrame): DataFrame = {
     val hs = shArr.select(col("id"),
       transform(col("shs"), s => xxhash64(s)).as("hs"))
-    val jac = udf((a: Seq[Long], b: Seq[Long]) =>
-      graft.functions.HashKernels.jaccardLong(a, b))
     pairs
       .join(hs.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
       .join(hs.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jac(col("ha"), col("hb")).as("jaccard"))
+        jaccard_long(col("ha"), col("hb")).as("jaccard"))
   }
 
-  /** [[exactWordJaccardPairs]] over shingle ARRAYS: set sizes are
-    * map-only `size(shs)` (no groupBy-count), the df table still
-    * aggregates the exploded grams (a global statistic — that shuffle is
-    * fundamental), and the verify kernel reads the arrays directly. Same
-    * lossless PPJoin prefix + size-ratio pruning, identical pairs. */
+  /** Ground-truth near-duplicate pairs by EXACT Jaccard ≥ threshold over
+    * per-doc word-shingle ARRAYS, with the same LOSSLESS prefix filter as
+    * [[ngramJaccardPairs]]: shingles ranked per doc by (global df asc,
+    * shingle asc), only the first `|A| − ⌈t·|A|⌉ + 1` can witness a
+    * qualifying pair (PPJoin), df = 1 prefix shingles can't witness any,
+    * and the size-ratio bound prunes length-incompatible pairs — so hot
+    * boilerplate shingles never drive a quadratic pair blow-up while the
+    * result set stays EXACTLY the J ≥ t pairs. Set sizes are map-only
+    * `size(shs)`; the df table aggregates the exploded grams (a global
+    * statistic — that shuffle is fundamental). */
   private[graft] def exactWordJaccardPairsArr(shArr: DataFrame,
       threshold: Double): DataFrame = {
     val exploded = shArr.select(col("id"), size(col("shs")).as("setSize"),
@@ -766,58 +736,6 @@ object Dedup {
     exactJaccardOfPairsArr(cand, shArr).filter(col("jaccard") >= threshold)
   }
 
-  /** Ground-truth near-duplicate pairs by EXACT Jaccard ≥ threshold over
-    * the word-shingle sets, with the same LOSSLESS prefix filter as
-    * [[ngramJaccardPairs]]: shingles ranked per doc by (global df asc,
-    * shingle asc), only the first `|A| − ⌈t·|A|⌉ + 1` can witness a
-    * qualifying pair (PPJoin), df = 1 prefix shingles can't witness any,
-    * and the size-ratio bound prunes length-incompatible pairs — so hot
-    * boilerplate shingles never drive a quadratic pair blow-up while the
-    * result set stays EXACTLY the J ≥ t pairs. */
-  def exactWordJaccardPairs(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("setSize"))
-    val dfT = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df"), col("sh"))
-    // persisted for the same reason as in ngramJaccardPairs: the
-    // candidate self-join must not re-run the df-join + rank pipeline
-    // once per side
-    val prefixes = sh.join(dfT, "sh").join(sizes, "id")
-      .withColumn("_rn", row_number().over(rankW))
-      .filter(col("_rn") <= col("setSize") -
-        ceil(lit(threshold) * col("setSize")).cast("int") + 1)
-      .filter(col("df") >= 2)
-      .select(col("id"), col("setSize"), col("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = prefixes
-      .select(col("sh"), col("id").as("id_a"), col("setSize").as("sa"))
-      .join(prefixes.select(col("sh"), col("id").as("id_b"),
-        col("setSize").as("sb")), Seq("sh"))
-      .filter(col("id_a") < col("id_b") &&
-        col("sb") >= lit(threshold) * col("sa") &&
-        col("sa") >= lit(threshold) * col("sb"))
-      .select("id_a", "id_b").distinct()
-    exactJaccardOfPairs(cand, sh).filter(col("jaccard") >= threshold)
-  }
-
-  /** Exact Jaccard for candidate pairs spanning TWO corpora: (id_a from
-    * `shA`, id_b from `shB`) — same hashed-array kernel as
-    * [[exactJaccardOfPairs]], one array table per side (id spaces may
-    * overlap freely). */
-  def exactJaccardOfPairsTwoSided(pairs: DataFrame, shA: DataFrame,
-      shB: DataFrame): DataFrame = {
-    def arr(sh: DataFrame) = sh.groupBy("id")
-      .agg(collect_list(xxhash64(col("sh"))).as("hs"))
-    val jac = udf((a: Seq[Long], b: Seq[Long]) =>
-      graft.functions.HashKernels.jaccardLong(a, b))
-    pairs
-      .join(arr(shA).select(col("id").as("id_a"), col("hs").as("ha")),
-        Seq("id_a"))
-      .join(arr(shB).select(col("id").as("id_b"), col("hs").as("hb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jac(col("ha"), col("hb")).as("jaccard"))
-  }
-
   /** Cross-corpus md5-MinHash LSH with exact-Jaccard verify — the
     * "dedup the new crawl against the existing training set" operation
     * ([[minhashLshPairsAgainst]]) in the ORACLE-REPLAYABLE form: both
@@ -850,15 +768,13 @@ object Dedup {
       .select("id_a", "id_b").distinct()
     def hsOf(shArr: DataFrame) = shArr.select(col("id"),
       transform(col("shs"), s => xxhash64(s)).as("hs"))
-    val jac = udf((a: Seq[Long], b: Seq[Long]) =>
-      graft.functions.HashKernels.jaccardLong(a, b))
     cand
       .join(hsOf(shC).select(col("id").as("id_a"), col("hs").as("ha")),
         Seq("id_a"))
       .join(hsOf(shP).select(col("id").as("id_b"), col("hs").as("hb")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jac(col("ha"), col("hb")).as("jaccard"))
+        jaccard_long(col("ha"), col("hb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

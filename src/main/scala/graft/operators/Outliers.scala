@@ -32,21 +32,6 @@ object Outliers {
       col("stats.triggerFailsafe"))
   }
 
-  /** Join jackknife outlier values back to record uuids: a record is an
-    * outlier for a layer when its sampled value is in the group's outlier
-    * tail (reference `ReverseJacknifeProcessor.scala:324-432` marks records
-    * whose values land in `outlierValues`). Outlier-in-N-layers counts feed
-    * the detectedOutlier assertion. */
-  def jackknifeOutlierRecords(samples: DataFrame, stats: DataFrame): DataFrame = {
-    samples.join(stats.select(col("taxonGuid"), col("layerId"),
-        col("outlierValues")),
-        Seq("taxonGuid", "layerId"))
-      .filter(array_contains(col("outlierValues"), col("value").cast("float")))
-      .groupBy("uuid", "taxonGuid")
-      .agg(collect_set("layerId").as("outlierForLayers"),
-        count(lit(1)).as("outlierLayerCount"))
-  }
-
   /** Expert-distribution outliers: records of a taxon outside its expert
     * polygon, with distance outside (reference
     * `getRecordsOutsideDistribution:397` + `getOutlierRecordDistances:412`;

@@ -432,7 +432,6 @@ object RecordLinkage {
       threshold: Double, blockCols: Seq[String],
       maxNaiveBlock: Long = 500L, maxDelta: Int = 2): DataFrame = {
     require(threshold > 0.7 && threshold <= 1.0, "high-threshold operator")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val verify = (a: Column, b: Column) =>
       round(graft.plans.GraftFunctions.jaro_winkler(a, b), 6) >= threshold
     val blk = blockCols.map(col)

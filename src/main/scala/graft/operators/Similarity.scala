@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.GraftFunctions.cosine_sim
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,14 +16,6 @@ import org.apache.spark.sql.functions._
   *    Scan cost drops by ~C/nprobe; recall controlled by nprobe.
   */
 object Similarity {
-
-  /** Codegen'd cosine over array<float> columns (`plans.CosineSimilarity`):
-    * stays inside whole-stage codegen, no per-row Seq boxing — the UDF form
-    * cost ~6x on the near-dup pair scans. */
-  private[operators] def cosineCol(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    graft.plans.GraftFunctions.cosine_sim(a, b)
-  }
 
   /** Exact top-k by cosine for each query vector.
     * `queries` must be small (it is broadcast). Output: (query_id, id, cosine, rank).
@@ -40,7 +33,7 @@ object Similarity {
       queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
     val scored = corpus.crossJoin(broadcast(queries))
       .select(col(queryId), col(corpusId),
-        cosineCol(corpus)(col(corpusVec), col(queryVec)).as("cosine"))
+        cosine_sim(col(corpusVec), col(queryVec)).as("cosine"))
     val pruned = graft.plans.TopKOps.topKPerGroup(scored,
       Seq(col(queryId)), Seq(col("cosine").desc, col(corpusId).asc), k)
     // rank over the pruned set (≤ k rows per query) — same total order
@@ -196,7 +189,7 @@ object Similarity {
     val probes = probeCells(queries, queryVec, centroids, nprobe)
     val scored = celled.join(broadcast(probes), Seq("cell"))
       .select(col(queryId), col(corpusId),
-        cosineCol(corpus)(col(corpusVec), col(queryVec)).as("cosine"))
+        cosine_sim(col(corpusVec), col(queryVec)).as("cosine"))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(corpusId).asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -242,7 +235,7 @@ object Similarity {
       .drop("_cn")
     val scored = corpusBlocked.join(probesBlocked, Seq("cell", "_blk"))
       .select(col(queryId), col(corpusId),
-        cosineCol(corpus)(col(corpusVec), col(queryVec)).as("cosine"))
+        cosine_sim(col(corpusVec), col(queryVec)).as("cosine"))
     val pruned = graft.plans.TopKOps.topKPerGroup(scored, Seq(col(queryId)),
       Seq(col("cosine").desc, col(corpusId).asc), k)
     val w = Window.partitionBy(col(queryId))
@@ -272,7 +265,7 @@ object Similarity {
     val probes = probeCells(queries, queryVec, centroids, nprobe)
     val scored = celled.join(broadcast(probes), Seq("cell"))
       .select(col(queryId), col(corpusId),
-        cosineCol(corpus)(col(corpusVec), col(queryVec)).as("cosine"))
+        cosine_sim(col(corpusVec), col(queryVec)).as("cosine"))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(corpusId).asc)
     if (viaWindow)
@@ -515,7 +508,7 @@ object Similarity {
         .join(corpus.select(col(corpusId), col(corpusVec)), corpusId)
         .join(broadcast(queries), queryId)
         .select(col(queryId), col(corpusId),
-          cosineCol(corpus)(col(corpusVec), col(queryVec)).as("score"))
+          cosine_sim(col(corpusVec), col(queryVec)).as("score"))
       val w2 = Window.partitionBy(col(queryId))
         .orderBy(col("score").desc, col(corpusId).asc)
       exact.withColumn("rank", row_number().over(w2))
@@ -539,7 +532,7 @@ object Similarity {
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col(labelCol) =!= col("query_label"))
       .select(col("query_id"), col(corpusId),
-        cosineCol(corpus)(col(corpusVec), col("query_vec")).as("cosine"))
+        cosine_sim(col(corpusVec), col("query_vec")).as("cosine"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col(corpusId).asc)
     scored.withColumn("rank", row_number().over(w))

@@ -12,9 +12,11 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
   * Tier (b) of the extension ladder (compose built-ins → custom Expression →
   * custom plan/strategy): scalar kernels that sit in 100 TB hot paths get a
   * codegen'd Expression so they stay inside whole-stage codegen with no UDF
-  * serialization boundary. Registered for SQL via `SparkSessionExtensions`
-  * (config `spark.sql.extensions=graft.plans.GraftExtensions`) or post-hoc
-  * with `GraftFunctions.register(spark)`.
+  * serialization boundary. The `GraftFunctions` Column forms build their
+  * expressions directly; SQL text needs the names registered, via
+  * `SparkSessionExtensions` (config
+  * `spark.sql.extensions=graft.plans.GraftExtensions`) or post-hoc with
+  * `GraftFunctions.register(spark)`.
   */
 object CosineSimilarity {
   /** Static entry point shared by interpreted eval and generated code. */
@@ -476,81 +478,148 @@ case class MinhashMd5(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The hashed-set kernels behind [[JaccardLong]], [[ContainmentLong]] and
+  * [[SignatureSim]]: each Catalyst array is unboxed once into a primitive
+  * `long[]` and handed to the one `HashKernels` implementation, with no
+  * per-element conversion. */
+object LongArrayKernels {
+  import graft.functions.HashKernels
+  private def longs(a: ArrayData): Seq[Long] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(a.toLongArray())
+  def jaccard(a: ArrayData, b: ArrayData): Double =
+    HashKernels.jaccardLong(longs(a), longs(b))
+  def containment(a: ArrayData, b: ArrayData): Double =
+    HashKernels.containmentLong(longs(a), longs(b))
+  def sigSim(a: ArrayData, b: ArrayData): Double =
+    HashKernels.signatureSimilarity(longs(a), longs(b))
+}
+
+/** (array<bigint>, array<bigint>) → double, codegen'd: the verify step of
+  * every dedup and linkage pair join. A null array yields null. */
+sealed trait LongArrayPairKernel extends BinaryExpression {
+  /** The [[LongArrayKernels]] method this expression evaluates. */
+  protected def kernel: String
+  protected def compute(a: ArrayData, b: ArrayData): Double
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects two array<bigint> arguments, got " +
+            s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+    }
+  override def dataType: DataType = DoubleType
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.LongArrayKernels.$kernel($a, $b)")
+}
+
+/** jaccard_long: exact Jaccard of two hashed shingle sets
+  * (`HashKernels.jaccardLong`). */
+case class JaccardLong(left: Expression, right: Expression)
+    extends LongArrayPairKernel {
+  override def prettyName: String = "jaccard_long"
+  override protected def kernel: String = "jaccard"
+  override protected def compute(a: ArrayData, b: ArrayData): Double =
+    LongArrayKernels.jaccard(a, b)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): JaccardLong =
+    copy(left = newLeft, right = newRight)
+}
+
+/** containment_long: |a ∩ b| / |a| of two hashed shingle sets
+  * (`HashKernels.containmentLong`). */
+case class ContainmentLong(left: Expression, right: Expression)
+    extends LongArrayPairKernel {
+  override def prettyName: String = "containment_long"
+  override protected def kernel: String = "containment"
+  override protected def compute(a: ArrayData, b: ArrayData): Double =
+    LongArrayKernels.containment(a, b)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ContainmentLong =
+    copy(left = newLeft, right = newRight)
+}
+
+/** sig_sim: share of equal positions over the shorter of two MinHash
+  * signatures (`HashKernels.signatureSimilarity`). */
+case class SignatureSim(left: Expression, right: Expression)
+    extends LongArrayPairKernel {
+  override def prettyName: String = "sig_sim"
+  override protected def kernel: String = "sigSim"
+  override protected def compute(a: ArrayData, b: ArrayData): Double =
+    LongArrayKernels.sigSim(a, b)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SignatureSim =
+    copy(left = newLeft, right = newRight)
+}
+
 object GraftFunctions {
-  /** Column-API forms (require `register(spark)` first — the public
-    * `call_function` route is the supported Column↔Expression bridge). */
+  import org.apache.spark.sql.graftbridge.Bridge
+  private def e(c: Column): Expression = Bridge.exprOf(c)
+
+  /** Column-API forms: each builds its expression directly, so none needs
+    * `register(spark)` first. */
   def cosine_sim(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
+    Bridge.column(CosineSimilarity(e(a), e(b)))
   def hamming64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("hamming64", a, b)
-  def nfc_normalize(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("nfc_normalize", s)
-  def strip_accents(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("strip_accents", s)
+    Bridge.column(Hamming64(e(a), e(b)))
+  def nfc_normalize(s: Column): Column = Bridge.column(NfcNormalize(e(s)))
+  def strip_accents(s: Column): Column = Bridge.column(StripAccents(e(s)))
   def jaro_winkler(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
+    Bridge.column(JaroWinklerSim(e(a), e(b)))
   def geohash(lat: Column, lon: Column, precision: Column): Column =
-    org.apache.spark.sql.functions.call_function("geohash", lat, lon,
-      precision)
-  def char_entropy(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("char_entropy", s)
-  def fix_mojibake(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("fix_mojibake", s)
+    Bridge.column(GeohashExpr(e(lat), e(lon), e(precision)))
+  def char_entropy(s: Column): Column = Bridge.column(CharEntropyExpr(e(s)))
+  def fix_mojibake(s: Column): Column = Bridge.column(FixMojibakeExpr(e(s)))
   def minhash_md5(shingles: Column, k: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_md5", shingles, k)
+    Bridge.column(MinhashMd5(e(shingles), e(k)))
   def word_shingles(text: Column, n: Column): Column =
-    org.apache.spark.sql.functions.call_function("word_shingles", text, n)
+    Bridge.column(WordShinglesGen(e(text), e(n)))
+  def jaccard_long(a: Column, b: Column): Column =
+    Bridge.column(JaccardLong(e(a), e(b)))
+  def containment_long(a: Column, b: Column): Column =
+    Bridge.column(ContainmentLong(e(a), e(b)))
+  def sig_sim(a: Column, b: Column): Column =
+    Bridge.column(SignatureSim(e(a), e(b)))
 
-  private val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
-    "hamming64" -> (es => Hamming64(es(0), es(1))),
-    "nfc_normalize" -> (es => NfcNormalize(es(0))),
-    "strip_accents" -> (es => StripAccents(es(0))),
-    "jaro_winkler" -> (es => JaroWinklerSim(es(0), es(1))),
-    "geohash" -> (es => GeohashExpr(es(0), es(1), es(2))),
-    "char_entropy" -> (es => CharEntropyExpr(es(0))),
-    "fix_mojibake" -> (es => FixMojibakeExpr(es(0))),
-    "minhash_md5" -> (es => MinhashMd5(es(0), es(1))),
-    "word_shingles" -> (es => WordShinglesGen(es(0), es(1))))
+  private def fn[E <: Expression: scala.reflect.ClassTag](name: String)(
+      build: Seq[Expression] => E): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(scala.reflect.classTag[E].runtimeClass.getName, name),
+      build)
 
-  /** Post-hoc registration on a live session (SQL surface). */
+  /** Every function under its SQL name: the one table [[register]] and
+    * [[GraftExtensions]] both inject. */
+  val registrations: Seq[SparkSessionExtensions#FunctionDescription] =
+    Seq(
+      fn("cosine_sim")(es => CosineSimilarity(es(0), es(1))),
+      fn("hamming64")(es => Hamming64(es(0), es(1))),
+      fn("nfc_normalize")(es => NfcNormalize(es(0))),
+      fn("strip_accents")(es => StripAccents(es(0))),
+      fn("jaro_winkler")(es => JaroWinklerSim(es(0), es(1))),
+      fn("geohash")(es => GeohashExpr(es(0), es(1), es(2))),
+      fn("char_entropy")(es => CharEntropyExpr(es(0))),
+      fn("fix_mojibake")(es => FixMojibakeExpr(es(0))),
+      fn("minhash_md5")(es => MinhashMd5(es(0), es(1))),
+      fn("word_shingles")(es => WordShinglesGen(es(0), es(1))),
+      fn("jaccard_long")(es => JaccardLong(es(0), es(1))),
+      fn("containment_long")(es => ContainmentLong(es(0), es(1))),
+      fn("sig_sim")(es => SignatureSim(es(0), es(1))))
+
+  /** Post-hoc registration on a live session, for SQL text. */
   def register(spark: SparkSession): Unit =
-    registrations.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+    registrations.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
 }
 
 /** `spark.sql.extensions`-loadable injector. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      es => CosineSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("hamming64"),
-      new ExpressionInfo(classOf[Hamming64].getName, "hamming64"),
-      es => Hamming64(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      es => NfcNormalize(es(0))))
-    e.injectFunction((FunctionIdentifier("strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "strip_accents"),
-      es => StripAccents(es(0))))
-    e.injectFunction((FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
-      es => JaroWinklerSim(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("geohash"),
-      new ExpressionInfo(classOf[GeohashExpr].getName, "geohash"),
-      es => GeohashExpr(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("fix_mojibake"),
-      new ExpressionInfo(classOf[FixMojibakeExpr].getName, "fix_mojibake"),
-      es => FixMojibakeExpr(es(0))))
-    e.injectFunction((FunctionIdentifier("minhash_md5"),
-      new ExpressionInfo(classOf[MinhashMd5].getName, "minhash_md5"),
-      es => MinhashMd5(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShinglesGen].getName, "word_shingles"),
-      es => WordShinglesGen(es(0), es(1))))
+    GraftFunctions.registrations.foreach(e.injectFunction)
     e.injectOptimizerRule(ApproxDistinctRule)
   }
 }

@@ -405,17 +405,4 @@ object DimensionStages {
       when(predicate, array_union(col("assertions"), array(qa)))
         .otherwise(col("assertions")))
   }
-
-  /** A7: group a record's assertions into failed / unchecked buckets
-    * against the full assertion-code dimension (reference
-    * `Store.scala:301-317`). Returns one row per (rowKey, bucket, codes). */
-  def assertionBuckets(df: DataFrame): DataFrame = {
-    val allCodes = AssertionCodes.all.map(_.code)
-    val present = df.select(col("rowKey"),
-      col("assertions.code").as("present"))
-    present.select(col("rowKey"),
-      col("present").as("failed"),
-      array_except(
-        array(allCodes.map(lit): _*), col("present")).as("unchecked"))
-  }
 }

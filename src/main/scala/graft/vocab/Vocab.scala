@@ -64,8 +64,6 @@ trait Vocab extends Serializable {
     Seq(exactMap.get(n), exactMap.get(s), stemmedMap.get(s))
       .flatten.sortBy(_._1).headOption.map(_._2)
   }
-
-  def canonicals: Seq[String] = terms.map(_._1)
 }
 
 object Vocab {

@@ -26,4 +26,10 @@ object Bridge {
     * not serializable and must never reach a task closure. */
   def exprOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Public `Column` over a Catalyst expression: the inverse of [[exprOf]],
+    * so a native expression needs no function-registry entry to be used
+    * from the Column API. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
 }

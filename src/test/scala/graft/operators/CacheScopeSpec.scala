@@ -150,40 +150,47 @@ class CacheScopeSpec extends AnyFunSuite {
     awaitRelease("jaroWinklerPairs", before2)
   }
 
-  // round-12: the remaining footgun of the self-releasing form — a
-  // SECOND materialization recomputes the released internals cold —
-  // is loud now: exactly one WARN through the (spec-swappable) sink,
-  // then the listener detaches so a third run stays silent.
-  test("recompute after self-release warns exactly once") {
-    val warns = new java.util.concurrent.atomic.AtomicInteger(0)
-    val oldSink = CacheScope.recomputeWarnSink
-    CacheScope.recomputeWarnSink = _ => warns.incrementAndGet()
-    try {
-      import spark.implicits._
-      val cached = (1 to 100).toDF("x")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val result = CacheScope.releaseOnFirstMaterialization(
-        cached.filter(col("x") % 2 === 0), Seq(cached))
-      // listener bus is async: after each action, poll for the state
-      // transition it must cause before driving the next one
-      def await(label: String)(done: => Boolean): Unit = {
-        val deadline = System.currentTimeMillis() + 15000
-        while (!done && System.currentTimeMillis() < deadline)
-          Thread.sleep(20)
-        assert(done, s"timed out waiting for $label")
-      }
-      result.count() // 1st: releases the cache, no warn
-      await("release")(
-        cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      assert(warns.get() == 0, "first materialization must not warn")
-      result.count() // 2nd: recompute — exactly one warn
-      await("recompute warn")(warns.get() >= 1)
-      assert(warns.get() == 1,
-        s"second materialization must warn once, saw ${warns.get()}")
-      result.count() // 3rd: listener detached — still exactly one
-      Thread.sleep(500) // nothing to poll for: absence of a 2nd warn
-      assert(warns.get() == 1,
-        s"warn must be one-shot, saw ${warns.get()}")
-    } finally CacheScope.recomputeWarnSink = oldSink
+  // the self-releasing listener must not outlive its release: a
+  // long-lived JVM (duplicatesStream calls findDuplicatesIncremental once
+  // per micro-batch) would otherwise gain listeners with every call
+  test("self-releasing results leave no query listener behind") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.TestHooks
+    def mk(rows: Seq[(String, String, String, String)]) =
+      rows.map { case (rk, taxon, lat, lon) =>
+        (rk, taxon, "2000", "01", "02", lat, lon,
+          null: String, null: String, null: String, "dr1")
+      }.toDF("rowKey", "taxonGuid", "year", "month", "day", "lat", "lon",
+        "collector", "recordNumber", "catalogueNumber", "druid")
+    val recs = mk((1 to 6).flatMap { t =>
+      Seq((s"r$t-1", s"t$t", s"-35.$t", s"149.$t"),
+        (s"r$t-2", s"t$t", s"-35.$t", s"149.$t"),
+        (s"r$t-3", s"t$t", s"-30.$t", s"140.$t"))
+    })
+    val sc = spark.sparkContext
+    // listener bus is async: poll for the state each release must reach
+    def await(label: String)(done: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 15000
+      while (!done && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(done, s"timed out waiting for $label")
+    }
+    spark.catalog.clearCache()
+    val listenersBefore = TestHooks.queryListenerCount(spark)
+    val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+    val prev = spark.createDataset(
+      DuplicationDetection.findDuplicates(spark, recs).collect().toSeq)
+    await("findDuplicates listener unregistered")(
+      TestHooks.queryListenerCount(spark) == listenersBefore)
+    (1 to 3).foreach { i =>
+      val changed = Seq(s"r$i-3").toDF("rowKey")
+      val inc = DuplicationDetection.findDuplicatesIncremental(
+        spark, recs, changed, prev)
+      assert(inc.collect().nonEmpty)
+    }
+    await("listeners unregistered")(
+      TestHooks.queryListenerCount(spark) == listenersBefore)
+    await("caches released")(
+      (sc.getPersistentRDDs.keySet.toSet -- rddsBefore).isEmpty)
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkTestSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -185,5 +186,124 @@ class GraftExtensionsSpec extends AnyFunSuite {
         GraftFunctions.fix_mojibake(
           decode(encode(col("text"), "UTF-8"), "ISO-8859-1")).as("fixed"))
     assert(df.collect().forall(r => r.getString(0) == r.getString(1)))
+  }
+
+  // the hashed-set kernels behind every dedup/linkage verify join: each
+  // must equal its one HashKernels implementation on the edge cases, both
+  // generated (inside whole-stage codegen) and interpreted
+  private val setKernels: Seq[(String, (Column, Column) => Column,
+      (Seq[Long], Seq[Long]) => Double)] = Seq(
+    ("jaccard_long", GraftFunctions.jaccard_long,
+      graft.functions.HashKernels.jaccardLong),
+    ("containment_long", GraftFunctions.containment_long,
+      graft.functions.HashKernels.containmentLong),
+    ("sig_sim", GraftFunctions.sig_sim,
+      graft.functions.HashKernels.signatureSimilarity))
+
+  private val setCases: Seq[(Option[Seq[Long]], Option[Seq[Long]])] = Seq(
+    (Some(Nil), Some(Nil)), // both empty
+    (Some(Seq(1L, 2L)), Some(Nil)), (Some(Nil), Some(Seq(1L, 2L))), // one
+    (Some(Seq(1L, 1L, 2L, 3L)), Some(Seq(2L, 2L, 3L, 4L))), // repeats
+    (Some(Seq(5L, 6L, 7L, 8L)), Some(Seq(5L, 9L))), // unequal lengths
+    (Some(Seq(3L, -1L, Long.MaxValue)), Some(Seq(Long.MaxValue, 3L, 0L))),
+    (None, Some(Seq(1L))), (Some(Seq(1L)), None)) // null array → null
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def checkSetKernels(expectCodegen: Boolean): Unit = {
+    // an RDD source, not a local relation: the projection must run in a
+    // task, not be folded on the driver
+    val df = spark.sparkContext.parallelize(
+        setCases.zipWithIndex.map { case ((a, b), i) => (i, a, b) }, 2)
+      .toDF("i", "a", "b")
+    setKernels.foreach { case (name, colForm, kernel) =>
+      val out = df.select(col("i"), colForm(col("a"), col("b")).as("v"))
+      // '*(' prefix on the Project = it sits inside a WholeStageCodegen span
+      if (expectCodegen)
+        assert(out.queryExecution.executedPlan.toString.split("\n")
+          .exists(l => l.contains("*(1) Project") && l.contains(s"$name(")),
+          name)
+      val got = out.collect().map(r =>
+        r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+        .toMap
+      setCases.zipWithIndex.foreach { case ((a, b), i) =>
+        val want = for (x <- a; y <- b) yield kernel(x, y)
+        val ok = (got(i), want) match {
+          case (Some(g), Some(w)) => java.lang.Double.compare(g, w) == 0
+          case (g, w) => g == w
+        }
+        assert(ok, s"$name($a, $b): got ${got(i)} want $want")
+      }
+    }
+  }
+
+  test("hashed-set kernels match HashKernels inside whole-stage codegen") {
+    checkSetKernels(expectCodegen = true)
+  }
+
+  test("hashed-set kernels match HashKernels interpreted") {
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      checkSetKernels(expectCodegen = false)
+    }
+  }
+
+  test("hashed-set kernels reject non-bigint arrays") {
+    GraftFunctions.register(spark)
+    Seq((Array(1, 2), Array(1, 2))).toDF("a", "b")
+      .createOrReplaceTempView("int_arrays")
+    Seq("jaccard_long", "containment_long", "sig_sim").foreach { f =>
+      intercept[Exception] {
+        spark.sql(s"SELECT $f(a, b) FROM int_arrays").collect()
+      }
+    }
+  }
+
+  test("Column forms resolve on a fresh session with nothing registered") {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("cosine_sim"))
+    val vecs = fresh.createDataFrame(
+      Seq((1L, Array(1.0f, 0.0f)), (2L, Array(2.0f, 4.0f)))).toDF("id", "v")
+    val cos = vecs.select(
+      round(GraftFunctions.cosine_sim($"v", $"v"), 6).as("c"))
+      .as[Double].collect()
+    assert(cos.toSeq == Seq(1.0, 1.0))
+    // qualified columns of both join sides
+    val joined = vecs.as("l").join(vecs.as("r"), $"l.id" < $"r.id")
+      .select(round(GraftFunctions.cosine_sim($"l.v", $"r.v"), 6))
+      .as[Double].collect()
+    assert(joined.toSeq == Seq(round6(2.0 / math.sqrt(20.0))))
+    val h = fresh.createDataFrame(Seq(Tuple1("abcd"))).toDF("s")
+      .select(GraftFunctions.char_entropy($"s")).as[Double].head()
+    assert(h == 2.0)
+    val sh = fresh.createDataFrame(Seq(Tuple1("The quick brown fox")))
+      .toDF("t").select(GraftFunctions.word_shingles($"t", lit(2)))
+      .as[String].collect().toSeq
+    assert(sh == Seq("the quick", "quick brown", "brown fox"))
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("GraftExtensions injects every registered function") {
+    val registry = org.apache.spark.sql.graftbridge.TestHooks
+      .registryWith(new GraftExtensions)
+    val names = GraftFunctions.registrations.map(_._1.funcName)
+    assert(names.contains("char_entropy"))
+    assert(Set("jaccard_long", "containment_long", "sig_sim")
+      .subsetOf(names.toSet))
+    GraftFunctions.registrations.foreach { case (id, info, _) =>
+      assert(registry.functionExists(id), s"${id.funcName} not injected")
+      assert(registry.lookupFunction(id).map(_.getClassName)
+        .contains(info.getClassName), id.funcName)
+    }
   }
 }

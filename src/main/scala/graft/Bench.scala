@@ -129,6 +129,18 @@ object Bench {
     } catch { case _: Throwable => None }
   }
 
+  /** Local cores of every session the bench builds, and the record's
+    * `cpus`: `SPARK_GRAFT_CPUS`, 16 when unset. */
+  private lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A value that is not a positive integer fails the run: written into
+    * the record as it is, it would make the record invalid JSON and turn
+    * the next run's vs-committed test off without a word. */
+  private[graft] def parseCpus(value: Option[String]): Int =
+    value.fold(16)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
+
   /** The canary query: cheap, scan+agg-shaped, first in the sweep. Its
     * med ratio vs the committed record estimates uniform machine slowness
     * (the r12 sandbox ran it 0.69–1.0 s vs the committed 0.26 s — 2.7–4×
@@ -142,7 +154,7 @@ object Bench {
     * expected to be off and flagging on it only burns retry wall. */
   private def vsCommittedEnabled(initial: Seq[QResult]): Boolean =
     vsCommittedAllowed(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
+      cpus,
       committedCpus,
       committedMeds.get(CanaryQuery),
       initial.find(_.name == CanaryQuery).filter(_.err.isEmpty).map(_.med))
@@ -195,13 +207,13 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
+    cpus // a malformed SPARK_GRAFT_CPUS fails here, before any work
     // probe child: run the serving-latency probe alone, report through
     // the TSV side-channel file, and exit — keeps the parent's
     // fresh-JVM isolation contract (the parent never builds a session)
     if (sys.env.contains("SPARK_GRAFT_PROBE")) {
       val sfDir =
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
       val spark = SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
@@ -248,11 +260,10 @@ object Bench {
 
   private def runInProcess(only: Set[String]): Seq[QResult] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // shuffles sized to the DATA ([[Tuning]]): derived from sfDir bytes,
     // env override wins — partition count per core is only right at the
     // record SF
-    val shufflePartitions = Tuning.shufflePartitions(sfDir, cpus.toInt)
+    val shufflePartitions = Tuning.shufflePartitions(sfDir, cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -538,7 +549,6 @@ object Bench {
     // without waiting for real co-tenant load
     if (sys.env.contains("SPARK_GRAFT_FORCE_CONTENDED"))
       return r.err.isEmpty && r.attempts.isEmpty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toDouble
     val vsCommitted = useCommitted && committedMeds.get(r.name).exists(b =>
       b >= 0.2 && r.med > 2.5 * b && r.med - b > 0.5)
     r.err.isEmpty && (
@@ -631,13 +641,12 @@ object Bench {
     // same core count on a comparably fast machine (round-13, VERDICT r12
     // item 1 — the r12 32-core sweep died retrying rows against a record
     // from a 3× faster machine).
-    val cpusNow = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val canaryMed = results.find(_.name == CanaryQuery)
       .filter(_.err.isEmpty).map(r => f3(r.med)).getOrElse("null")
     val tail = s""""nq":${results.size},"errors":$nerr,"fresh_jvm":$freshJvm,""" +
       s""""contended":$nContended,"load1":${f3(load1())},""" +
       s""""baseline_rows":${committedMeds.size},""" +
-      s""""cpus":$cpusNow,"canary_med":$canaryMed,""" +
+      s""""cpus":$cpus,"canary_med":$canaryMed,""" +
       s""""subset_r06_total":${f3(subsetTotal)},"wall":${f3(wall)},"sf":"$sfDir""""
     // Full per-query detail goes to a file: the driver's log capture keeps
     // only the last ~2000 chars of stdout, and 250+ queries don't fit.

@@ -11,7 +11,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
@@ -31,6 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `Store.writeIndex` (range partitioned and sorted by `id`) that is one
   * row group. The matching rows come back as a local relation, so
   * collecting the result starts no job.
+  *
+  * The result belongs to a session derived from the index's, made once
+  * with the reader and cached with it, whose projections are interpreted.
+  * Evaluating a one-row result of ~190 columns interpreted costs far less
+  * than generating the source of its row-to-unsafe projection and `Row`
+  * deserializer, which `collect` would otherwise do on every lookup (Spark
+  * caches compiled classes by their source, not the source itself).
   */
 object KeyLookup {
 
@@ -39,8 +46,8 @@ object KeyLookup {
     * group on one thread; the Spark job decodes only the pages its pushed
     * filter keeps, but pays for planning and a job. `KeyLookupScale`
     * measured both on the serving index schema (187 leaf columns, 4 files,
-    * 4 vCPU), p50 per lookup: 91 against 231 ms at 0.8 million cells per
-    * row group, 120 against 276 ms at 6.1 million, 234 against 271 ms at
+    * 4 vCPU), p50 per lookup: 82 against 262 ms at 0.8 million cells per
+    * row group, 92 against 288 ms at 6.1 million, 234 against 252 ms at
     * 24.5 million. The limit keeps the driver read about twice as fast. */
   val MaxCells: Long = 8L << 20
 
@@ -68,13 +75,33 @@ object KeyLookup {
   private val MaxFooters = 4096
 
   private type Reader = PartitionedFile => Iterator[InternalRow]
-  /** Readers by session, schema, relation options and session settings:
-    * a reader keeps the settings it was built with (case sensitivity,
-    * vectorized reading, rebase modes, Hadoop settings made on the
-    * session), so a changed setting builds a new one. */
-  private val readers = new ConcurrentHashMap[
-    (SparkSession, StructType, Map[String, String], Map[String, String]), Reader]()
-  private val MaxReaders = 8
+
+  /** A reader and the session its results belong to. Both keep the
+    * index session's state as it was when they were made: the reader its
+    * settings (case sensitivity, vectorized reading, rebase modes, Hadoop
+    * settings made on the session), the derived session its settings,
+    * functions and temporary views. The cache key covers the settings and
+    * the function names, not the temporary views. */
+  private final case class Bound(reader: Reader, session: SparkSession)
+
+  /** [[Bound]]s by session, schema, relation options, session settings
+    * and registered function names, so a changed setting or a newly
+    * registered function makes a new one. */
+  private val bound = new ConcurrentHashMap[(SparkSession, StructType,
+    Map[String, String], Map[String, String], Set[FunctionIdentifier]), Bound]()
+  private[index] val MaxBound = 8
+
+  /** Derived sessions currently cached. */
+  private[index] def boundSessions: Set[SparkSession] =
+    bound.values.asScala.map(_.session).toSet
+
+  /** Rows of the index read for one key, and the session they go to. */
+  private[index] final case class Hits(session: SparkSession,
+      schema: StructType, rows: Seq[InternalRow]) {
+    /** The rows as a local relation, analysed in the derived session. */
+    def frame: DataFrame =
+      Bridge.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
 
   /** The rows of `index` whose `id` is `key`, with the schema of
     * `index.filter(col("id") === key)`; None when `index` is not a bare
@@ -86,15 +113,22 @@ object KeyLookup {
     direct(index, key, MaxCells)
 
   private[index] def direct(index: DataFrame, key: String,
-      maxCells: Long): Option[DataFrame] = {
+      maxCells: Long): Option[DataFrame] =
+    hits(index, key, maxCells).map(_.frame)
+
+  /** The read half of [[direct]]: the matching rows, not yet a DataFrame. */
+  private[index] def hits(index: DataFrame, key: String,
+      maxCells: Long): Option[Hits] = {
     val spark = index.sparkSession
     bareParquet(index).flatMap { fs =>
       val files = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
       val groups = candidates(spark, fs, files, key.getBytes(UTF_8))
       if (groups.size > spark.sparkContext.defaultParallelism ||
           groups.map(_._2.cells).sum > maxCells) None
-      else Some(Bridge.ofRows(spark, LocalRelation(
-        DataTypeUtils.toAttributes(index.schema), read(spark, fs, groups, key))))
+      else {
+        val b = boundFor(spark, fs)
+        Some(Hits(b.session, index.schema, read(b.reader, fs, groups, key)))
+      }
     }
   }
 
@@ -152,9 +186,8 @@ object KeyLookup {
   }
 
   /** Read the candidate row groups and keep the rows whose `id` is `key`. */
-  private def read(spark: SparkSession, fs: HadoopFsRelation,
+  private def read(reader: Reader, fs: HadoopFsRelation,
       groups: Seq[(FileStatus, Group)], key: String): Seq[InternalRow] = {
-    val reader = readerFor(spark, fs)
     val id = fs.dataSchema.fieldIndex("id")
     val want = UTF8String.fromString(key)
     groups.flatMap { case (f, g) =>
@@ -169,16 +202,20 @@ object KeyLookup {
     }
   }
 
-  /** Spark's Parquet reader for the relation's schema, returning rows. Its
-    * Hadoop configuration is broadcast once, when it is built. */
-  private def readerFor(spark: SparkSession, fs: HadoopFsRelation): Reader = {
-    if (readers.size > MaxReaders) readers.clear()
-    val settings = spark.sessionState.conf.getAllConfs
-    readers.computeIfAbsent((spark, fs.dataSchema, fs.options, settings), _ => {
+  /** Spark's Parquet reader for the relation's schema, returning rows,
+    * and the interpreted-projection session derived from `spark`. The
+    * reader's Hadoop configuration is broadcast once, when it is built. */
+  private def boundFor(spark: SparkSession, fs: HadoopFsRelation): Bound = {
+    if (bound.size >= MaxBound) bound.clear()
+    val state = spark.sessionState
+    val key = (spark, fs.dataSchema, fs.options, state.conf.getAllConfs,
+      state.functionRegistry.listFunction().toSet)
+    bound.computeIfAbsent(key, _ => {
       val options = fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false")
-      fs.fileFormat.buildReaderWithPartitionValues(spark, fs.dataSchema,
+      Bound(fs.fileFormat.buildReaderWithPartitionValues(spark, fs.dataSchema,
         new StructType(), fs.dataSchema, Nil, options,
-        spark.sessionState.newHadoopConfWithOptions(options))
+        state.newHadoopConfWithOptions(options)),
+        Bridge.interpretedSession(spark))
     })
   }
 }

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one sanctioned crossing between the public DataFrame API and
   * catalyst `LogicalPlan`s, for mounting custom logical operators (e.g.
@@ -12,13 +14,29 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * `private[sql]` — the standard extension-library technique (the
   * supported `SparkSessionExtensions` hooks inject rules and strategies,
   * but offer no public constructor from a logical plan to a DataFrame).
-  * Nothing else reaches into Spark internals from here.
+  * The other members reach `private[sql]` internals the same way, each
+  * for one named purpose.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
   def planOf(df: DataFrame): LogicalPlan = df.queryExecution.logical
+
+  /** A session cloned from `spark` (settings, functions, temporary views)
+    * that evaluates projections interpreted: `UnsafeProjection.create` and
+    * `SafeProjection.create` read the factory mode from the active session,
+    * which `Dataset.collect` makes the result's own. Whole-stage codegen is
+    * unaffected. The `QueryExecutionListener`s copied from `spark` are
+    * removed, so a one-shot listener pending on `spark` is not kept alive
+    * by the clone. */
+  def interpretedSession(spark: SparkSession): SparkSession = {
+    val s = spark.asInstanceOf[ClassicSparkSession].cloneSession()
+    s.listenerManager.clear()
+    s.sessionState.conf.setConfString(SQLConf.CODEGEN_FACTORY_MODE.key,
+      CodegenObjectFactoryMode.NO_CODEGEN.toString)
+    s
+  }
 
   /** Catalyst expression behind a public `Column` (Spark 4 hides `.expr`
     * behind the agnostic ColumnNode API). Converted EAGERLY — the lazy

@@ -79,4 +79,13 @@ class BenchBaselineSpec extends AnyFunSuite {
     // noise-dominated tiny canary baseline → disabled
     assert(!Bench.vsCommittedAllowed(32, Some(32), Some(0.01), Some(0.02)))
   }
+
+  test("SPARK_GRAFT_CPUS is one positive integer or the run fails") {
+    assert(Bench.parseCpus(None) == 16)
+    assert(Bench.parseCpus(Some("8")) == 8)
+    assert(Bench.parseCpus(Some(" 32 ")) == 32)
+    // each of these would have reached the record's "cpus" field as is
+    for (bad <- Seq("auto", "", "0", "-4", "2.5", "8 cores"))
+      intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+  }
 }

@@ -6,12 +6,19 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import graft.{SparkTestSession, Store}
+import graft.operators.CacheScope
+import graft.plans.GraftFunctions
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{InterpretedSafeProjection, InterpretedUnsafeProjection, SafeProjection, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestHooks
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DateType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Store.getByKey` answers on the driver from footer-pruned row groups
@@ -307,5 +314,138 @@ class KeyLookupSpec extends AnyFunSuite {
         val ids = spark.read.parquet(f.toString).select("id").as[String].collect()
         assert(ids.toSeq == ids.sorted.toSeq)
       }
+  }
+
+  /** An index written by `Store.writeIndex`, read back. */
+  private def written(name: String): DataFrame = {
+    val dir = tmp(name)
+    Store.writeIndex(index, dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Runs `body` with the session setting `key` set, then unsets it. */
+  private def withSetting[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  test("a direct result's projections are interpreted; the fallback's are generated") {
+    val idx = written("interpreted")
+    val k = keys(4)
+    // the projection factories, under the settings of the result's session
+    def projections(df: DataFrame): Seq[AnyRef] =
+      SQLConf.withExistingConf(df.sparkSession.sessionState.conf) {
+        Seq(UnsafeProjection.create(df.schema), SafeProjection.create(df.schema))
+      }
+    val direct = Store.getByKey(idx, k)
+    val fallback = Store.getByKey(idx.select("*"), k)
+    assert(KeyLookup.direct(idx.select("*"), k).isEmpty)
+    val Seq(unsafe, safe) = projections(direct)
+    assert(unsafe.isInstanceOf[InterpretedUnsafeProjection], unsafe.getClass)
+    assert(safe.isInstanceOf[InterpretedSafeProjection], safe.getClass)
+    for (p <- projections(fallback)) assert(!p.getClass.getName.contains("Interpreted"),
+      s"${p.getClass} on the index session")
+    assert(fallback.sparkSession eq idx.sparkSession)
+    assert(rows(direct) == rows(fallback))
+
+    // collecting compiles nothing: a schema no other test uses (a trailing
+    // decimal(7,3) column) would otherwise need new classes
+    val dir = tmp("interpreted_fresh")
+    Store.writeIndex(index.withColumn("fresh", lit(1.5).cast("decimal(7,3)")), dir)
+    val fresh = spark.read.parquet(dir)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(Store.getByKey(fresh, k).collect().length == 1)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+    assert(Store.getByKey(fresh.select("*"), k).collect().length == 1)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > compiled)
+  }
+
+  test("a direct result joins and unions with DataFrames of the index's session") {
+    val idx = written("join")
+    val (a, b) = (keys(6), keys(7))
+    val got = Store.getByKey(idx, a)
+    assert(got.sparkSession ne idx.sparkSession)
+    assert(rows(got.unionByName(idx.filter(col("id") === b))) ==
+      rows(idx.filter(col("id").isin(a, b))))
+    assert(rows(idx.filter(col("id") === b).union(got)) ==
+      rows(idx.filter(col("id").isin(a, b))))
+    val occ = idx.select(col("id"), col("occurrence_id").as("occ"))
+    val left = got.join(occ, "id").select("id", "occurrence_id", "occ").collect()
+    assert(left.length == 1 && left(0).getString(1) == left(0).getString(2))
+    val right = occ.join(got, "id").select("occ", "occurrence_id").collect()
+    assert(right.length == 1 && right(0).getString(0) == right(0).getString(1))
+    // a temporary view made from the result is the derived session's
+    got.createOrReplaceTempView("keylookup_hit")
+    assert(got.sparkSession.catalog.tableExists("keylookup_hit"))
+    assert(!spark.catalog.tableExists("keylookup_hit"))
+  }
+
+  test("selectExpr on a direct result resolves functions registered on the index's session") {
+    // a session of its own, so the registration shows nowhere else; its
+    // first lookup derives a session before the function exists
+    val own = spark.newSession()
+    val dir = tmp("functions")
+    Store.writeIndex(index, dir)
+    val idx = own.read.parquet(dir)
+    val k = keys(8)
+    assert(Store.getByKey(idx, k).collect().length == 1)
+    GraftFunctions.register(own)
+    val got = Store.getByKey(idx, k).selectExpr("char_entropy(occurrence_id) AS e")
+    val want = idx.filter(col("id") === k).selectExpr("char_entropy(occurrence_id) AS e")
+    assert(rows(got) == rows(want) && rows(got).size == 1)
+  }
+
+  test("a setting changed on the index's session reaches the next direct result") {
+    val idx = written("java8")
+    val k = keys(9)
+    assert(idx.schema("occurrence_date").dataType == DateType)
+    def date(): AnyRef = {
+      val r = Store.getByKey(idx, k).head()
+      r.get(r.fieldIndex("occurrence_date")).asInstanceOf[AnyRef]
+    }
+    val key = "spark.sql.datetime.java8API.enabled"
+    assert(withSetting(key, "false")(date()).isInstanceOf[java.sql.Date])
+    assert(withSetting(key, "true")(date()).isInstanceOf[java.time.LocalDate])
+    assert(withSetting(key, "false")(date()).isInstanceOf[java.sql.Date])
+  }
+
+  test("lookups under many settings accumulate no listener and few sessions") {
+    val idx = written("settings")
+    val start = TestHooks.queryListenerCount(spark)
+    // one session per settings: two lookups under the same settings share it
+    assert(Store.getByKey(idx, keys(10)).sparkSession eq
+      Store.getByKey(idx, keys(11)).sparkSession)
+    val sessions = (0 until KeyLookup.MaxBound * 3).map { i =>
+      withSetting("graft.keylookup.spec.round", i.toString) {
+        val got = Store.getByKey(idx, keys(i))
+        assert(got.collect().length == 1)
+        assert(KeyLookup.boundSessions.size <= KeyLookup.MaxBound)
+        got.sparkSession
+      }
+    }
+    assert(sessions.distinct.size == sessions.size)
+    assert(TestHooks.queryListenerCount(spark) == start)
+  }
+
+  test("a pending CacheScope listener is not copied into the derived session") {
+    val idx = written("pending")
+    val start = TestHooks.queryListenerCount(spark)
+    val cache = spark.range(10).toDF("x").persist()
+    val pending = CacheScope.releaseOnFirstMaterialization(
+      spark.range(3).toDF("y"), Seq(cache))
+    assert(TestHooks.queryListenerCount(spark) == start + 1)
+    // a setting no earlier lookup ran under: the lookup derives a session
+    val got = withSetting("graft.keylookup.spec.pending", System.nanoTime().toString) {
+      Store.getByKey(idx, keys(12))
+    }
+    assert(TestHooks.queryListenerCount(got.sparkSession) == 0)
+    assert(got.collect().length == 1)
+    // the direct collect did not trigger the release; the pending result does
+    assert(TestHooks.queryListenerCount(spark) == start + 1)
+    assert(pending.collect().length == 3)
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (TestHooks.queryListenerCount(spark) != start && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(TestHooks.queryListenerCount(spark) == start)
   }
 }

@@ -77,29 +77,30 @@ object Tuning {
     // .rdd physically plans the whole subtree per call — driver cost
     // grows with plan size, and under AQE would eagerly execute any
     // exchange in it; fanOutSmallScan must stay safe on non-scan-rooted
-    // inputs). A HadoopFsRelation's planned split count is
-    // ceil(Σ min(fileSize, maxSplit) / maxPartitionBytes)-ish; the exact
-    // packing doesn't matter — only "fewer splits than cores", so the
-    // cheap bound Σ ceil(bytes/maxPartitionBytes) per file suffices.
-    // Unplannable/unknown leaves fall back to `cores` (no fan-out).
+    // inputs). The count mirrors Spark's own split planning over the
+    // listed files; unplannable/unknown leaves fall back to `cores` (no
+    // fan-out).
     val parts = try plannedScanSplits(df, cores)
       catch { case scala.util.control.NonFatal(_) => cores }
     if (parts < cores) df.repartition(cores) else df
   }
 
-  /** Upper-bound estimate of the scan parallelism Spark will plan for
-    * `df`, without physically planning the subtree. Only defined for
-    * NARROW plans (project/filter/generate over one file scan) — exactly
-    * the shape every fanOutSmallScan call site feeds it; anything wider
-    * (a join/aggregate/window below) already owns a shuffle whose
-    * partitioning is ≥ cores at every config, so it reports `fallback`
-    * (= no fan-out), matching what the old `.rdd` probe concluded. */
-  private def plannedScanSplits(df: org.apache.spark.sql.DataFrame,
+  /** The partition count Spark plans for `df`'s file scan, without
+    * physically planning the subtree: the split size and the packing of
+    * `FileSourceScanExec` (`FilePartition.maxSplitBytes`, which weighs
+    * `filesOpenCostInBytes` and the bytes per core, then
+    * `FilePartition.getFilePartitions`) over the relation's listed files.
+    * Only defined for NARROW plans (project/filter/generate over one
+    * file scan) — exactly the shape every fanOutSmallScan
+    * call site feeds it; anything wider (a join/aggregate/window below)
+    * already owns a shuffle whose partitioning is ≥ cores at every
+    * config, so it reports `fallback` (= no fan-out), matching what the
+    * old `.rdd` probe concluded. */
+  private[graft] def plannedScanSplits(df: org.apache.spark.sql.DataFrame,
       fallback: Int): Int = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val maxSplit =
-      df.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L)
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     def narrowScan(plan: LogicalPlan): Option[HadoopFsRelation] =
       plan match {
         case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => Some(fs)
@@ -114,11 +115,17 @@ object Tuning {
     // Round13OptSpec) — analysis resolves the file relation without any
     // physical planning
     narrowScan(df.queryExecution.analyzed) match {
-      case Some(fs) if fs.location.inputFiles.nonEmpty =>
-        val bytes = fs.location.sizeInBytes
-        math.min(Int.MaxValue.toLong,
-          math.max(fs.location.inputFiles.length.toLong,
-            (bytes + maxSplit - 1) / maxSplit)).toInt
+      case Some(fs) =>
+        val spark = df.sparkSession
+        val dirs = fs.location.listFiles(Nil, Nil)
+        val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+        val splits = dirs.flatMap(d => d.files.flatMap(f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            fs.fileFormat.isSplitable(spark, fs.options, f.getPath),
+            maxSplit, d.values)))
+        if (splits.isEmpty) fallback
+        else FilePartition.getFilePartitions(spark,
+          splits.sortBy(-_.length), maxSplit).size
       case _ => fallback
     }
   }

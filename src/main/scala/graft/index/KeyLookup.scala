@@ -2,6 +2,7 @@ package graft.index
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -10,8 +11,10 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
@@ -32,12 +35,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * row group. The matching rows come back as a local relation, so
   * collecting the result starts no job.
   *
+  * Decoded row groups are kept ([[RowGroups]]), as the reference's
+  * Cassandra keeps hot rows in its row cache: a lookup into a kept group
+  * decodes no Parquet, it scans the group's `UnsafeRow`s for the key.
+  *
   * The result belongs to a session derived from the index's, made once
   * with the reader and cached with it, whose projections are interpreted.
   * Evaluating a one-row result of ~190 columns interpreted costs far less
   * than generating the source of its row-to-unsafe projection and `Row`
   * deserializer, which `collect` would otherwise do on every lookup (Spark
-  * caches compiled classes by their source, not the source itself).
+  * caches compiled classes by their source, not the source itself). The
+  * result's `Row` encoder is built once with the session, not derived
+  * from the schema for every result.
   */
 object KeyLookup {
 
@@ -46,9 +55,13 @@ object KeyLookup {
     * group on one thread; the Spark job decodes only the pages its pushed
     * filter keeps, but pays for planning and a job. `KeyLookupScale`
     * measured both on the serving index schema (187 leaf columns, 4 files,
-    * 4 vCPU), p50 per lookup: 82 against 262 ms at 0.8 million cells per
-    * row group, 92 against 288 ms at 6.1 million, 234 against 252 ms at
-    * 24.5 million. The limit keeps the driver read about twice as fast. */
+    * 4 vCPU, 3 GB heap), median of 5 rounds' p50 per lookup, a driver miss
+    * (the group decoded, and kept where it fits the row-group cache)
+    * against the job: 115 against 170 ms at 0.8 million cells per row
+    * group, 76 against 207 ms at 6.1 million (too large to keep, read as
+    * without a cache), 194 against 212 ms at 24.5 million. A hit into a
+    * kept group took 16 ms. Up to 6.1 million cells a driver miss is 1.5
+    * to 2.7 times as fast as the job; at 24.5 million they are within 10%. */
   val MaxCells: Long = 8L << 20
 
   /** Rows per row group `Store.writeIndex` writes: up to 256 leaf columns
@@ -58,8 +71,8 @@ object KeyLookup {
   /** A row group that may hold non-null ids: its byte range in the file,
     * its cell count and its footer `id` min/max (None when the footer has
     * no statistics, so it is always a candidate). */
-  private final case class Group(start: Long, length: Long, cells: Long,
-      range: Option[(Array[Byte], Array[Byte])]) {
+  private final case class Group(start: Long, length: Long, rows: Long,
+      cells: Long, range: Option[(Array[Byte], Array[Byte])]) {
     def mayHold(key: Array[Byte]): Boolean = range.forall { case (lo, hi) =>
       // Parquet orders binary statistics as unsigned bytes
       java.util.Arrays.compareUnsigned(lo, key) <= 0 &&
@@ -69,20 +82,23 @@ object KeyLookup {
 
   /** A file as listed: a rewrite changes its length or modification time,
     * so cached statistics are never served for different contents. */
-  private final case class FileKey(path: String, length: Long, modified: Long)
+  private[index] final case class FileKey(path: String, length: Long, modified: Long)
 
   private val footers = new ConcurrentHashMap[FileKey, Seq[Group]]()
   private val MaxFooters = 4096
 
-  private type Reader = PartitionedFile => Iterator[InternalRow]
+  private[index] type Reader = PartitionedFile => Iterator[InternalRow]
 
-  /** A reader and the session its results belong to. Both keep the
-    * index session's state as it was when they were made: the reader its
-    * settings (case sensitivity, vectorized reading, rebase modes, Hadoop
-    * settings made on the session), the derived session its settings,
-    * functions and temporary views. The cache key covers the settings and
-    * the function names, not the temporary views. */
-  private final case class Bound(reader: Reader, session: SparkSession)
+  /** A reader of `schema`, the session its results belong to and the
+    * results' encoder. They keep the index session's state as it was when
+    * they were made: the reader its settings (case sensitivity,
+    * vectorized reading, rebase modes, Hadoop settings made on the
+    * session), the derived session its settings, functions and temporary
+    * views, the encoder its settings. The cache key covers the settings
+    * and the function names, not the temporary views. Compared by
+    * identity. */
+  private[index] final class Bound(val reader: Reader, val session: SparkSession,
+      val schema: StructType, val encoder: ExpressionEncoder[Row])
 
   /** [[Bound]]s by session, schema, relation options, session settings
     * and registered function names, so a changed setting or a newly
@@ -95,13 +111,98 @@ object KeyLookup {
   private[index] def boundSessions: Set[SparkSession] =
     bound.values.asScala.map(_.session).toSet
 
-  /** Rows of the index read for one key, and the session they go to. */
-  private[index] final case class Hits(session: SparkSession,
-      schema: StructType, rows: Seq[InternalRow]) {
+  /** Rows of the index read for one key, and the reader that read them. */
+  private[index] final case class Hits(bound: Bound, rows: Seq[InternalRow]) {
     /** The rows as a local relation, analysed in the derived session. */
-    def frame: DataFrame =
-      Bridge.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+    def frame: DataFrame = Bridge.ofRows(bound.session,
+      LocalRelation(DataTypeUtils.toAttributes(bound.schema), rows), bound.encoder)
   }
+
+  /** A row group as one reader decodes it. */
+  private[index] final case class GroupKey(bound: Bound, file: FileKey, start: Long)
+
+  /** Decoded row groups as `UnsafeRow` copies, the least recently used
+    * dropped first once they hold more than `budget` bytes. A group whose
+    * rows take more than a quarter of the budget is not kept; it is read
+    * as without a cache, decoded with only its matching rows copied. A
+    * group is decoded under a lock of its own, so concurrent lookups of
+    * one group decode it once and lookups of other groups do not wait. */
+  private[index] final class RowGroups(val budget: Long) {
+    /** Most bytes one kept group may take. */
+    val admitted: Long = budget / 4
+
+    /** A group's rows once decoded: None while not decoded, or when the
+      * group outgrew [[admitted]]. */
+    private final class Slot {
+      var decoded = false // guarded by this
+      var rows: Option[Array[UnsafeRow]] = None // guarded by this
+      var bytes = 0L // guarded by slots
+    }
+    // access order: iteration starts at the least recently used
+    private val slots = new java.util.LinkedHashMap[GroupKey, Slot](16, 0.75f, true)
+    private var total = 0L // guarded by slots
+    private val decoding = new AtomicLong()
+
+    /** Bytes of the groups kept. */
+    def bytes: Long = slots.synchronized(total)
+    /** Decodes started, since this cache was made. */
+    def decodes: Long = decoding.get
+    /** The groups kept and their bytes (0 for a group too large to keep,
+      * or one not yet decoded). */
+    def held: Map[GroupKey, Long] =
+      slots.synchronized(slots.asScala.map { case (k, s) => k -> s.bytes }.toMap)
+
+    /** The rows of `key`'s group: kept ones, or decoded now by `decode`,
+      * which is given [[admitted]] and returns None past it. None, without
+      * decoding, when at least `minBytes` bytes would not be admitted. */
+    def apply(key: GroupKey, minBytes: Long)(
+        decode: Long => Option[(Array[UnsafeRow], Long)]): Option[Array[UnsafeRow]] =
+      if (minBytes > admitted) None
+      else {
+        val slot = slots.synchronized(slots.computeIfAbsent(key, _ => new Slot))
+        slot.synchronized {
+          if (!slot.decoded) {
+            decoding.incrementAndGet()
+            val got = decode(admitted)
+            slot.rows = got.map(_._1)
+            slot.decoded = true
+            got.foreach { case (_, bytes) => hold(key, slot, bytes) }
+          }
+          slot.rows
+        }
+      }
+
+    /** Counts a decoded slot, unless it was dropped while it decoded, and
+      * drops the least recently used groups while more than [[budget]]
+      * bytes are held. */
+    private def hold(key: GroupKey, slot: Slot, bytes: Long): Unit = slots.synchronized {
+      if (slots.get(key) eq slot) {
+        slot.bytes = bytes
+        total += bytes
+        val it = slots.values.iterator
+        while (total > budget && it.hasNext) {
+          val s = it.next()
+          if (s.bytes > 0) { total -= s.bytes; it.remove() }
+        }
+      }
+    }
+
+    /** Drops the groups whose key fails `keep`. */
+    def retain(keep: GroupKey => Boolean): Unit = slots.synchronized {
+      val it = slots.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (!keep(e.getKey)) { total -= e.getValue.bytes; it.remove() }
+      }
+    }
+  }
+
+  /** Heap bytes of an `UnsafeRow` copy beyond its data: the row object
+    * and its byte array's header. */
+  private val RowOverhead = 64
+
+  /** The row groups of every lookup: a sixteenth of the heap. */
+  private[index] val Groups = new RowGroups(Runtime.getRuntime.maxMemory / 16)
 
   /** The rows of `index` whose `id` is `key`, with the schema of
     * `index.filter(col("id") === key)`; None when `index` is not a bare
@@ -116,18 +217,19 @@ object KeyLookup {
       maxCells: Long): Option[DataFrame] =
     hits(index, key, maxCells).map(_.frame)
 
-  /** The read half of [[direct]]: the matching rows, not yet a DataFrame. */
-  private[index] def hits(index: DataFrame, key: String,
-      maxCells: Long): Option[Hits] = {
+  /** The read half of [[direct]]: the matching rows, not yet a DataFrame,
+    * from the row groups kept in `groups` or decoded into it. */
+  private[index] def hits(index: DataFrame, key: String, maxCells: Long,
+      groups: RowGroups = Groups): Option[Hits] = {
     val spark = index.sparkSession
     bareParquet(index).flatMap { fs =>
       val files = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
-      val groups = candidates(spark, fs, files, key.getBytes(UTF_8))
-      if (groups.size > spark.sparkContext.defaultParallelism ||
-          groups.map(_._2.cells).sum > maxCells) None
+      val found = candidates(spark, fs, files, key.getBytes(UTF_8), groups)
+      if (found.size > spark.sparkContext.defaultParallelism ||
+          found.map(_._3.cells).sum > maxCells) None
       else {
-        val b = boundFor(spark, fs)
-        Some(Hits(b.session, index.schema, read(b.reader, fs, groups, key)))
+        val b = boundFor(spark, fs, groups)
+        Some(Hits(b, read(b, found, key, groups)))
       }
     }
   }
@@ -148,10 +250,12 @@ object KeyLookup {
   }
 
   /** Row groups of the listed `files` whose `id` range can hold `key`.
-    * A listing that brings uncached files also drops the cached footers of
-    * files no longer listed in their directory. */
+    * A listing that brings uncached files also drops the cached footers,
+    * and the decoded row groups in `groups`, of files no longer listed in
+    * their directory. */
   private def candidates(spark: SparkSession, fs: HadoopFsRelation,
-      files: Seq[FileStatus], key: Array[Byte]): Seq[(FileStatus, Group)] = {
+      files: Seq[FileStatus], key: Array[Byte],
+      groups: RowGroups): Seq[(FileStatus, FileKey, Group)] = {
     val keyed = files.map(f =>
       f -> FileKey(f.getPath.toString, f.getLen, f.getModificationTime))
     if (!keyed.forall(kf => footers.containsKey(kf._2))) {
@@ -160,11 +264,12 @@ object KeyLookup {
       val dirs = files.map(_.getPath.getParent).toSet
       if (footers.size > MaxFooters) footers.clear()
       footers.keySet.removeIf(k => !listed(k) && dirs(new Path(k.path).getParent))
+      groups.retain(k => footers.containsKey(k.file))
     }
     lazy val conf = spark.sessionState.newHadoopConfWithOptions(fs.options)
     keyed.flatMap { case (f, k) =>
       footers.computeIfAbsent(k, _ => groupsOf(f, conf))
-        .filter(_.mayHold(key)).map(f -> _)
+        .filter(_.mayHold(key)).map((f, k, _))
     }
   }
 
@@ -179,43 +284,83 @@ object KeyLookup {
       val allNull = stats.exists(s => !s.hasNonNullValue && s.isNumNullsSet &&
         s.getNumNulls == b.getRowCount)
       if (allNull) None
-      else Some(Group(b.getStartingPos, b.getCompressedSize,
+      else Some(Group(b.getStartingPos, b.getCompressedSize, b.getRowCount,
         b.getRowCount * b.getColumns.size,
         stats.filter(_.hasNonNullValue).map(s => (s.getMinBytes, s.getMaxBytes))))
     }
   }
 
-  /** Read the candidate row groups and keep the rows whose `id` is `key`. */
-  private def read(reader: Reader, fs: HadoopFsRelation,
-      groups: Seq[(FileStatus, Group)], key: String): Seq[InternalRow] = {
-    val id = fs.dataSchema.fieldIndex("id")
+  /** The rows of the candidate row groups whose `id` is `key`: scanned
+    * from the groups kept in `groups`, decoded into it first if need be,
+    * or read from the file where a group is too large to keep. */
+  private def read(b: Bound, found: Seq[(FileStatus, FileKey, Group)],
+      key: String, groups: RowGroups): Seq[InternalRow] = {
+    val id = b.schema.fieldIndex("id")
     val want = UTF8String.fromString(key)
-    groups.flatMap { case (f, g) =>
-      val rows = reader(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(f.getPath), g.start, g.length, Array.empty,
-        f.getModificationTime, f.getLen, Map.empty))
-      try rows.filter(r => want == r.getUTF8String(id)).map(_.copy()).toList
-      finally rows match {
-        case c: AutoCloseable => c.close()
-        case _ => ()
+    def matching(rows: Iterator[InternalRow]) = rows.filter(r => want == r.getUTF8String(id))
+    // an UnsafeRow of the schema takes at least its null bits and a word a field
+    val minRow = UnsafeRow.calculateBitSetWidthInBytes(b.schema.length) +
+      8L * b.schema.length + RowOverhead
+    found.flatMap { case (f, k, g) =>
+      groups(GroupKey(b, k, g.start), g.rows * minRow)(decode(b, f, g, _)) match {
+        case Some(rows) => matching(rows.iterator).toList
+        case None => scan(b, f, g)(matching(_).map(_.copy()).toList)
       }
     }
   }
 
+  /** Every row of the row group as an `UnsafeRow` copy, and their heap
+    * bytes; None, the read cut short, once those pass `limit`. */
+  private def decode(b: Bound, f: FileStatus, g: Group,
+      limit: Long): Option[(Array[UnsafeRow], Long)] = scan(b, f, g) { rows =>
+    val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      b.schema.fields.toSeq.zipWithIndex.map { case (c, i) =>
+        BoundReference(i, c.dataType, c.nullable) })
+    val out = Array.newBuilder[UnsafeRow]
+    var bytes = 0L
+    while (bytes <= limit && rows.hasNext) {
+      val row = toUnsafe(rows.next()).copy()
+      bytes += row.getSizeInBytes + RowOverhead
+      out += row
+    }
+    if (bytes <= limit) Some((out.result(), bytes)) else None
+  }
+
+  /** `use` applied to the rows of one row group, read by `b`'s reader. */
+  private def scan[T](b: Bound, f: FileStatus, g: Group)(use: Iterator[InternalRow] => T): T = {
+    val rows = b.reader(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(f.getPath), g.start, g.length, Array.empty,
+      f.getModificationTime, f.getLen, Map.empty))
+    try use(rows)
+    finally rows match {
+      case c: AutoCloseable => c.close()
+      case _ => ()
+    }
+  }
+
   /** Spark's Parquet reader for the relation's schema, returning rows,
-    * and the interpreted-projection session derived from `spark`. The
-    * reader's Hadoop configuration is broadcast once, when it is built. */
-  private def boundFor(spark: SparkSession, fs: HadoopFsRelation): Bound = {
-    if (bound.size >= MaxBound) bound.clear()
+    * the interpreted-projection session derived from `spark` and the
+    * result encoder. The reader's Hadoop configuration is broadcast once,
+    * when it is built. A new one past [[MaxBound]] clears the cache, and
+    * with it the row groups its readers decoded. */
+  private def boundFor(spark: SparkSession, fs: HadoopFsRelation,
+      groups: RowGroups): Bound = {
     val state = spark.sessionState
     val key = (spark, fs.dataSchema, fs.options, state.conf.getAllConfs,
       state.functionRegistry.listFunction().toSet)
-    bound.computeIfAbsent(key, _ => {
-      val options = fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false")
-      Bound(fs.fileFormat.buildReaderWithPartitionValues(spark, fs.dataSchema,
-        new StructType(), fs.dataSchema, Nil, options,
-        state.newHadoopConfWithOptions(options)),
-        Bridge.interpretedSession(spark))
-    })
+    Option(bound.get(key)).getOrElse {
+      if (bound.size >= MaxBound) {
+        bound.clear()
+        groups.retain(k => bound.containsValue(k.bound))
+      }
+      bound.computeIfAbsent(key, _ => {
+        val options = fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false")
+        val session = Bridge.interpretedSession(spark)
+        new Bound(fs.fileFormat.buildReaderWithPartitionValues(spark, fs.dataSchema,
+          new StructType(), fs.dataSchema, Nil, options,
+          state.newHadoopConfWithOptions(options)),
+          session, fs.dataSchema, Bridge.rowEncoder(session, fs.dataSchema))
+      })
+    }
   }
 }

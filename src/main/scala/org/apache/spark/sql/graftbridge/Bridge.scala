@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The one sanctioned crossing between the public DataFrame API and
   * catalyst `LogicalPlan`s, for mounting custom logical operators (e.g.
@@ -20,6 +22,22 @@ import org.apache.spark.sql.internal.SQLConf
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** A DataFrame over `plan` whose rows `encoder` (from [[rowEncoder]],
+    * for the plan's schema) deserializes, so no encoder is derived from
+    * the schema for it. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan,
+      encoder: ExpressionEncoder[Row]): DataFrame = {
+    val s = spark.asInstanceOf[ClassicSparkSession]
+    s.withActive(new ClassicDataset[Row](s, plan, encoder))
+  }
+
+  /** The encoder `ofRows` derives for `schema`, built under `spark`'s
+    * settings (`datetime.java8API` picks the external date and time
+    * types). Unresolved, so one can serve any number of DataFrames. */
+  def rowEncoder(spark: SparkSession, schema: StructType): ExpressionEncoder[Row] =
+    spark.asInstanceOf[ClassicSparkSession].withActive(
+      ExpressionEncoder(RowEncoder.encoderFor(schema)))
 
   def planOf(df: DataFrame): LogicalPlan = df.queryExecution.logical
 

@@ -1,7 +1,7 @@
 package graft.index
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +13,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{InterpretedSafeProjection, InterpretedUnsafeProjection, SafeProjection, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TestHooks
@@ -447,5 +447,175 @@ class KeyLookupSpec extends AnyFunSuite {
     while (TestHooks.queryListenerCount(spark) != start && System.nanoTime() < deadline)
       Thread.sleep(10)
     assert(TestHooks.queryListenerCount(spark) == start)
+  }
+
+  /** A row-group cache of its own, with the budget of the shared one. */
+  private def ownGroups(budget: Long = KeyLookup.Groups.budget) = new KeyLookup.RowGroups(budget)
+
+  /** The direct result for `key` read through `groups`. */
+  private def through(groups: KeyLookup.RowGroups, idx: DataFrame, key: String): DataFrame =
+    KeyLookup.hits(idx, key, KeyLookup.MaxCells, groups).get.frame
+
+  /** The rows of `idx` by id, as the Spark filter returns them. */
+  private def byId(idx: DataFrame): Map[String, Seq[Row]] =
+    idx.collect().toSeq.groupBy(_.getAs[String]("id"))
+      .map { case (k, v) => k -> v.sortBy(_.toString) }
+
+  test("a direct result equals the Spark filter on a row-group miss and on a hit") {
+    val idx = written("cache_hit")
+    val groups = ownGroups()
+    def same(key: String): Unit = {
+      val got = through(groups, idx, key)
+      val want = idx.filter(col("id") === key)
+      assert(got.schema == want.schema)
+      assert(rows(got) == rows(want), key)
+    }
+    same(keys(20))
+    assert(groups.decodes == 1 && groups.bytes > 0)
+    // the same key, another key and an absent key in the kept group
+    val kept = groups.held.keySet
+    for (k <- Seq(keys(20), keys(3) + "\u0000")) same(k)
+    same(keys(21))
+    assert(groups.held.keySet.size <= 2)
+    val decoded = groups.decodes
+    for (k <- Seq(keys(20), keys(21), keys(3) + "\u0000")) same(k)
+    assert(groups.decodes == decoded && kept.subsetOf(groups.held.keySet))
+    assert(groups.bytes == groups.held.values.sum)
+  }
+
+  test("an index rewritten in place never serves kept rows") {
+    val src1 = tmp("kept_a"); val src2 = tmp("kept_b"); val src3 = tmp("kept_c")
+    val fixed = tmp("kept_fixed")
+    val k = keys(40)
+    Store.writeIndex(index.coalesce(1), src1)
+    Store.writeIndex(index.withColumn("occurrence_id",
+      concat(col("occurrence_id"), lit("-v2"))).coalesce(1), src2)
+    Store.writeIndex(index.withColumn("occurrence_id",
+      concat(col("occurrence_id"), lit("-v3-longer"))).coalesce(1), src3)
+    def part(d: String) = Files.list(Paths.get(d)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.head
+    val target = Paths.get(fixed, "part-00000.parquet")
+    val groups = ownGroups()
+    def occ(): String = {
+      val got = through(groups, spark.read.parquet(fixed), k).collect()
+      assert(got.length == 1)
+      got(0).getAs[String]("occurrence_id")
+    }
+    def files = groups.held.keySet.map(_.file)
+    Files.copy(part(src1), target, StandardCopyOption.REPLACE_EXISTING)
+    val v1 = occ()
+    assert(occ() == v1 && groups.decodes == 1)
+    val first = files
+    // new contents and a new modification time
+    Files.copy(part(src2), target, StandardCopyOption.REPLACE_EXISTING)
+    val mtime = Files.getLastModifiedTime(target).toMillis + 10000
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime))
+    assert(occ() == v1 + "-v2")
+    assert(groups.decodes == 2 && files.intersect(first).isEmpty)
+    // new contents and length under the same modification time
+    val second = files
+    Files.copy(part(src3), target, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime))
+    assert(Files.size(target) != second.head.length)
+    assert(occ() == v1 + "-v3-longer")
+    assert(groups.decodes == 3 && files.intersect(second).isEmpty)
+    assert(groups.bytes == groups.held.values.sum)
+  }
+
+  test("lookups over more row groups than the budget holds stay within it") {
+    val dir = tmp("budget")
+    smallGroups(index, dir)
+    val idx = spark.read.parquet(dir)
+    val want = byId(idx)
+    // each group's bytes, with a budget that keeps every group
+    val all = ownGroups()
+    val sizes = keys.map { k => through(all, idx, k).collect(); all.bytes }
+    val groupBytes = all.held.values.toSeq
+    assert(groupBytes.size > 10 && sizes.last == groupBytes.sum)
+    // room for about four of the largest groups; each is admitted
+    val small = ownGroups(4 * groupBytes.max)
+    for (k <- keys ++ keys.reverse) {
+      assert(through(small, idx, k).collect().toSeq.sortBy(_.toString) == want(k), k)
+      assert(small.bytes <= small.budget)
+      assert(small.bytes == small.held.values.sum)
+    }
+    assert(small.decodes > groupBytes.size)
+    assert(small.held.size < groupBytes.size)
+  }
+
+  test("clearing the readers releases the bytes of the groups they decoded") {
+    val idx = written("release")
+    val groups = ownGroups()
+    val k = keys(13)
+    val first = KeyLookup.hits(idx, k, KeyLookup.MaxCells, groups).get.bound
+    assert(groups.held.keys.exists(_.bound eq first) && groups.bytes > 0)
+    // enough new settings to clear the readers at least once
+    for (i <- 0 to KeyLookup.MaxBound)
+      withSetting("graft.keylookup.spec.release", i.toString) {
+        assert(through(groups, idx, k).collect().length == 1)
+      }
+    assert(!groups.held.keys.exists(_.bound eq first))
+    assert(groups.held.keySet.map(_.bound.session).subsetOf(KeyLookup.boundSessions))
+    assert(groups.bytes == groups.held.values.sum)
+  }
+
+  test("a row group too large to keep is read from the file and not kept") {
+    val idx = written("too_large")
+    val k = keys(14)
+    val want = rows(idx.filter(col("id") === k))
+    val fits = ownGroups()
+    through(fits, idx, k).collect()
+    val groupBytes = fits.bytes
+    // the decode stops once past the admitted size; nothing is kept and
+    // the group is not decoded again
+    val over = ownGroups(4 * (groupBytes / 2))
+    for (_ <- 1 to 2) assert(rows(through(over, idx, k)) == want)
+    assert(over.decodes == 1 && over.bytes == 0)
+    // a group whose fixed-width part alone is past it is not decoded at all
+    val tiny = ownGroups(4)
+    for (_ <- 1 to 2) assert(rows(through(tiny, idx, k)) == want)
+    assert(tiny.decodes == 0 && tiny.held.isEmpty)
+  }
+
+  test("concurrent lookups into one row group decode it once") {
+    val idx = written("concurrent")
+    val inFile = idx.select(col("id"), col("occurrence_id"), input_file_name().as("f"))
+      .collect().groupBy(_.getString(2)).values.maxBy(_.length)
+      .take(8).map(r => r.getString(0) -> r.getString(1))
+    assert(inFile.length == 8)
+    val groups = ownGroups()
+    val start = new CyclicBarrier(inFile.length)
+    val pool = Executors.newFixedThreadPool(inFile.length)
+    try {
+      val got = inFile.toSeq.map { case (k, _) =>
+        pool.submit(new Callable[Array[Row]] {
+          def call(): Array[Row] = { start.await(); through(groups, idx, k).collect() }
+        })
+      }.map(_.get(120, TimeUnit.SECONDS))
+      for ((r, (k, occ)) <- got.zip(inFile)) {
+        assert(r.length == 1, k)
+        assert(r(0).getAs[String]("id") == k && r(0).getAs[String]("occurrence_id") == occ)
+      }
+    } finally pool.shutdown()
+    assert(groups.decodes == 1 && groups.held.size == 1)
+  }
+
+  test("a setting changed on the index's session reaches a result served from a kept group") {
+    val idx = written("java8_kept")
+    val k = keys(15)
+    def date(): AnyRef = {
+      val r = Store.getByKey(idx, k).head()
+      r.get(r.fieldIndex("occurrence_date")).asInstanceOf[AnyRef]
+    }
+    val key = "spark.sql.datetime.java8API.enabled"
+    for ((value, cls) <- Seq("false" -> classOf[java.sql.Date],
+        "true" -> classOf[java.time.LocalDate], "false" -> classOf[java.sql.Date]))
+      withSetting(key, value) {
+        assert(cls.isInstance(date()))
+        // the second lookup under these settings is served from the kept group
+        val decoded = KeyLookup.Groups.decodes
+        assert(cls.isInstance(date()))
+        assert(KeyLookup.Groups.decodes == decoded)
+      }
   }
 }

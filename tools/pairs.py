@@ -1,0 +1,157 @@
+"""Paired lifecycle-benchmark runs of two checkouts.
+
+Runs ``python3 lifebench/run.py`` in a base and a change checkout for each
+seed, alternating which side runs first (odd seeds base first, even seeds
+change first), and prints per workload, for each end-to-end metric, both
+sides' median and quartiles, the change's median gap and how many pairs
+the change won; then the same for the workload's ``named`` metrics (per
+request kind on ``serve``), which are reported, not judged.
+
+    python3 tools/pairs.py BASE CHANGE --workload serve --seeds 1-10
+    python3 tools/pairs.py BASE CHANGE --workload all --seeds 11,12 \\
+        --log pairs.jsonl
+    python3 tools/pairs.py --report pairs.jsonl
+
+Each run's record (``lifebench/.runs/<tag>/record.json`` of its checkout)
+is appended to ``--log`` as one JSON line as soon as it finishes, so an
+interrupted series can still be reported. Each checkout builds itself on
+its first run.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(os.path.dirname(HERE), "lifebench"))
+sys.dont_write_bytecode = True  # leave no cache file under lifebench/
+
+import metrics  # noqa: E402
+
+SIDES = ("base", "change")
+
+
+def seeds_of(text):
+    """'1-10' or '1,3,5' or a mix: the seeds in order."""
+    out = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        out += list(range(int(lo), int(hi or lo) + 1))
+    return out
+
+
+def run(checkout, workload, seed, seconds):
+    """One benchmark run in `checkout`; its record, or a stub when the run
+    left none."""
+    cmd = [sys.executable, "lifebench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    proc = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                            stderr=subprocess.STDOUT, text=True)
+    out, _ = proc.communicate()
+    tag = f"{workload}-s{seed}-t0-{proc.pid}"
+    path = os.path.join(checkout, "lifebench", ".runs", tag, "record.json")
+    try:
+        with open(path) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        record = {"workloads": {}, "exit": f"no record: {out[-500:]}"}
+    record["returncode"] = proc.returncode
+    return record
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def report(rows):
+    """Prints the summary of `rows`: dicts with side, seed, workload and
+    the workload's entry of a record."""
+    better = {n: b for n, _, b in metrics.END_TO_END}
+    for w in sorted({r["workload"] for r in rows}):
+        mine = [r for r in rows if r["workload"] == w]
+        by = {(r["side"], r["seed"]): r for r in mine}
+        seeds = sorted({s for (_, s) in by if ("base", s) in by and ("change", s) in by})
+        failed = {side: [by[(side, s)]["failed"] for s in seeds] for side in SIDES}
+        steal = [by[(side, s)]["steal"] for side in SIDES for s in seeds
+                 if by[(side, s)]["steal"] is not None]
+        print(f"== {w}: {len(seeds)} pairs (seeds {','.join(map(str, seeds))}); "
+              f"failed-op ratio base {failed['base']} change {failed['change']}; "
+              f"cpu steal max {max(steal, default=0):.1%}")
+        for group in ("end_to_end", "named"):
+            names = [n for n, _, _ in metrics.END_TO_END] if group == "end_to_end" \
+                else sorted({k for r in mine for k in r["entry"].get("named", {})})
+            for name in names:
+                pairs = [(by[("base", s)]["entry"][group].get(name),
+                          by[("change", s)]["entry"][group].get(name)) for s in seeds]
+                pairs = [(b, c) for b, c in pairs if b is not None and c is not None]
+                if not pairs:
+                    continue
+                b = quartiles([p[0] for p in pairs])
+                c = quartiles([p[1] for p in pairs])
+                gap = (c[1] - b[1]) / b[1] if b[1] else 0.0
+                line = (f"  {name:<22} base {b[1]:10.4g} [{b[0]:.4g}-{b[2]:.4g}]  "
+                        f"change {c[1]:10.4g} [{c[0]:.4g}-{c[2]:.4g}]  {gap:+7.1%}")
+                if name in better:
+                    sign = -1 if better[name] == "lower" else 1
+                    wins = sum(1 for x, y in pairs if sign * (y - x) > 0)
+                    shown = abs(c[1] - b[1]) > b[2] - b[0]
+                    line += (f"  change better {wins}/{len(pairs)}; gap "
+                             f"{'exceeds' if shown else 'within'} base IQR")
+                print(line)
+        per_seed = [f"{s}: " + " ".join(
+            f"{by[(side, s)]['entry']['end_to_end']['p50_ms']:.4g}" for side in SIDES)
+            for s in seeds]
+        print("  p50_ms per seed (base change): " + "; ".join(per_seed))
+
+
+def rows_of(record, side, seed):
+    steal = record.get("host", {}).get("cpu_steal_share")
+    return [{"side": side, "seed": seed, "workload": w, "steal": steal,
+             "entry": {k: e.get(k, {}) for k in ("end_to_end", "named", "failures")},
+             "failed": e.get("named", {}).get("failed_ops_ratio")}
+            for w, e in record.get("workloads", {}).items()]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("base", nargs="?")
+    ap.add_argument("change", nargs="?")
+    ap.add_argument("--workload", default="all")
+    ap.add_argument("--seeds", default="1-10")
+    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--log", default="pairs.jsonl")
+    ap.add_argument("--report", help="summarize a log instead of running")
+    a = ap.parse_args()
+    if a.report:
+        with open(a.report) as f:
+            report([json.loads(line) for line in f if line.strip()])
+        return 0
+    if not (a.base and a.change):
+        ap.error("give BASE and CHANGE checkouts, or --report LOG")
+    dirs = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    rows = []
+    for seed in seeds_of(a.seeds):
+        for side in (SIDES if seed % 2 else SIDES[::-1]):
+            record = run(dirs[side], a.workload, seed, a.seconds)
+            got = rows_of(record, side, seed)
+            if record["returncode"] != 0 or not got:
+                print(f"seed {seed} {side}: exit {record.get('exit')} "
+                      f"(return code {record['returncode']})", file=sys.stderr)
+            with open(a.log, "a") as f:
+                for r in got:
+                    f.write(json.dumps(r) + "\n")
+            rows += got
+            print(f"seed {seed} {side}: " + ", ".join(
+                f"{r['workload']} p50_ms {r['entry']['end_to_end']['p50_ms']:.4g}"
+                for r in got), flush=True)
+    report(rows)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

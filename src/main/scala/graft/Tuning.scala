@@ -60,7 +60,7 @@ object Tuning {
     * a table has thousands of row groups, `parts ≥ cores`, and this is a
     * no-op; and at any scale a sub-cores-parallel scan of a kernel-heavy
     * table is exactly the case where one cheap exchange buys back the
-    * idle cores. Disable with SPARK_GRAFT_SCAN_FANOUT=0.
+    * idle cores.
     *
     * Applied INSIDE the kernel-heavy operators (shingling, minhash,
     * winnowing, enrichment), never in the table loader: map-only scoring
@@ -70,7 +70,6 @@ object Tuning {
     * re-reference the scan subtree (q52's 22 scans). */
   def fanOutSmallScan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "1") == "0") return df
     if (df.isStreaming) return df // callers size stream exchanges explicitly
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // Split count from the LEAF scan relations, not df.rdd (ADVICE r12:

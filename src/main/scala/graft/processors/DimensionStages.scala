@@ -3,6 +3,7 @@ package graft.processors
 import graft.model.AssertionCodes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Dimension-backed enrichment stages: per-resource defaults, attribution,
   * sensitive-species generalisation, species groups, validation rules.
@@ -31,12 +32,11 @@ object DimensionStages {
       .agg(map_from_entries(collect_list(struct(col("field"), col("value"))))
         .as("_defaults"))
     val joined = df.join(broadcast(perResource), Seq("dataResourceUid"), "left")
-    fields.foldLeft(joined) { (acc, field) =>
+    joined.withColumns(ListMap(fields.toSeq.map { field =>
       val default = element_at(col("_defaults"), field)
-      if (acc.columns.contains(field))
-        acc.withColumn(field, coalesce(col(field), default))
-      else acc.withColumn(field, default)
-    }.drop("_defaults")
+      field -> (if (joined.columns.contains(field)) coalesce(col(field), default)
+        else default)
+    }: _*)).drop("_defaults")
   }
 
   /** ATTR stage (J2): (institutionCode, collectionCode) → attribution
@@ -47,17 +47,16 @@ object DimensionStages {
       df.columns.contains("collectionCode")
     val base =
       if (hasCodes) df
-      else df.withColumn("institutionCode", lit(null).cast("string"))
-        .withColumn("collectionCode", lit(null).cast("string"))
+      else df.withColumns(ListMap(
+        "institutionCode" -> lit(null).cast("string"),
+        "collectionCode" -> lit(null).cast("string")))
     val dim = attributionDim.select(
       upper(col("institutionCode")).as("_ic"),
       upper(col("collectionCode")).as("_cc"),
       col("institutionName").as("processed_institutionName"),
       col("collectionName").as("processed_collectionName"))
-    base
-      .withColumn("_ic", upper(col("institutionCode")))
-      .withColumn("_cc", upper(col("collectionCode")))
-      .join(broadcast(dim), Seq("_ic", "_cc"), "left")
+    base.join(broadcast(dim), upper(col("institutionCode")) === col("_ic") &&
+        upper(col("collectionCode")) === col("_cc"), "left")
       .withColumn("assertions_attr", array_compact(array(
         AssertionCodes.assertCodeIf(
           col("institutionCode").isNotNull &&
@@ -77,44 +76,40 @@ object DimensionStages {
     * that rank's set is out of the resource's scope — the match is voided
     * and RESOURCE_TAXONOMIC_SCOPE_MISMATCH asserted. `hintsDim`:
     * (dataResourceUid, rank, name) with rank ∈ kingdom/phylum/classs/....
-    * Broadcast-joined per rank; a record with no value at a hinted rank
-    * passes that rank (reference isMatchValid iterates supplied values). */
+    * One broadcast join of a rank → allowed-names map per resource; a
+    * record with no value at a hinted rank passes that rank (reference
+    * isMatchValid iterates supplied values). */
   def checkTaxonomicHints(df: DataFrame, hintsDim: DataFrame): DataFrame = {
-    if (!df.columns.contains("dataResourceUid")) return df.withColumn(
-      "assertions_hints", array().cast("array<int>"))
+    if (!df.columns.contains("dataResourceUid")) return df
     val ranks = Seq("kingdom", "phylum", "classs", "family", "genus")
-    val perRank = hintsDim
+    // one row per resource: rank → allowed names
+    val perResource = hintsDim.filter(col("rank").isNotNull)
       .groupBy(col("dataResourceUid"), lower(col("rank")).as("rank"))
       .agg(collect_set(lower(col("name"))).as("allowed"))
-    val joined = ranks.foldLeft(df) { (acc, r) =>
-      val dim = perRank.filter(col("rank") === r)
-        .select(col("dataResourceUid"), col("allowed").as(s"_hint_$r"))
-      acc.join(broadcast(dim), Seq("dataResourceUid"), "left")
-    }
-    // stage the verdict BEFORE voiding: the Column DSL is lazy, so an
-    // inline expression would re-evaluate over the already-nulled fields
-    val mismatch0 = ranks.map { r =>
+      .groupBy("dataResourceUid")
+      .agg(map_from_entries(collect_list(struct(col("rank"), col("allowed"))))
+        .as("_hints"))
+    val joined = df.join(broadcast(perResource), Seq("dataResourceUid"), "left")
+    // staged once, then read by every voided field and the assertion
+    val staged = joined.withColumn("_scopeMismatch", ranks.map { r =>
+      val allowed = element_at(col("_hints"), r)
       val processedVal =
         if (df.columns.contains(s"processed_$r")) lower(col(s"processed_$r"))
         else lit(null).cast("string")
-      col(s"_hint_$r").isNotNull && processedVal.isNotNull &&
-        !array_contains(col(s"_hint_$r"), processedVal)
-    }.reduce(_ || _)
-    val staged = joined.withColumn("_scopeMismatch", mismatch0)
+      allowed.isNotNull && processedVal.isNotNull &&
+        !array_contains(allowed, processedVal)
+    }.reduce(_ || _))
     val mismatch = col("_scopeMismatch") === true
     val voided = Seq("processed_taxonConceptID", "processed_scientificName",
       "processed_taxonRank", "processed_kingdom", "processed_phylum",
       "processed_classs", "processed_family", "processed_genus",
       "processed_lft", "processed_rgt")
       .filter(df.columns.contains)
-      .foldLeft(staged) { (acc, c) =>
-        acc.withColumn(c, when(mismatch, lit(null)).otherwise(col(c)))
-      }
-    voided
-      .withColumn("assertions_hints", array_compact(array(
-        AssertionCodes.assertCodeIf(mismatch,
-          AssertionCodes.RESOURCE_TAXONOMIC_SCOPE_MISMATCH))))
-      .drop(ranks.map(r => s"_hint_$r") :+ "_scopeMismatch": _*)
+      .map(c => c -> when(mismatch, lit(null)).otherwise(col(c)))
+    staged.withColumns(ListMap(voided :+ ("assertions_hints" -> array_compact(
+        array(AssertionCodes.assertCodeIf(mismatch,
+          AssertionCodes.RESOURCE_TAXONOMIC_SCOPE_MISMATCH)))): _*))
+      .drop("_hints", "_scopeMismatch")
   }
 
   /** SENSITIVE stage (J6/P5): match against the sensitivity rule table,
@@ -207,78 +202,73 @@ object DimensionStages {
     val stash = map_filter(
       map(stashEntries.flatMap { case (k, v) => Seq(lit(k), v) }: _*),
       (_, v) => v.isNotNull)
-    val withRule = df.withColumn("_sensName", nameKey)
-      .join(broadcast(rules), Seq("_sensName"), "left")
+    val withRule = df.join(broadcast(rules), nameKey === col("_sensName"), "left")
       .withColumn("_sensRule", mostRestrictive)
-    val out = withRule
-      .withColumn("originalSensitiveValues",
-        when(sensitive, stash).otherwise(lit(null)))
+    // one projection: every value below reads the stage's input columns
+    val blanked = Seq("processed_eventDate", "processed_day")
+      .filter(df.columns.contains)
+      .map(c => c -> when(withhold, lit(null)).otherwise(col(c)))
+    withRule.withColumns(ListMap(Seq(
+      "originalSensitiveValues" -> when(sensitive, stash).otherwise(lit(null)),
       // reference adds the generalisation radius to the existing
       // uncertainty (`SensitivityProcessor.scala:185-196`); always double
-      .withColumn("processed_coordinateUncertaintyInMeters",
+      "processed_coordinateUncertaintyInMeters" ->
         when(sensitive,
           coalesce(colOr("processed_coordinateUncertaintyInMeters")
             .try_cast("double"), lit(0.0)) + metres)
           .otherwise(colOr("processed_coordinateUncertaintyInMeters")
-            .try_cast("double")))
-      .withColumn("processed_decimalLatitude",
-        when(sensitive, generalise(lat)).otherwise(lat))
-      .withColumn("processed_decimalLongitude",
-        when(sensitive, generalise(lon)).otherwise(lon))
-      .withColumn("processed_dataGeneralizations",
+            .try_cast("double")),
+      "processed_decimalLatitude" -> when(sensitive, generalise(lat)).otherwise(lat),
+      "processed_decimalLongitude" -> when(sensitive, generalise(lon)).otherwise(lon),
+      "processed_dataGeneralizations" ->
         when(sensitive, concat(
           lit("Coordinates generalised to "), metres.cast("string"),
           lit(" metres"),
           when(col("_sensRule.category").isNotNull,
             concat(lit(" ["), col("_sensRule.category"), lit("]")))
-            .otherwise(lit("")))).otherwise(lit(null)))
-      .withColumn("processed_informationWithheld",
+            .otherwise(lit("")))).otherwise(lit(null)),
+      "processed_informationWithheld" ->
         when(withhold, lit("Event date withheld under a sensitivity rule"))
-          .otherwise(lit(null).cast("string")))
-      .withColumn("isSensitive", sensitive)
-      .withColumn("assertions_sensitive", array_compact(array(
+          .otherwise(lit(null).cast("string")),
+      "isSensitive" -> sensitive,
+      "assertions_sensitive" -> array_compact(array(
         AssertionCodes.assertCodeIf(sensitive,
-          AssertionCodes.DATA_ARE_GENERALISED))))
-    val blanked = Seq("processed_eventDate", "processed_day")
-      .foldLeft(out) { (acc, c) =>
-        if (acc.columns.contains(c))
-          acc.withColumn(c, when(withhold, lit(null)).otherwise(col(c)))
-        else acc
-      }
-    blanked.drop("_sensName", "_sensRules", "_sensRule")
+          AssertionCodes.DATA_ARE_GENERALISED)))) ++ blanked: _*))
+      .drop("_sensName", "_sensRules", "_sensRule")
   }
 
   /** P5: masked projection for un-authorised consumers vs full for
     * authorised (reference `Store.scala:107` sensitive-field handling). */
   def maskSensitive(df: DataFrame, includeSensitive: Boolean): DataFrame =
     if (includeSensitive && df.columns.contains("originalSensitiveValues"))
-      df.withColumn("processed_decimalLatitude",
-          coalesce(element_at(col("originalSensitiveValues"),
-            "decimalLatitude").cast("double"),
-            col("processed_decimalLatitude")))
-        .withColumn("processed_decimalLongitude",
-          coalesce(element_at(col("originalSensitiveValues"),
-            "decimalLongitude").cast("double"),
-            col("processed_decimalLongitude")))
+      df.withColumns(ListMap(Seq("Latitude", "Longitude").map { c =>
+        s"processed_decimal$c" -> coalesce(element_at(
+          col("originalSensitiveValues"), s"decimal$c").cast("double"),
+          col(s"processed_decimal$c"))
+      }: _*))
     else df.drop("originalSensitiveValues")
 
-  /** J13: lft/rgt containment join — species-group labels from taxon lft.
-    * `groupsDim`: (speciesGroup, lft, rgt); tiny → broadcast theta join.
-    * Aggregated by `idCol` then joined back, so arbitrary (incl. map-typed)
-    * record columns survive. */
-  def speciesGroups(df: DataFrame, groupsDim: DataFrame,
-      idCol: String = "rowKey"): DataFrame = {
-    val groups = df.select(col(idCol), col("processed_lft"))
-      .join(broadcast(groupsDim.select(col("speciesGroup"),
-        col("lft").as("_glft"), col("rgt").as("_grgt"))),
-        col("processed_lft") >= col("_glft") &&
-          col("processed_lft") < col("_grgt"))
-      .groupBy(idCol)
-      .agg(collect_set("speciesGroup").as("processed_speciesGroups"))
-    df.join(groups, Seq(idCol), "left")
-      .withColumn("processed_speciesGroups",
-        coalesce(col("processed_speciesGroups"),
-          array().cast("array<string>")))
+  /** J13: lft/rgt containment — species-group labels from taxon lft.
+    * `groupsDim`: (speciesGroup, lft, rgt), tiny: aggregated to ONE row
+    * holding every group sorted by lft, then rgt descending, then name, and
+    * broadcast, so each record picks its labels with `filter`/`transform` —
+    * no key, no shuffle, and the records' plan runs once. A record in
+    * several groups lists them outermost first (of two groups starting at
+    * the same lft, the wider one); in none, an empty array. rowKey, when
+    * present, leads the output (the order stored snapshots carry). */
+  def speciesGroups(df: DataFrame, groupsDim: DataFrame): DataFrame = {
+    val groups = groupsDim.filter(col("speciesGroup").isNotNull)
+      .agg(sort_array(collect_list(struct(col("lft"),
+        (-col("rgt")).as("negRgt"), col("speciesGroup")))).as("_groups"))
+    val lft = col("processed_lft")
+    val labels = transform(filter(col("_groups"), g =>
+      lft >= g.getField("lft") && lft < -g.getField("negRgt")),
+      _.getField("speciesGroup"))
+    val out = df.crossJoin(broadcast(groups))
+      .withColumn("processed_speciesGroups", array_distinct(labels))
+    val lead = df.columns.filter(_ == "rowKey").toSeq
+    out.select((lead ++ out.columns.filterNot(c => c == "_groups" ||
+      lead.contains(c))).map(c => out.col(s"`${c.replace("`", "``")}`")): _*)
   }
 
   /** F11: coordinates-are-country-centre check (reference
@@ -319,9 +309,8 @@ object DimensionStages {
       coalesce(colOr("decimalLatitude"), lat.cast("string")),
       coalesce(colOr("decimalLongitude"), lon.cast("string")),
       lat, lon, col(s"${key}Lat"), col(s"${key}Lon"))
-    df.withColumn(key,
-        lower(coalesce(recordRegionCols.map(colOr): _*)))
-      .join(broadcast(dim), Seq(key), "left")
+    df.join(broadcast(dim),
+        lower(coalesce(recordRegionCols.map(colOr): _*)) === col(key), "left")
       .withColumn(outCol, array_compact(array(
         AssertionCodes.assertCodeIf(isCentre, code))))
       .drop(key, s"${key}Lat", s"${key}Lon")
@@ -345,53 +334,46 @@ object DimensionStages {
       AssertionCodes.COORDINATES_CENTRE_OF_STATEPROVINCE,
       "assertions_statecentre")
 
-  /** OFFLINE stage (reference `processor/OfflineTestProcessor.scala:11-36`):
-    * carry the offline-analytics results — outlier layers, duplication
-    * status/type, associated occurrences, expert-range distance — and the
-    * offline assertion codes forward from the previous processed snapshot.
-    * This is a fact-to-fact join on rowKey (NOT broadcast: the snapshot is
-    * fact-scale); at cluster scale both sides should be bucketed by rowKey
-    * so the join is co-located. */
-  def carryForwardOffline(df: DataFrame, lastProcessed: DataFrame): DataFrame = {
+  /** OFFLINE + REPROCESSING stages against the previous processed snapshot,
+    * as ONE rowKey join:
+    *  - OFFLINE (reference `processor/OfflineTestProcessor.scala:11-36`):
+    *    carry the offline-analytics results — outlier layers, duplication
+    *    status/type, associated occurrences, expert-range distance — and the
+    *    offline assertion codes forward;
+    *  - REPROCESSING (reference `ReprocessingProcessor.scala:18-36`): when
+    *    the processed coordinates are unchanged, reuse the snapshot's `cl`
+    *    layer-sample map instead of re-sampling (only when it has `cl`).
+    * A fact-to-fact join (NOT broadcast: the snapshot is fact-scale); at
+    * cluster scale both sides should be bucketed by rowKey so the join is
+    * co-located. */
+  def carryForward(df: DataFrame, lastProcessed: DataFrame): DataFrame = {
+    val has = lastProcessed.columns.toSet
     val offline = array(AssertionCodes.offlineAssertionCodes.map(lit): _*)
-    def prevCol(name: String): Column =
-      if (lastProcessed.columns.contains(name)) col(name)
-      else lit(null).cast("string")
+    val carried = Seq("processed_outlierForLayers",
+      "processed_duplicationStatus", "processed_duplicationType",
+      "processed_associatedOccurrences", "processed_distanceOutsideExpertRange")
+      .map(c => (if (has(c)) col(c) else lit(null).cast("string")).as(c))
+    val codes =
+      if (has("assertionCodes")) array_intersect(col("assertionCodes"), offline)
+      else array().cast("array<int>")
+    val samples =
+      if (!has("cl")) Nil
+      else Seq(col("processed_decimalLatitude").as("_prevLat"),
+        col("processed_decimalLongitude").as("_prevLon"), col("cl").as("_prevCl"))
     val prev = lastProcessed.select(
-      col("rowKey"),
-      prevCol("processed_outlierForLayers").as("processed_outlierForLayers"),
-      prevCol("processed_duplicationStatus").as("processed_duplicationStatus"),
-      prevCol("processed_duplicationType").as("processed_duplicationType"),
-      prevCol("processed_associatedOccurrences").as("processed_associatedOccurrences"),
-      prevCol("processed_distanceOutsideExpertRange")
-        .as("processed_distanceOutsideExpertRange"),
-      (if (lastProcessed.columns.contains("assertionCodes"))
-        array_intersect(col("assertionCodes"), offline)
-      else array().cast("array<int>")).as("assertions_offline"))
-    df.join(prev, Seq("rowKey"), "left")
-      .withColumn("assertions_offline",
-        coalesce(col("assertions_offline"), array().cast("array<int>")))
-  }
-
-  /** REPROCESSING stage (reference `ReprocessingProcessor.scala:18-36`):
-    * when the processed coordinates are unchanged from the previous
-    * snapshot, reuse its el/cl layer-sample maps instead of re-sampling.
-    * Same rowKey-join contract as [[carryForwardOffline]]. */
-  def reuseSamplesWhenUnchanged(df: DataFrame,
-      lastProcessed: DataFrame): DataFrame = {
-    if (!lastProcessed.columns.contains("cl")) return df
-    val prev = lastProcessed.select(col("rowKey"),
-      col("processed_decimalLatitude").as("_prevLat"),
-      col("processed_decimalLongitude").as("_prevLon"),
-      col("cl").as("_prevCl"))
+      (col("rowKey") +: carried) ++ (codes.as("assertions_offline") +: samples): _*)
     val unchanged = col("_prevLat") <=> col("processed_decimalLatitude") &&
       col("_prevLon") <=> col("processed_decimalLongitude") &&
       col("_prevCl").isNotNull
     val existing =
       if (df.columns.contains("cl")) col("cl")
       else lit(null).cast("map<string,string>")
+    val reused =
+      if (has("cl")) Seq("cl" -> when(unchanged, col("_prevCl")).otherwise(existing))
+      else Nil
     df.join(prev, Seq("rowKey"), "left")
-      .withColumn("cl", when(unchanged, col("_prevCl")).otherwise(existing))
+      .withColumns(ListMap(("assertions_offline" ->
+        coalesce(col("assertions_offline"), array().cast("array<int>"))) +: reused: _*))
       .drop("_prevLat", "_prevLon", "_prevCl")
   }
 

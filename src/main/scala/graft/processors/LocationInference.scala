@@ -5,6 +5,7 @@ import graft.operators.Sampling
 import graft.vocab._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Location inference from GIS layers + taxon-profile checks — the part of
   * the reference's LocationProcessor that CONSUMES the layer-sampling
@@ -67,7 +68,7 @@ object LocationInference {
   /** Sample the distinct processed coordinates against the layer table and
     * attach the `cl` map (J3 + J4). `layers`: (layerId, value, wkt). A
     * pre-existing `cl` column (REPROCESSING carry-over, see
-    * `DimensionStages.reuseSamplesWhenUnchanged`) is preserved: only rows
+    * `DimensionStages.carryForward`) is preserved: only rows
     * still lacking samples contribute distinct points, so unchanged
     * records cost nothing to re-sample. */
   def attachLayerSamples(spark: SparkSession, df: DataFrame,
@@ -81,14 +82,11 @@ object LocationInference {
       .select(lat.as("lat"), lon.as("lon"))
       .filter(col("lat").isNotNull && col("lon").isNotNull).distinct()
     val samples = Sampling.samplePoints(spark, pts, layers)
-    val joined = base.withColumn("latLonKey", Sampling.latLonKey(lat, lon))
-      .join(broadcast(samples.select(col("latLonKey"), col("cl"))),
-        Seq("latLonKey"), "left")
-      .drop("latLonKey")
-    if (hasPrev)
-      joined.withColumn("cl", coalesce(col("_prevCl"), col("cl")))
-        .drop("_prevCl")
-    else joined
+      .select(col("latLonKey").as("_latLonKey"), col("cl"))
+    val joined = base.join(broadcast(samples),
+      Sampling.latLonKey(lat, lon) === col("_latLonKey"), "left")
+    (if (hasPrev) joined.withColumn("cl", coalesce(col("_prevCl"), col("cl")))
+      else joined).drop("_latLonKey", "_prevCl")
   }
 
   /** Inference + assertion stage; expects the `cl` column from
@@ -127,10 +125,11 @@ object LocationInference {
     val mismatch = rawState.isNotNull && stateFromLayers.isNotNull &&
       stateSupplied.isNotNull && !(stateSupplied <=> stateFromLayers)
 
-    df.withColumn("processed_stateProvince", state)
-      .withColumn("processed_country", country)
-      .withColumn("processed_biome", biome)
-      .withColumn("assertions_inference", array_compact(array(
+    df.withColumns(ListMap(
+      "processed_stateProvince" -> state,
+      "processed_country" -> country,
+      "processed_biome" -> biome,
+      "assertions_inference" -> array_compact(array(
         assertCodeIf(rawCountry.isNotNull &&
           ng(countryVocabUdf)(rawCountry).isNull, UNKNOWN_COUNTRY_NAME),
         assertCodeIf(countryFromLayers.isNotNull && rawCountry.isNull,
@@ -143,7 +142,7 @@ object LocationInference {
         assertCodeIf(coalesce(country, rawCountry).isNotNull &&
           rawLat.isNotNull && rawLon.isNotNull &&
           countryCentreUdf(coalesce(country, rawCountry), rawLat, rawLon),
-          COORDINATES_CENTRE_OF_COUNTRY))))
+          COORDINATES_CENTRE_OF_COUNTRY)))))
   }
 
   /** J5 taxon-profile join + biome-mismatch + conservation statuses.
@@ -155,26 +154,22 @@ object LocationInference {
       col("habitats").as("processed_speciesHabitats"),
       col("commonName").as("processed_vernacularName"),
       col("conservation").as("_conservation")))
-    val joined = df
-      .withColumn("_profileId",
-        colOr(df, "processed_taxonConceptID", lit(null).cast("string")))
-      .join(dim, Seq("_profileId"), "left")
+    val joined = df.join(dim,
+      colOr(df, "processed_taxonConceptID", lit(null).cast("string")) ===
+        col("_profileId"), "left")
     val conservation = col("_conservation")
-    val biome = colOr(joined, "processed_biome", lit(null).cast("string"))
-    joined
-      .withColumn("processed_countryConservation",
-        element_at(conservation,
-          colOr(joined, "processed_country", lit(null).cast("string"))))
-      .withColumn("processed_stateConservation",
-        element_at(conservation,
-          colOr(joined, "processed_stateProvince", lit(null).cast("string"))))
-      .withColumn("processed_globalConservation",
-        element_at(conservation, lit("global")))
-      .withColumn("assertions_profile", array_compact(array(
+    val biome = colOr(df, "processed_biome", lit(null).cast("string"))
+    joined.withColumns(ListMap(
+      "processed_countryConservation" -> element_at(conservation,
+        colOr(df, "processed_country", lit(null).cast("string"))),
+      "processed_stateConservation" -> element_at(conservation,
+        colOr(df, "processed_stateProvince", lit(null).cast("string"))),
+      "processed_globalConservation" -> element_at(conservation, lit("global")),
+      "assertions_profile" -> array_compact(array(
         assertCodeIf(biome.isNotNull &&
           col("processed_speciesHabitats").isNotNull &&
           biomeMismatchUdf(biome, col("processed_speciesHabitats")),
-          HABITAT_MISMATCH))))
+          HABITAT_MISMATCH)))))
       .drop("_profileId", "_conservation")
   }
 
@@ -184,9 +179,8 @@ object LocationInference {
     val dim = broadcast(speciesLists
       .groupBy(col("taxonConceptID").as("_listTaxonId"))
       .agg(sort_array(collect_set("listUid")).as("processed_speciesListUids")))
-    df.withColumn("_listTaxonId",
-        colOr(df, "processed_taxonConceptID", lit(null).cast("string")))
-      .join(dim, Seq("_listTaxonId"), "left")
+    df.join(dim, colOr(df, "processed_taxonConceptID",
+        lit(null).cast("string")) === col("_listTaxonId"), "left")
       .drop("_listTaxonId")
   }
 

@@ -6,6 +6,7 @@ import graft.vocab._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The record-enrichment pipeline: raw Darwin Core strings → typed processed
   * fields + quality assertions.
@@ -15,9 +16,13 @@ import org.apache.spark.sql.functions._
   * `processor/RecordProcessor.scala:71-165` in
   * /root/reference/src/main/scala/au/org/ala/biocache/) as one deterministic
   * column-level transformation: every stage contributes processed columns and
-  * an array-of-assertion-structs column; stage order = expression dependency
-  * order; the whole pipeline is a single narrow (no-shuffle) projection plus
-  * the broadcast dimension joins, so it scales linearly with partitions.
+  * an array-of-assertion-codes column in ONE projection (`withColumns` over an
+  * insertion-ordered map, so column order is the stage's listing order); a
+  * stage whose later columns read its own first results (the kernel structs
+  * `_ev`, `_lr`, `_nm`; the parsed misc fields) takes a second. Stage order
+  * = expression dependency order; each dimension is one broadcast join (the
+  * previous snapshot one rowKey join), so the pipeline stays narrow and
+  * scales linearly with partitions.
   */
 object Processors {
 
@@ -117,20 +122,21 @@ object Processors {
     def epochToDate(c: Column): Column =
       when(c.isNotNull,
         date_add(lit("1970-01-01"), coalesce(c, lit(0))).cast("date"))
-    df.withColumn("processed_eventDate", epochToDate(col("_ev.startEpochDay")))
-      .withColumn("processed_eventDateEnd", epochToDate(col("_ev.endEpochDay")))
-      .withColumn("processed_year", col("_ev.year"))
-      .withColumn("processed_month", col("_ev.month"))
-      .withColumn("processed_day", col("_ev.day"))
-      .withColumn("processed_datePrecision",
-        coalesce(col("_ev.datePrecision"), lit(eventAllNull.datePrecision)))
-      .withColumn("processed_modified", epochToDate(col("_ev.modifiedEpochDay")))
-      .withColumn("processed_dateIdentified",
-        epochToDate(col("_ev.dateIdentifiedEpochDay")))
-      .withColumn("processed_georeferencedDate",
-        epochToDate(col("_ev.georeferencedEpochDay")))
-      .withColumn("assertions_event",
-        coalesce(col("_ev.codes"), typedlit(eventAllNull.codes.toSeq)))
+    df.withColumns(ListMap(
+      "processed_eventDate" -> epochToDate(col("_ev.startEpochDay")),
+      "processed_eventDateEnd" -> epochToDate(col("_ev.endEpochDay")),
+      "processed_year" -> col("_ev.year"),
+      "processed_month" -> col("_ev.month"),
+      "processed_day" -> col("_ev.day"),
+      "processed_datePrecision" ->
+        coalesce(col("_ev.datePrecision"), lit(eventAllNull.datePrecision)),
+      "processed_modified" -> epochToDate(col("_ev.modifiedEpochDay")),
+      "processed_dateIdentified" ->
+        epochToDate(col("_ev.dateIdentifiedEpochDay")),
+      "processed_georeferencedDate" ->
+        epochToDate(col("_ev.georeferencedEpochDay")),
+      "assertions_event" ->
+        coalesce(col("_ev.codes"), typedlit(eventAllNull.codes.toSeq))))
       .drop("_ev")
   }
 
@@ -180,17 +186,17 @@ object Processors {
     val noLocationContext = colOrNull(df0, "footprintWKT").isNull &&
       colOrNull(df0, "locality").isNull && colOrNull(df0, "locationID").isNull
 
-    df.withColumn("processed_decimalLatitude", col("_lr.lat"))
-      .withColumn("processed_decimalLongitude", col("_lr.lon"))
-      .withColumn("processed_geodeticDatum", col("_lr.datum"))
-      .withColumn("processed_coordinateUncertaintyInMeters",
-        col("_lr.uncertainty"))
-      .withColumn("processed_georeferencedBy", georefBy)
-      .withColumn("processed_georeferenceProtocol", georefProtocol)
-      .withColumn("processed_georeferenceSources", georefSources)
-      .withColumn("processed_georeferenceVerificationStatus", georefStatus)
-      .withColumn("processed_georeferenceRemarks", georefRemarks)
-      .withColumn("assertions_loc", concat(
+    df.withColumns(ListMap(
+      "processed_decimalLatitude" -> col("_lr.lat"),
+      "processed_decimalLongitude" -> col("_lr.lon"),
+      "processed_geodeticDatum" -> col("_lr.datum"),
+      "processed_coordinateUncertaintyInMeters" -> col("_lr.uncertainty"),
+      "processed_georeferencedBy" -> georefBy,
+      "processed_georeferenceProtocol" -> georefProtocol,
+      "processed_georeferenceSources" -> georefSources,
+      "processed_georeferenceVerificationStatus" -> georefStatus,
+      "processed_georeferenceRemarks" -> georefRemarks,
+      "assertions_loc" -> concat(
         coalesce(col("_lr.codes"), typedlit(locationAllNull.codes.toSeq)),
         array_compact(array(
           assertCodeIf(rawDatum.isNull && col("_lr.datum").isNull,
@@ -202,7 +208,7 @@ object Processors {
             MISSING_GEOREFERENCEVERIFICATIONSTATUS),
           assertCodeIf(georefDate.isNull, MISSING_GEOREFERENCE_DATE),
           assertCodeIf((col("_lr.lat").isNull || col("_lr.lon").isNull) &&
-            noLocationContext, LOCATION_NOT_SUPPLIED)))))
+            noLocationContext, LOCATION_NOT_SUPPLIED))))))
       .drop("_lr")
   }
 
@@ -213,54 +219,54 @@ object Processors {
   def processAltitudeAndDepth(df0: DataFrame): DataFrame = {
     val distUnitUdf = udf((s: String) =>
       CoordinateParsers.parseDistanceWithUnit(s))
-    val df = df0
-      .withColumn("_velev", colOrNull(df0, "verbatimElevation"))
-      .withColumn("_vdepth", colOrNull(df0, "verbatimDepth"))
-      .withColumn("_velevP", ng(distUnitUdf)(col("_velev")))
-      .withColumn("_vdepthP", ng(distUnitUdf)(col("_vdepth")))
-      .withColumn("_minD", colOrNull(df0, "minimumDepthInMeters").try_cast("float"))
-      .withColumn("_maxD", colOrNull(df0, "maximumDepthInMeters").try_cast("float"))
-      .withColumn("_minE", colOrNull(df0, "minimumElevationInMeters").try_cast("float"))
-      .withColumn("_maxE", colOrNull(df0, "maximumElevationInMeters").try_cast("float"))
+    val velev = colOrNull(df0, "verbatimElevation")
+    val vdepth = colOrNull(df0, "verbatimDepth")
+    val df = df0.withColumns(ListMap(
+      "_velevP" -> ng(distUnitUdf)(velev),
+      "_vdepthP" -> ng(distUnitUdf)(vdepth)))
+    def metres(name: String): Column = colOrNull(df0, name).try_cast("float")
+    val (minD, maxD) = (metres("minimumDepthInMeters"), metres("maximumDepthInMeters"))
+    val (minE, maxE) = (metres("minimumElevationInMeters"),
+      metres("maximumElevationInMeters"))
     val elev = col("_velevP._1")
     val depth = col("_vdepthP._1")
-    val depthReversed = col("_minD").isNotNull && col("_maxD").isNotNull &&
-      col("_minD") > col("_maxD")
-    val elevReversed = col("_minE").isNotNull && col("_maxE").isNotNull &&
-      col("_minE") > col("_maxE")
-    df.withColumn("processed_verbatimElevation", elev.cast("double"))
-      .withColumn("processed_verbatimDepth", depth.cast("double"))
-      .withColumn("processed_minimumDepthInMeters",
-        when(depthReversed, col("_maxD")).otherwise(col("_minD")).cast("double"))
-      .withColumn("processed_maximumDepthInMeters",
-        when(depthReversed, col("_minD")).otherwise(col("_maxD")).cast("double"))
-      .withColumn("processed_minimumElevationInMeters",
-        when(elevReversed, col("_maxE")).otherwise(col("_minE")).cast("double"))
-      .withColumn("processed_maximumElevationInMeters",
-        when(elevReversed, col("_minE")).otherwise(col("_maxE")).cast("double"))
-      .withColumn("assertions_altdepth", array_compact(array(
-        assertCodeIf(col("_velev").isNotNull && col("_velevP").isNull,
+    val depthReversed = minD.isNotNull && maxD.isNotNull && minD > maxD
+    val elevReversed = minE.isNotNull && maxE.isNotNull && minE > maxE
+    df.withColumns(ListMap(
+      "processed_verbatimElevation" -> elev.cast("double"),
+      "processed_verbatimDepth" -> depth.cast("double"),
+      "processed_minimumDepthInMeters" ->
+        when(depthReversed, maxD).otherwise(minD).cast("double"),
+      "processed_maximumDepthInMeters" ->
+        when(depthReversed, minD).otherwise(maxD).cast("double"),
+      "processed_minimumElevationInMeters" ->
+        when(elevReversed, maxE).otherwise(minE).cast("double"),
+      "processed_maximumElevationInMeters" ->
+        when(elevReversed, minE).otherwise(maxE).cast("double"),
+      "assertions_altdepth" -> array_compact(array(
+        assertCodeIf(velev.isNotNull && col("_velevP").isNull,
           ALTITUDE_NON_NUMERIC),
         assertCodeIf(elev > 10000 || elev < -100, ALTITUDE_OUT_OF_RANGE),
         assertCodeIf(col("_velevP._2") === true, ALTITUDE_IN_FEET),
-        assertCodeIf(col("_vdepth").isNotNull && col("_vdepthP").isNull,
+        assertCodeIf(vdepth.isNotNull && col("_vdepthP").isNull,
           DEPTH_NON_NUMERIC),
         assertCodeIf(depth > 10000, DEPTH_OUT_OF_RANGE),
         assertCodeIf(col("_vdepthP._2") === true, DEPTH_IN_FEET),
         assertCodeIf(depthReversed, MIN_MAX_DEPTH_REVERSED),
-        assertCodeIf(elevReversed, MIN_MAX_ALTITUDE_REVERSED))))
-      .drop("_velev", "_vdepth", "_velevP", "_vdepthP",
-        "_minD", "_maxD", "_minE", "_maxE")
+        assertCodeIf(elevReversed, MIN_MAX_ALTITUDE_REVERSED)))))
+      .drop("_velevP", "_vdepthP")
   }
 
   /** BOR stage (reference `processor/BasisOfRecordProcessor.scala:22-54`). */
   def processBasisOfRecord(df0: DataFrame): DataFrame = {
     val raw = colOrNull(df0, "basisOfRecord")
     val matched = ng(vocabUdf(BasisOfRecord))(raw)
-    df0.withColumn("processed_basisOfRecord", matched)
-      .withColumn("assertions_bor", array_compact(array(
+    df0.withColumns(ListMap(
+      "processed_basisOfRecord" -> matched,
+      "assertions_bor" -> array_compact(array(
         assertCodeIf(raw.isNull, MISSING_BASIS_OF_RECORD),
-        assertCodeIf(raw.isNotNull && matched.isNull, BADLY_FORMED_BASIS_OF_RECORD))))
+        assertCodeIf(raw.isNotNull && matched.isNull,
+          BADLY_FORMED_BASIS_OF_RECORD)))))
   }
 
   /** IMAGE/misc stage (reference `processor/MiscellaneousProcessor.scala` +
@@ -277,25 +283,25 @@ object Processors {
     val sexRaw = colOrNull(df0, "sex")
     val recordedBy = colOrNull(df0, "recordedBy")
     val em = colOrNull(df0, "establishmentMeans")
-    val staged = df0
-      .withColumn("processed_occurrenceStatus",
-        // reference MiscellaneousProcessor.processOccurrenceStatus: blank →
-        // assumed "present"; supplied but unrecognised → "unknown"
-        when(status.isNull, lit("present"))
-          .otherwise(coalesce(statusM, lit("unknown"))))
-      .withColumn("processed_typeStatus", tsM)
-      .withColumn("processed_sex", ng(vocabUdf(Sex))(sexRaw))
-      .withColumn("processed_lifeStage",
-        ng(vocabUdf(LifeStage))(colOrNull(df0, "lifeStage")))
-      .withColumn("processed_establishmentMeans", ng(establishmentMeansUdf)(em))
-      .withColumn("processed_license", ng(licenseUdf)(colOrNull(df0, "license")))
-      .withColumn("processed_recordedBy", ng(collectorsUdf)(recordedBy))
-      .withColumn("processed_interactions",
-        ng(interactionUdf)(colOrNull(df0, "associatedTaxa")))
+    // two projections: the assertions read the parsed establishmentMeans
+    // and collectors, so each UDF runs once per row
+    val staged = df0.withColumns(ListMap(
+      // reference MiscellaneousProcessor.processOccurrenceStatus: blank →
+      // assumed "present"; supplied but unrecognised → "unknown"
+      "processed_occurrenceStatus" -> when(status.isNull, lit("present"))
+        .otherwise(coalesce(statusM, lit("unknown"))),
+      "processed_typeStatus" -> tsM,
+      "processed_sex" -> ng(vocabUdf(Sex))(sexRaw),
+      "processed_lifeStage" -> ng(vocabUdf(LifeStage))(colOrNull(df0, "lifeStage")),
+      "processed_establishmentMeans" -> ng(establishmentMeansUdf)(em),
+      "processed_license" -> ng(licenseUdf)(colOrNull(df0, "license")),
+      "processed_recordedBy" -> ng(collectorsUdf)(recordedBy),
+      "processed_interactions" ->
+        ng(interactionUdf)(colOrNull(df0, "associatedTaxa")),
       // media identifiers pass through (processImages:175-179)
-      .withColumn("processed_images", colOrNull(df0, "images"))
-      .withColumn("processed_sounds", colOrNull(df0, "sounds"))
-      .withColumn("processed_videos", colOrNull(df0, "videos"))
+      "processed_images" -> colOrNull(df0, "images"),
+      "processed_sounds" -> colOrNull(df0, "sounds"),
+      "processed_videos" -> colOrNull(df0, "videos")))
     val cultivated = cultivatedMeans.map(m =>
       array_contains(split(col("processed_establishmentMeans"), "; "), m))
       .reduce(_ || _)
@@ -356,26 +362,26 @@ object Processors {
       val matcher = NameMatcher.fromDataFrame(namesDim)
       val bc = df0.sparkSession.sparkContext.broadcast(matcher)
       val lookupUdf = udf((name: String, kingdom: String) =>
-        bc.value.lookup(name, kingdom))
+        bc.value.lookup(name, kingdom)).withName("name_match")
       df0.withColumn("_nm",
         when(nameForMatch.isNotNull, lookupUdf(nameForMatch, kingdomRaw)))
     }
-    withNm
-      .withColumn("processed_taxonConceptID", col("_nm.taxonConceptID"))
-      .withColumn("processed_scientificName", col("_nm.acceptedName"))
-      .withColumn("processed_taxonRank", col("_nm.taxonRank"))
-      .withColumn("processed_kingdom", col("_nm.kingdom"))
-      .withColumn("processed_phylum", col("_nm.phylum"))
-      .withColumn("processed_classs", col("_nm.classs"))
-      .withColumn("processed_family", col("_nm.family"))
-      .withColumn("processed_genus", col("_nm.genus"))
-      .withColumn("processed_lft", col("_nm.lft"))
-      .withColumn("processed_rgt", col("_nm.rgt"))
-      .withColumn("processed_nameMatchMetric",
+    withNm.withColumns(ListMap(
+      "processed_taxonConceptID" -> col("_nm.taxonConceptID"),
+      "processed_scientificName" -> col("_nm.acceptedName"),
+      "processed_taxonRank" -> col("_nm.taxonRank"),
+      "processed_kingdom" -> col("_nm.kingdom"),
+      "processed_phylum" -> col("_nm.phylum"),
+      "processed_classs" -> col("_nm.classs"),
+      "processed_family" -> col("_nm.family"),
+      "processed_genus" -> col("_nm.genus"),
+      "processed_lft" -> col("_nm.lft"),
+      "processed_rgt" -> col("_nm.rgt"),
+      "processed_nameMatchMetric" ->
         when(col("_nm.taxonConceptID").isNull, lit(null))
           .when(col("_nm.fuzzy"), lit("fuzzyMatch"))
-          .otherwise(lit("exactMatch")))
-      .withColumn("assertions_class", array_compact(array(
+          .otherwise(lit("exactMatch")),
+      "assertions_class" -> array_compact(array(
         // doQualityTests (ClassificationProcessor.scala:120-146)
         assertCodeIf(colOrNull(df0, "taxonRank").isNull, MISSING_TAXONRANK),
         assertCodeIf(nameRaw.isNull &&
@@ -388,8 +394,8 @@ object Processors {
           "UNKNOWN", "UNIDENTIFIED", "NOT IDENTIFIED", "UNDETERMINED",
           "NONE", "NULL", "?", "NO NAME"), INVALID_SCIENTIFIC_NAME),
         assertCodeIf(nameForMatch.isNotNull &&
-          col("processed_taxonConceptID").isNull, NAME_NOT_RECOGNISED),
-        assertCodeIf(col("_nm.homonym") === true, HOMONYM_ISSUE))))
+          col("_nm.taxonConceptID").isNull, NAME_NOT_RECOGNISED),
+        assertCodeIf(col("_nm.homonym") === true, HOMONYM_ISSUE)))))
       .drop("_nm")
   }
 
@@ -425,8 +431,6 @@ object Processors {
         * OFFLINE carry-forward + el/cl sample reuse (rowKey join). */
       lastProcessed: Option[DataFrame] = None)
 
-  private val emptyAssertions = "array<int>"
-
   /** Full pipeline: stage order per reference `processor/Processors.scala:14`
     * (defaults first, attribution, classification before location, sensitive
     * generalisation after location). Produces processed_* columns, an
@@ -444,80 +448,65 @@ object Processors {
     // (callers size stream exchanges explicitly)
     val df0 = if (df0raw.isStreaming) df0raw
       else graft.Tuning.fanOutSmallScan(df0raw)
-    val df = dims.defaults.map(d =>
-      DimensionStages.applyDefaultValues(df0, d)).getOrElse(df0)
-    val afterAttr = dims.attribution.map(d =>
-      DimensionStages.processAttribution(df, d)).getOrElse(
-      df.withColumn("assertions_attr", array().cast(emptyAssertions)))
+    // a dimension that is absent skips its stage, and with it the stage's
+    // assertions_* column: the codes are concatenated from the stages that ran
+    def stage(d: Option[DataFrame], in: DataFrame)(
+        f: (DataFrame, DataFrame) => DataFrame): DataFrame =
+      d.fold(in)(f(in, _))
+    val df = stage(dims.defaults, df0)(DimensionStages.applyDefaultValues)
+    val afterAttr = stage(dims.attribution, df)(DimensionStages.processAttribution)
     val afterMisc = processMiscellaneous(processBasisOfRecord(afterAttr))
-    val afterClass = dims.names match {
-      case Some(dim) => processClassification(afterMisc, dim)
-      case None => afterMisc.withColumn("assertions_class",
-        array().cast(emptyAssertions))
-    }
-    val afterHints = dims.taxonomicHints.map(d =>
-      DimensionStages.checkTaxonomicHints(afterClass, d)).getOrElse(
-      afterClass.withColumn("assertions_hints", array().cast(emptyAssertions)))
+    val afterClass = stage(dims.names, afterMisc)(processClassification)
+    val afterHints = stage(dims.taxonomicHints, afterClass)(
+      DimensionStages.checkTaxonomicHints)
     val afterLoc = LocationInference.processIdentificationQualifier(
       processAltitudeAndDepth(processLocation(processEvent(afterHints))))
-    val afterCentre = dims.countryCentres.map(d =>
-      DimensionStages.checkCentrePoints(afterLoc, d)).getOrElse(
-      afterLoc.withColumn("assertions_centre", array().cast(emptyAssertions)))
+    val afterCentre = stage(dims.countryCentres, afterLoc)(
+      DimensionStages.checkCentrePoints)
     // OFFLINE carry-forward + REPROCESSING sample reuse against the
     // previous snapshot (reference OfflineTestProcessor /
-    // ReprocessingProcessor); both are rowKey joins, only taken when a
-    // snapshot is supplied
-    val afterOffline = dims.lastProcessed match {
-      case Some(lp) if afterCentre.columns.contains("rowKey") =>
-        DimensionStages.reuseSamplesWhenUnchanged(
-          DimensionStages.carryForwardOffline(afterCentre, lp), lp)
-      case _ =>
-        afterCentre.withColumn("assertions_offline", array().cast(emptyAssertions))
-    }
+    // ReprocessingProcessor): one rowKey join, only taken when a snapshot
+    // is supplied
+    val afterOffline =
+      if (afterCentre.columns.contains("rowKey"))
+        stage(dims.lastProcessed, afterCentre)(DimensionStages.carryForward)
+      else afterCentre
     // layer-sampling-driven inference (J3/J4 → state/country/biome +
     // mismatch/centre assertions); without layers the stage still runs so
     // the raw-value vocab fallbacks and centre checks apply
-    val sampled = dims.layers match {
-      case Some(layers) => LocationInference.attachLayerSamples(
-        afterOffline.sparkSession, afterOffline, layers)
-      case None => afterOffline
-    }
+    val sampled = stage(dims.layers, afterOffline)((d, layers) =>
+      LocationInference.attachLayerSamples(d.sparkSession, d, layers))
     val afterInfer0 = LocationInference.inferStateCountry(sampled, dims.layerConfig)
     // state-centre check after inference so the layer-derived state is used
     // (reference checks processed.location.stateProvince)
-    val afterInfer = dims.stateCentres.map(d =>
-      DimensionStages.checkStateCentrePoints(afterInfer0, d)).getOrElse(
-      afterInfer0.withColumn("assertions_statecentre",
-        array().cast(emptyAssertions)))
-    val afterProfiles = dims.taxonProfiles.map(d =>
-      LocationInference.applyTaxonProfiles(afterInfer, d)).getOrElse(
-      afterInfer.withColumn("assertions_profile", array().cast(emptyAssertions)))
-    val afterLists = dims.speciesLists.map(d =>
-      LocationInference.applySpeciesLists(afterProfiles, d))
-      .getOrElse(afterProfiles)
-    val afterSens = dims.sensitivity.map(d =>
-      DimensionStages.processSensitivity(afterLists, d)).getOrElse(
-      afterLists.withColumn("assertions_sensitive", array().cast(emptyAssertions)))
-    val afterGroups = dims.speciesGroups match {
-      case Some(d) if afterSens.columns.contains("processed_lft") &&
-        afterSens.columns.contains("rowKey") =>
-        DimensionStages.speciesGroups(afterSens, d)
-      case _ => afterSens
-    }
+    val afterInfer = stage(dims.stateCentres, afterInfer0)(
+      DimensionStages.checkStateCentrePoints)
+    val afterProfiles = stage(dims.taxonProfiles, afterInfer)(
+      LocationInference.applyTaxonProfiles)
+    val afterLists = stage(dims.speciesLists, afterProfiles)(
+      LocationInference.applySpeciesLists)
+    val afterSens = stage(dims.sensitivity, afterLists)(
+      DimensionStages.processSensitivity)
+    val afterGroups =
+      if (afterSens.columns.contains("processed_lft"))
+        stage(dims.speciesGroups, afterSens)(DimensionStages.speciesGroups)
+      else afterSens
     val assertionCols = Seq("assertions_attr", "assertions_bor",
       "assertions_misc", "assertions_class", "assertions_hints",
       "assertions_event",
       "assertions_loc", "assertions_altdepth", "assertions_centre",
       "assertions_statecentre", "assertions_offline", "assertions_inference",
       "assertions_profile", "assertions_sensitive")
+      .filter(afterGroups.columns.contains)
+    val codes = concat(assertionCols.map(col): _*)
     val finished = afterGroups
-      .withColumn("assertionCodes", concat(assertionCols.map(col): _*))
-      .withColumn("_asm", assembleFromCodes(col("assertionCodes")))
-      .withColumn("assertions", col("_asm.assertions"))
-      .withColumn("geospatiallyKosher", col("_asm.geospatiallyKosher"))
-      .withColumn("taxonomicallyKosher", col("_asm.taxonomicallyKosher"))
-      .drop("_asm")
-      .drop(assertionCols: _*)
+      .withColumns(ListMap("assertionCodes" -> codes,
+        "_asm" -> assembleFromCodes(codes)))
+      .withColumns(ListMap(
+        "assertions" -> col("_asm.assertions"),
+        "geospatiallyKosher" -> col("_asm.geospatiallyKosher"),
+        "taxonomicallyKosher" -> col("_asm.taxonomicallyKosher")))
+      .drop("_asm" +: assertionCols: _*)
     // A9 processing metrics (reference RecordProcessor nanosecond
     // accumulators → Spark observed metrics; read via a
     // QueryExecutionListener or the Observation API)
@@ -537,11 +526,11 @@ object Processors {
     * field, `consensus_<f>` takes the processed value when processing
     * produced one and falls back to the raw value otherwise. Map-only —
     * one `coalesce` per field, stays inside whole-stage codegen. */
-  def consensusVersion(enriched: DataFrame, fields: Seq[String]): DataFrame =
-    fields.foldLeft(enriched) { (d, f) =>
-      require(d.columns.contains(f) && d.columns.contains(s"processed_$f"),
-        s"consensusVersion needs both '$f' and 'processed_$f' columns")
-      d.withColumn(s"consensus_$f",
-        coalesce(col(s"processed_$f").cast("string"), col(f)))
-    }
+  def consensusVersion(enriched: DataFrame, fields: Seq[String]): DataFrame = {
+    fields.foreach(f => require(enriched.columns.contains(f) &&
+      enriched.columns.contains(s"processed_$f"),
+      s"consensusVersion needs both '$f' and 'processed_$f' columns"))
+    enriched.withColumns(ListMap(fields.distinct.map(f =>
+      s"consensus_$f" -> coalesce(col(s"processed_$f").cast("string"), col(f))): _*))
+  }
 }

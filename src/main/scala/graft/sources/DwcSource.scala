@@ -149,18 +149,20 @@ object DwcSource {
     df.withColumn("miscProperties", merged).drop(unknown: _*)
   }
 
+  /** Canonical column names in one projection: case fixes first (skipped
+    * when the canonical name is already taken, also by an earlier fix),
+    * then the reserved renames, worked out on the names up front. */
   private def normalizeColumns(df: DataFrame): DataFrame = {
-    val caseFixed = df.columns.foldLeft(df) { (acc, c) =>
+    val caseFixed = df.columns.foldLeft(df.columns.toSeq) { (names, c) =>
       canonicalTerms.get(c.toLowerCase) match {
-        case Some(canonical) if canonical != c &&
-          !acc.columns.contains(canonical) =>
-          acc.withColumnRenamed(c, canonical)
-        case _ => acc
+        case Some(canonical) if canonical != c && !names.contains(canonical) =>
+          names.map(n => if (n == c) canonical else n)
+        case _ => names
       }
     }
-    reservedRenames.foldLeft(caseFixed) { case (acc, (from, to)) =>
-      if (acc.columns.contains(from)) acc.withColumnRenamed(from, to) else acc
-    }
+    val renamed = caseFixed.map(n => reservedRenames.getOrElse(n, n))
+    df.withColumnsRenamed(df.columns.toSeq.zip(renamed)
+      .filter { case (from, to) => from != to }.toMap)
   }
 
   /** J7: rowKey = dataResourceUid | sha256(dataResourceUid + unique terms).

@@ -518,4 +518,51 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("LeftAnti"),
       s"known edges must be anti-joined out:\n$plan")
   }
+
+  test("enrichAll with the bulk dimensions: one projection per stage, the " +
+      "records and the name match planned once") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_enrich").toString
+    Seq(("dr1|a", "dr1", "Macropus rufus", "2012-03-05", "-35.2", "149.2"),
+      ("dr1|b", "dr1", "Plainus speciesus", "2013-04-01", "-25.0", "135.0"))
+      .toDF("rowKey", "dataResourceUid", "scientificName", "eventDate",
+        "decimalLatitude", "decimalLongitude")
+      .write.parquet(s"$dir/records")
+    Seq(("dr1|b", -25.0, 135.0, Map("cl927" -> "NT"), Seq(20014), "D1"))
+      .toDF("rowKey", "processed_decimalLatitude",
+        "processed_decimalLongitude", "cl", "assertionCodes",
+        "processed_duplicationStatus")
+      .write.parquet(s"$dir/last")
+    val dims = graft.processors.Processors.Dimensions(
+      names = Some(Seq(("macropus rufus", "lsid:1", "Macropus rufus",
+        "species", "Animalia", "Macropodidae", "Macropus", 150L, 151L))
+        .toDF("nameLower", "taxonConceptID", "acceptedName", "taxonRank",
+          "kingdom", "family", "genus", "lft", "rgt")),
+      sensitivity = Some(Seq(("macropus rufus", 10000))
+        .toDF("nameLower", "generalisationMetres")),
+      speciesGroups = Some(Seq(("Mammals", 100L, 200L))
+        .toDF("speciesGroup", "lft", "rgt")),
+      lastProcessed = Some(spark.read.parquet(s"$dir/last")))
+    val out = graft.processors.Processors.enrichAll(
+      spark.read.parquet(s"$dir/records"), dims)
+    val qe = out.queryExecution
+    val projects = qe.analyzed.collect { case p: Project => p }.size
+    def scans(plan: LogicalPlan, leaf: String): Int = plan.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+        if fs.location.rootPaths.exists(_.getName == leaf) => fs
+    }.size
+    val nameMatches = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.contains("name_match") => u
+    })).size
+    assert(projects <= 40, s"$projects Project nodes in the analyzed plan")
+    assert(scans(qe.optimizedPlan, "records") == 1,
+      s"records scanned more than once:\n${qe.optimizedPlan}")
+    assert(scans(qe.optimizedPlan, "last") == 1,
+      s"previous snapshot joined more than once:\n${qe.optimizedPlan}")
+    assert(nameMatches == 1, s"$nameMatches name-match calls:\n${qe.optimizedPlan}")
+    assert(out.count() == 2)
+  }
 }

@@ -130,4 +130,21 @@ class MiscPropertiesSpec extends AnyFunSuite {
     val dl3 = Serving.download(index, keys, Seq("id"), Nil)
     assert(dl3.columns.toSeq == Seq("id"))
   }
+
+  test("header case fixes skip a canonical name already taken; class → classs") {
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      val df = Seq(("a", "b", "c", "d", "e", "f")).toDF("decimallatitude",
+        "decimalLatitude", "SCIENTIFICNAME", "Class", "Eventdate", "EVENTDATE")
+      val out = DwcSource.fromRaw(df, "dr1", Seq("decimalLatitude"))
+      // decimallatitude: its canonical name is an input column; EVENTDATE:
+      // an earlier fix took eventDate — both stay as they are, in misc
+      assert(out.columns.toSeq == Seq("decimalLatitude", "scientificName",
+        "classs", "eventDate", "dataResourceUid", "rowKey", "miscProperties"))
+      assert(out.select("decimalLatitude", "scientificName", "classs",
+        "eventDate", "miscProperties")
+        .as[(String, String, String, String, Map[String, String])].head() ==
+        (("b", "c", "d", "e", Map("decimallatitude" -> "a", "EVENTDATE" -> "f"))))
+    } finally spark.conf.unset("spark.sql.caseSensitive")
+  }
 }

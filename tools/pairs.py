@@ -10,12 +10,19 @@ request kind on ``serve``), which are reported, not judged.
     python3 tools/pairs.py BASE CHANGE --workload serve --seeds 1-10
     python3 tools/pairs.py BASE CHANGE --workload all --seeds 11,12 \\
         --log pairs.jsonl
+    python3 tools/pairs.py BASE CHANGE --workload bulk --seeds 1-10 --trace
     python3 tools/pairs.py --report pairs.jsonl
 
 Each run's record (``lifebench/.runs/<tag>/record.json`` of its checkout)
 is appended to ``--log`` as one JSON line as soon as it finishes, so an
 interrupted series can still be reported. Each checkout builds itself on
 its first run.
+
+With ``--trace``, one traced run per side (on the first seed) follows the
+untraced pairs, and the report adds each side's median of the named
+per-layer metrics over its traced runs: ``processors.enrich.plan_ms``,
+``processors.enrich.s`` and ``delta.jobs_per_batch``. The end-to-end
+figures come from the untraced runs only.
 """
 import argparse
 import json
@@ -31,6 +38,7 @@ sys.dont_write_bytecode = True  # leave no cache file under lifebench/
 import metrics  # noqa: E402
 
 SIDES = ("base", "change")
+LAYERS = ("processors.enrich.plan_ms", "processors.enrich.s", "delta.jobs_per_batch")
 
 
 def seeds_of(text):
@@ -42,15 +50,15 @@ def seeds_of(text):
     return out
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     """One benchmark run in `checkout`; its record, or a stub when the run
     left none."""
     cmd = [sys.executable, "lifebench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE,
                             stderr=subprocess.STDOUT, text=True)
     out, _ = proc.communicate()
-    tag = f"{workload}-s{seed}-t0-{proc.pid}"
+    tag = f"{workload}-s{seed}-t{trace}-{proc.pid}"
     path = os.path.join(checkout, "lifebench", ".runs", tag, "record.json")
     try:
         with open(path) as f:
@@ -70,7 +78,10 @@ def quartiles(xs):
 
 def report(rows):
     """Prints the summary of `rows`: dicts with side, seed, workload and
-    the workload's entry of a record."""
+    the workload's entry of a record. Traced rows feed only the per-layer
+    medians of the metrics in `LAYERS`."""
+    traced = [r for r in rows if r.get("trace")]
+    rows = [r for r in rows if not r.get("trace")]
     better = {n: b for n, _, b in metrics.END_TO_END}
     for w in sorted({r["workload"] for r in rows}):
         mine = [r for r in rows if r["workload"] == w]
@@ -107,12 +118,24 @@ def report(rows):
             f"{by[(side, s)]['entry']['end_to_end']['p50_ms']:.4g}" for side in SIDES)
             for s in seeds]
         print("  p50_ms per seed (base change): " + "; ".join(per_seed))
+    for w in sorted({r["workload"] for r in traced}):
+        print(f"== {w}: traced runs, per-layer medians")
+        for name in LAYERS:
+            got = {side: [r["entry"]["per_layer"][name] for r in traced
+                          if r["workload"] == w and r["side"] == side
+                          and name in r["entry"].get("per_layer", {})]
+                   for side in SIDES}
+            print(f"  {name:<28} " + "  ".join(
+                f"{side} {statistics.median(v):10.4g} ({len(v)} runs)"
+                if v else f"{side} {'-':>10} (0 runs)" for side, v in got.items()))
 
 
 def rows_of(record, side, seed):
     steal = record.get("host", {}).get("cpu_steal_share")
     return [{"side": side, "seed": seed, "workload": w, "steal": steal,
-             "entry": {k: e.get(k, {}) for k in ("end_to_end", "named", "failures")},
+             "trace": record.get("trace", 0),
+             "entry": {k: e.get(k, {}) for k in
+                       ("end_to_end", "named", "failures", "per_layer")},
              "failed": e.get("named", {}).get("failed_ops_ratio")}
             for w, e in record.get("workloads", {}).items()]
 
@@ -126,6 +149,9 @@ def main():
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--log", default="pairs.jsonl")
     ap.add_argument("--report", help="summarize a log instead of running")
+    ap.add_argument("--trace", action="store_true",
+                    help="after the pairs, one traced run per side; report "
+                         "its per-layer medians")
     a = ap.parse_args()
     if a.report:
         with open(a.report) as f:
@@ -135,20 +161,24 @@ def main():
         ap.error("give BASE and CHANGE checkouts, or --report LOG")
     dirs = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
     rows = []
-    for seed in seeds_of(a.seeds):
-        for side in (SIDES if seed % 2 else SIDES[::-1]):
-            record = run(dirs[side], a.workload, seed, a.seconds)
-            got = rows_of(record, side, seed)
-            if record["returncode"] != 0 or not got:
-                print(f"seed {seed} {side}: exit {record.get('exit')} "
-                      f"(return code {record['returncode']})", file=sys.stderr)
-            with open(a.log, "a") as f:
-                for r in got:
-                    f.write(json.dumps(r) + "\n")
-            rows += got
-            print(f"seed {seed} {side}: " + ", ".join(
-                f"{r['workload']} p50_ms {r['entry']['end_to_end']['p50_ms']:.4g}"
-                for r in got), flush=True)
+    seeds = seeds_of(a.seeds)
+    runs = [(seed, side, 0) for seed in seeds
+            for side in (SIDES if seed % 2 else SIDES[::-1])]
+    if a.trace:
+        runs += [(seeds[0], side, 1) for side in SIDES]
+    for seed, side, trace in runs:
+        record = run(dirs[side], a.workload, seed, a.seconds, trace)
+        got = rows_of(record, side, seed)
+        if record["returncode"] != 0 or not got:
+            print(f"seed {seed} {side}: exit {record.get('exit')} "
+                  f"(return code {record['returncode']})", file=sys.stderr)
+        with open(a.log, "a") as f:
+            for r in got:
+                f.write(json.dumps(r) + "\n")
+        rows += got
+        print(f"seed {seed} {side}{' traced' if trace else ''}: " + ", ".join(
+            f"{r['workload']} p50_ms {r['entry']['end_to_end']['p50_ms']:.4g}"
+            for r in got), flush=True)
     report(rows)
     return 0
 

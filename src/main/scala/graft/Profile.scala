@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
-import scala.collection.mutable
-
-/** Ad-hoc profiler: run one named SparkEntry query N times, print wall
-  * times and (optionally) the formatted plan and a per-stage breakdown —
-  * stage wall span, task-time sum, shuffle read/write bytes, GC — so the
+/** Ad-hoc profiler: run one named SparkEntry query three times in this
+  * JVM, print wall times and (optionally) the formatted plan and the last
+  * run's per-stage breakdown — stage wall span, task-time sum, GC, input,
+  * shuffle read/write bytes and spill, from [[StageMetrics]] — so the
   * expensive exchange/stage of a slow query is visible data, not a guess
-  * (guide §1: measure first, §7.1 stage view).
-  * Usage: runMain graft.Profile <queryName> [sfDir] [explain] [stages]
+  * (guide §1: measure first, §7.1 stage view). Local cores:
+  * `SPARK_GRAFT_CPUS`, 32 when unset.
+  * Usage: runMain graft.Profile <queryName> [sfDir] [explain] [stages] [noaqe]
   */
 object Profile {
-
-  /** Per-stage accumulator filled by the listener. */
-  final case class StageAgg(name: String, var submitted: Long = 0L,
-      var completed: Long = 0L, var taskTimeMs: Long = 0L,
-      var gcMs: Long = 0L, var shuffleReadB: Long = 0L,
-      var shuffleWriteB: Long = 0L, var inputB: Long = 0L,
-      var spillB: Long = 0L, var nTasks: Int = 0)
 
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -27,63 +18,15 @@ object Profile {
       args(1) else "/root/testdata/sf0.1"
     val showPlan = args.contains("explain")
     val showStages = args.contains("stages")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Tuning.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", (!args.contains("noaqe")).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
-    val jobs = mutable.LinkedHashMap.empty[Int, (Long, Long, Seq[Int])]
-    if (showStages) spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs(e.jobId) = (e.time, -1L, e.stageIds)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized {
-          jobs.get(e.jobId).foreach { case (t0, _, ids) =>
-            jobs(e.jobId) = (t0, e.time, ids)
-          }
-        }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.synchronized {
-          stages(e.stageInfo.stageId) =
-            StageAgg(e.stageInfo.name.takeWhile(_ != '\n').take(80),
-              submitted = System.currentTimeMillis())
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.synchronized {
-          stages.get(e.stageInfo.stageId).foreach { s =>
-            s.completed = System.currentTimeMillis()
-          }
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        stages.synchronized {
-          stages.get(e.stageId).foreach { s =>
-            val m = e.taskMetrics
-            if (m != null) {
-              s.taskTimeMs += m.executorRunTime
-              s.gcMs += m.jvmGCTime
-              s.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
-              s.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
-              s.inputB += m.inputMetrics.bytesRead
-              s.spillB += m.memoryBytesSpilled + m.diskBytesSpilled
-              s.nTasks += 1
-            }
-          }
-        }
-    })
+    val cpus = Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), 32)
+    val spark = Bench.session(sfDir, cpus, aqe = !args.contains("noaqe"))
+    val stages = new StageMetrics
+    if (showStages) spark.sparkContext.addSparkListener(stages)
 
     val fn = SparkEntry.queries(name)
     if (showPlan) fn(spark, sfDir).explain("formatted")
     for (i <- 1 to 3) {
-      if (showStages && i == 3) { stages.clear(); jobs.clear() }
+      if (i == 3) stages.clear()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       println(f"[profile] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
@@ -92,20 +35,13 @@ object Profile {
     if (showStages) {
       Thread.sleep(300) // drain async listener events
       println("[stages] last run, by wall span:")
-      val rows = stages.synchronized(stages.toSeq)
-      rows.sortBy { case (_, s) => -(s.completed - s.submitted) }
+      stages.snapshot().sortBy { case (_, s) => -s.wallMs }
         .take(30).foreach { case (id, s) =>
-          val wall = if (s.completed > 0) (s.completed - s.submitted) / 1e3
-            else -1.0
-          println(f"[stage $id%4d] wall=$wall%7.2fs taskSum=${s.taskTimeMs / 1e3}%8.2fs " +
+          println(f"[stage $id%4d] wall=${s.wallMs / 1e3}%7.2fs taskSum=${s.taskMs / 1e3}%8.2fs " +
             f"gc=${s.gcMs / 1e3}%6.2fs in=${s.inputB / 1e6}%8.1fMB " +
             f"sr=${s.shuffleReadB / 1e6}%8.1fMB sw=${s.shuffleWriteB / 1e6}%8.1fMB " +
-            f"spill=${s.spillB / 1e6}%8.1fMB tasks=${s.nTasks}%4d ${s.name}")
+            f"spill=${s.spillB / 1e6}%8.1fMB tasks=${s.tasks}%4d ${s.name}")
         }
-      val jrows = jobs.synchronized(jobs.toSeq)
-      println(s"[jobs] n=${jrows.size} " + jrows.map { case (id, (t0, t1, _)) =>
-        f"j$id=${if (t1 > 0) (t1 - t0) / 1e3 else -1.0}%.2fs"
-      }.mkString(" "))
     }
     spark.stop()
   }

@@ -47,7 +47,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val src = args(0); val dest = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), 16)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,9 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional extra args: restrict to the named queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle parallelism sized to the DATA, not cores ([[Tuning]]):
-    // derived from sfDir's on-disk bytes so scale rehearsals need no
-    // hand-tuned knob; env override still wins, AQE coalesces small
-    // stages back down so a high count costs nothing.
-    val shufflePartitions = Tuning.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffles sized to the data, AQE on ([[Bench.session]])
+    val spark = Bench.session(sfDir,
+      Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), 4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -2,90 +2,114 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the committed-baseline loader behind the uniform-contention
-  * detector ([[Bench.parseCommittedMeds]]). Round 11 parsed
-  * BENCH_FULL.json with a regex against the emitter's exact byte
-  * layout — any detail-format drift would have silently emptied the
-  * baseline map and degraded the detector without a trace. The parse is
-  * now a real JSON parse and the record emits `baseline_rows`, so this
-  * spec checks both directions: the CURRENT committed record loads
-  * (emitter ↔ parser lockstep), and every corruption mode yields an
-  * empty map (visible data, never a wrong baseline). */
+/** Pins the pure parts of the [[Bench]] harness: the contention rule, the
+  * child's row format, the reason a dead batch records, how its
+  * unreported queries re-run, and the one `SPARK_GRAFT_CPUS` parser. */
 class BenchBaselineSpec extends AnyFunSuite {
 
-  test("parses per-query meds out of a well-formed record") {
-    val text =
-      """{"metric":"total","value":1.0,
-        |"detail":{"q1_agg":{"med":0.25,"min":0.2,"max":0.3},
-        |"q9_window_topk":{"med":1.5,"err":null}},"nq":2}""".stripMargin
-    assert(Bench.parseCommittedMeds(text) ==
-      Map("q1_agg" -> 0.25, "q9_window_topk" -> 1.5))
+  /** /proc/stat and /proc/self/stat text for a 4-CPU host whose counters
+    * (USER_HZ ticks) stand at the given values. */
+  private def sample(user: Long, idle: Long, steal: Long,
+      self: Long): Option[Bench.CpuSample] =
+    Bench.parseCpu(
+      s"cpu  $user 0 0 $idle 0 0 0 $steal 0 0\ncpu0 1 0 0 1 0 0 0 0 0 0\n",
+      s"4242 (java main) S 1 4242 4242 0 -1 4194560 1 0 0 0 ${self - 1} 1 " +
+        "0 0 20 0 60 0 100 1000 100 0")
+
+  // one second of wall on 4 CPUs: 400 ticks in all
+  private val before = sample(user = 1000, idle = 5000, steal = 10,
+    self = 900)
+
+  test("contention rule: a quiet host is not flagged") {
+    // the JVM used 300 ticks of 400, the host 4 more (kernel, daemons)
+    val after = sample(1304, 5096, 10, 1200)
+    val share = Bench.otherCpuShare(before, after)
+    assert(share.exists(s => math.abs(s - 4.0 / 400) < 1e-9))
+    assert(!Bench.contended(share))
   }
 
-  test("the committed BENCH_FULL.json itself loads (emitter-parser " +
-      "lockstep)") {
-    val p = java.nio.file.Paths.get("BENCH_FULL.json")
-    assume(java.nio.file.Files.exists(p), "no committed record present")
-    val meds = Bench.parseCommittedMeds(java.nio.file.Files.readString(p))
-    assert(meds.size > 100,
-      s"committed record yielded only ${meds.size} baseline rows — " +
-        "emitter and parser have drifted apart")
-    assert(meds.contains("q1_agg"))
-    assert(meds.values.forall(m => m >= 0.0 && m < 1e4))
+  test("contention rule: hypervisor steal alone flags the row") {
+    // no other process ran, but other guests took 80 of the 400 ticks
+    val after = sample(1240, 5080, 90, 1140)
+    assert(Bench.otherCpuShare(before, after)
+      .exists(s => math.abs(s - 80.0 / 400) < 1e-9))
+    assert(Bench.contended(Bench.otherCpuShare(before, after)))
   }
 
-  test("every corruption mode yields an EMPTY baseline, never a wrong " +
-      "one") {
-    // detail key renamed
-    assert(Bench.parseCommittedMeds(
-      """{"details":{"q1":{"med":1.0}}}""").isEmpty)
-    // meds no longer numeric
-    assert(Bench.parseCommittedMeds(
-      """{"detail":{"q1":{"med":"1.0s"}}}""").isEmpty)
-    // med field renamed
-    assert(Bench.parseCommittedMeds(
-      """{"detail":{"q1":{"median":1.0}}}""").isEmpty)
-    // detail demoted to an array
-    assert(Bench.parseCommittedMeds(
-      """{"detail":[{"q1":{"med":1.0}}]}""").isEmpty)
-    // not JSON at all
-    assert(Bench.parseCommittedMeds("not json").isEmpty)
-    assert(Bench.parseCommittedMeds("").isEmpty)
+  test("contention rule: a co-tenant process flags the row") {
+    // a busy neighbour took 150 ticks of CPU the JVM would have used
+    val after = sample(1390, 5010, 10, 1140)
+    assert(Bench.otherCpuShare(before, after)
+      .exists(s => math.abs(s - 150.0 / 400) < 1e-9))
+    assert(Bench.contended(Bench.otherCpuShare(before, after)))
   }
 
-  test("partially-corrupt entries are skipped, intact ones load") {
-    val text =
-      """{"detail":{"q1":{"med":"oops"},"q2":{"med":2.5}}}"""
-    assert(Bench.parseCommittedMeds(text) == Map("q2" -> 2.5))
+  test("contention rule: an unreadable /proc/stat never flags") {
+    assert(Bench.parseCpu("", "4242 (java) S 1").isEmpty)
+    assert(Bench.parseCpu("intr 1 2 3\n", "").isEmpty)
+    val busy = sample(1390, 5010, 10, 1140)
+    assert(Bench.otherCpuShare(None, busy).isEmpty)
+    assert(Bench.otherCpuShare(before, None).isEmpty)
+    // no tick passed between the samples: no reading, not a zero one
+    assert(Bench.otherCpuShare(before, before).isEmpty)
+    assert(!Bench.contended(None))
   }
 
-  // Round-13: the vs-committed uniform-contention test is gated on the
-  // record's core count matching the session's AND a canary ratio ≤2×.
-  // A record from another machine/config mass-flagged 32 honest rows in
-  // r12 and the retry wall blew the driver's 32-core budget (rc=124).
-  test("vs-committed gate: fires only at same cpus on a comparably " +
-      "fast machine") {
-    // same cpus, canary within 2× → enabled
-    assert(Bench.vsCommittedAllowed(32, Some(32), Some(0.3), Some(0.5)))
-    // same cpus, machine uniformly 3× slower → disabled
-    assert(!Bench.vsCommittedAllowed(32, Some(32), Some(0.3), Some(0.95)))
-    // record taken at different core count → disabled
-    assert(!Bench.vsCommittedAllowed(8, Some(32), Some(0.3), Some(0.3)))
-    // record lacks a cpus field (pre-r13 format) → disabled
-    assert(!Bench.vsCommittedAllowed(32, None, Some(0.3), Some(0.3)))
-    // no canary on either side → can't calibrate → disabled
-    assert(!Bench.vsCommittedAllowed(32, Some(32), None, Some(0.3)))
-    assert(!Bench.vsCommittedAllowed(32, Some(32), Some(0.3), None))
-    // noise-dominated tiny canary baseline → disabled
-    assert(!Bench.vsCommittedAllowed(32, Some(32), Some(0.01), Some(0.02)))
+  test("a child's row round-trips, an error with tabs and newlines too") {
+    val ok = Bench.QResult("q1_agg", 0.123456789, 0.1, 0.2, 12L, 3456789L,
+      Some(0.0125), None)
+    val failed = Bench.QResult("q_injected_fail", 1e-4, 1e-4, 1e-4, 0L, 0L,
+      None, Some("RuntimeException: a\tb\nc\r\nd \\t e\\"))
+    for (r <- Seq(ok, failed)) {
+      val line = Bench.encodeRow(r)
+      assert(!line.exists(c => c == '\n' || c == '\r'))
+      assert(line.count(_ == '\t') == 7)
+      assert(Bench.decodeRow(line).contains(r))
+    }
+    // what is not a row: the meta line, a torn last line
+    assert(Bench.decodeRow("#meta\t12.5\t0.3").isEmpty)
+    assert(Bench.decodeRow(Bench.encodeRow(ok).take(20)).isEmpty)
+  }
+
+  test("a dead batch's reason gives the exit code or the timeout, and " +
+      "the log's last lines") {
+    val tail = Seq("25/10/19 12:00:01 WARN x", "# A fatal error")
+    val died = Bench.deadReason("batch6", Some(134), Some(300L), tail)
+    assert(died.startsWith("batch6 exited with code 134 before reporting"))
+    assert(died.endsWith("log tail:\n25/10/19 12:00:01 WARN x\n# A fatal error"))
+    val killed = Bench.deadReason("batch2-rerun1", None, Some(45L), tail)
+    assert(killed.startsWith("batch2-rerun1 timed out after 45 s"))
+    assert(killed.contains(tail.last))
+    assert(Bench.deadReason("probe", Some(1), None, Nil) ==
+      "probe exited with code 1 before reporting")
+  }
+
+  test("a dead batch re-runs its culprit alone and the rest together") {
+    val batch = Seq("q1", "q2", "q3", "q4", "q5")
+    assert(Bench.rerunGroups(batch, Set("q1", "q2")) ==
+      Seq(Seq("q3"), Seq("q4", "q5")))
+    // died on its last query: nothing else to re-run
+    assert(Bench.rerunGroups(batch, Set("q1", "q2", "q3", "q4")) ==
+      Seq(Seq("q5")))
+    // died before its first row
+    assert(Bench.rerunGroups(batch, Set.empty[String]) ==
+      Seq(Seq("q1"), Seq("q2", "q3", "q4", "q5")))
+    assert(Bench.rerunGroups(batch, batch.toSet).isEmpty)
   }
 
   test("SPARK_GRAFT_CPUS is one positive integer or the run fails") {
-    assert(Bench.parseCpus(None) == 16)
-    assert(Bench.parseCpus(Some("8")) == 8)
-    assert(Bench.parseCpus(Some(" 32 ")) == 32)
+    // each main keeps its own default: Bench and ScaleGen 16, Profile 32,
+    // Verify 4
+    for (default <- Seq(16, 32, 4))
+      assert(Bench.parseCpus(None, default) == default)
+    assert(Bench.parseCpus(Some("8"), 16) == 8)
+    assert(Bench.parseCpus(Some(" 32 "), 4) == 32)
     // each of these would have reached the record's "cpus" field as is
-    for (bad <- Seq("auto", "", "0", "-4", "2.5", "8 cores"))
-      intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+    for (bad <- Seq("auto", "", "0", "-4", "2.5", "8 cores")) {
+      val e = intercept[IllegalArgumentException](
+        Bench.parseCpus(Some(bad), 4))
+      assert(e.getMessage ==
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'")
+    }
   }
 }

@@ -4,7 +4,7 @@
 #   tools/run.sh graft.ScaleGen /root/testdata/sf0.1 tmp/scale_100x 100
 set -euo pipefail
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

@@ -65,12 +65,13 @@ object Bench {
     * `otherCpu` is the host's CPU share outside the measuring JVM during
     * the runs ([[otherCpuShare]]), None where /proc is unreadable.
     * `contended` marks a row whose first attempt [[contended]] flagged;
-    * `attempts` then carries every attempt's med (the reported row is the
-    * cleanest) so the discarded numbers stay on the record. */
+    * `attempts` then carries every attempt's (med, otherCpu) reading, the
+    * flagging one first (the reported row is the cleanest), so the
+    * discarded numbers stay on the record. */
   final case class QResult(name: String, med: Double, min: Double,
       max: Double, gcMs: Long, spillBytes: Long, otherCpu: Option[Double],
       err: Option[String], contended: Boolean = false,
-      attempts: Seq[Double] = Nil)
+      attempts: Seq[(Double, Option[Double])] = Nil)
 
   /** Per-child-JVM evidence, emitted as the `batches` array of
     * BENCH_FULL.json: wall, 1-min loadavg at start and end, the child's
@@ -475,12 +476,22 @@ object Bench {
       .filter(_._2.err.isEmpty).toMap
     rows.map { r =>
       if (!flagged.contains(r.name)) r
-      else {
-        val as = r +: again.get(r.name).toSeq
-        as.minBy(_.med).copy(contended = true, attempts = as.map(_.med))
-      }
+      else cleanest(r +: again.get(r.name).toSeq)
     }
   }
+
+  /** A flagged row as reported: its fastest attempt, marked `contended`,
+    * carrying every attempt's (med, otherCpu) in the order they ran. */
+  private[graft] def cleanest(attempts: Seq[QResult]): QResult =
+    attempts.minBy(_.med).copy(contended = true,
+      attempts = attempts.map(a => (a.med, a.otherCpu)))
+
+  /** The `attempts` array of a contended row's BENCH_FULL.json entry. */
+  private[graft] def attemptsJson(r: QResult): String =
+    r.attempts.map { case (med, other) =>
+      "{\"med\":" + f3(med) + ",\"other_cpu\":" +
+        other.map(f3).getOrElse("null") + "}"
+    }.mkString("[", ",", "]")
 
   // ───────────────────────── reporting ────────────────────────────────────
 
@@ -506,8 +517,7 @@ object Bench {
     val detail = results.map { r =>
       val e = r.err.map(m => "\"" + jsonEscape(m) + "\"").getOrElse("null")
       val cont = if (r.contended)
-        ",\"contended\":true,\"attempts\":[" +
-          r.attempts.map(f3).mkString(",") + "]"
+        ",\"contended\":true,\"attempts\":" + attemptsJson(r)
       else ""
       "\"" + r.name + "\":{\"med\":" + f3(r.med) + ",\"min\":" + f3(r.min) +
         ",\"max\":" + f3(r.max) + ",\"gc_ms\":" + r.gcMs +

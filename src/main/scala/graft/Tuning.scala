@@ -7,9 +7,8 @@ package graft
   * session config at a 100× rehearsal makes every shuffle partition
   * 100× the intended size and wide-row sorts die acquiring pages (the
   * first 100× sweep's `SparkOutOfMemoryError` class, SURVEY §9.4). The
-  * round-11 fix was a manual `SPARK_GRAFT_SHUFFLE_PARTITIONS` knob; the
-  * default is now derived from the input directory's on-disk size so no
-  * future scale point needs hand-tuning (VERDICT r11 item 3):
+  * count is derived from the input directory's on-disk size, so no scale
+  * point needs hand-tuning (VERDICT r11 item 3):
   *
   *   partitions = clamp(inputBytes / 3 MiB, cpus, 4096)
   *
@@ -21,20 +20,17 @@ package graft
   * derivation expansion puts the resulting shuffle partitions well under
   * executor task memory. Overcounting is cheap: AQE coalesces small
   * stages back down at runtime; undercounting is what OOMs. The 4096
-  * ceiling bounds scheduler overhead on a single machine; the explicit
-  * env override still wins everywhere.
+  * ceiling bounds scheduler overhead on a single machine.
   */
 object Tuning {
 
   private val BytesPerPartition: Long = 3L << 20
   private val MaxPartitions: Int = 4096
 
-  /** The default shuffle-partition count for a session reading `sfDir`:
-    * the env override if set, else [[partitionsForBytes]] of the
-    * directory's total file size. */
+  /** The shuffle-partition count for a session reading `sfDir`:
+    * [[partitionsForBytes]] of the directory's total file size. */
   def shufflePartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(partitionsForBytes(dirBytes(sfDir), cpus))
+    partitionsForBytes(dirBytes(sfDir), cpus)
 
   /** clamp(bytes / 3 MiB, cpus, 4096) — pure, spec-pinned. */
   private[graft] def partitionsForBytes(bytes: Long, cpus: Int): Int =

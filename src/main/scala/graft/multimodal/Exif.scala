@@ -1,7 +1,7 @@
 package graft.multimodal
 
 /** UDF return shape for EXIF extraction — boxed nullable fields (Janino
-  * codegen requirement, like ParsedDate/NameHit). */
+  * codegen requirement, like ParsedDate). */
 case class ExifData(latitude: java.lang.Double, longitude: java.lang.Double,
     dateTimeOriginal: String)
 

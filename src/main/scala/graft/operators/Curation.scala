@@ -769,21 +769,6 @@ object Curation {
         Seq("test" -> 0.05, "val" -> 0.05)))
   }
 
-  /** [[curateCorpus]] under [[CacheScope.scoped]] storage discipline:
-    * `use` consumes the curated corpus while the run's internal persists
-    * (exact-dedup table, kept set, the LSH shingle cache inside
-    * [[Dedup.minhashLshPortable]], …) are still warm, and every one of
-    * them — nested operators' included — is unpersisted before this
-    * returns. The cleanup handle for long-lived JVMs that compose heavy
-    * pipelines back to back; the one-shot driver contract can keep
-    * calling [[curateCorpus]] directly. */
-  def curateCorpusScoped[T](corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, qualityCol: String, minQuality: Long)(
-      use: DataFrame => T): T =
-    CacheScope.scoped(corpus.sparkSession)(
-      curateCorpus(corpus, benchmark, idCol, textCol, qualityCol,
-        minQuality))(use)
-
   /** Water-filling budget allocation: spread `budget` rows across sources
     * by capping every source at the level `c` where `Σ min(n_i, c)` fills
     * the budget — small sources pass through untouched, dominant sources

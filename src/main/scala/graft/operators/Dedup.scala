@@ -1000,41 +1000,4 @@ object Dedup {
         round(col("tp").cast("double") / col("n_cand"), 6).as("precision"),
         round(col("tp").cast("double") / col("n_truth"), 6).as("recall"))
   }
-
-  // ───────────────────── scoped storage variants ─────────────────────
-  // The dedup operators persist intermediates (signature tables, shingle
-  // caches, cell assignments) that live until session end — correct for
-  // one-shot drivers, a storage leak for long-lived JVMs running
-  // pipelines back to back. Each `*Scoped` form brackets one run in
-  // [[CacheScope.scoped]]: `use` consumes the result while the internal
-  // caches are warm, and every persist the run created (nested
-  // operators' included) is released before the call returns.
-
-  /** [[minhashLshPairs]] under scoped storage discipline. */
-  def minhashLshPairsScoped[T](docs: DataFrame, idCol: String,
-      textCol: String, shingleLen: Int = 5, numHashes: Int = 32,
-      numBands: Int = 8, jaccardThreshold: Double = 0.8,
-      maxBucket: Int = 4096)(use: DataFrame => T): T =
-    CacheScope.scoped(docs.sparkSession)(
-      minhashLshPairs(docs, idCol, textCol, shingleLen, numHashes,
-        numBands, jaccardThreshold, maxBucket))(use)
-
-  /** q51's pair→component→summary composition ([[ngramJaccardPairs]] →
-    * [[Components.clusterSummary]]) under scoped storage discipline —
-    * covers the component closure's localCheckpoint blocks too. */
-  def dedupClustersScoped[T](docs: DataFrame, idCol: String,
-      textCol: String, n: Int = 16, threshold: Double = 0.5)(
-      use: DataFrame => T): T =
-    CacheScope.scoped(docs.sparkSession)(
-      Components.clusterSummary(
-        ngramJaccardPairs(docs, idCol, textCol, n, threshold),
-        "id_a", "id_b"))(use)
-
-  /** [[semanticDedup]] under scoped storage discipline. */
-  def semanticDedupScoped[T](emb: DataFrame, idCol: String, vecCol: String,
-      numCells: Int = 64, threshold: Double = 0.95, iterations: Int = 2)(
-      use: DataFrame => T): T =
-    CacheScope.scoped(emb.sparkSession)(
-      semanticDedup(emb, idCol, vecCol, numCells, threshold,
-        iterations))(use)
 }

@@ -346,8 +346,8 @@ object EventAnalytics {
   /** Theil–Sen robust slope per group: the median of all pairwise slopes
     * `(y_j − y_i) / (x_j − x_i)` over ordered pairs with distinct x. The
     * pair generation is a group-keyed self-join — O(m²) per group — so the
-    * operator carries an explicit size contract like the BPE/NameMatcher
-    * ones: groups larger than `maxGroupSize` fail loudly at plan-build
+    * operator carries an explicit size contract like the BPE trainer's:
+    * groups larger than `maxGroupSize` fail loudly at plan-build
     * time rather than silently detonating a task. (The standard scale-out
     * is sub-sampling each group to √budget rows first; callers that need
     * it can pre-filter.) Median is `percentile(0.5)` — the linear-

@@ -358,8 +358,7 @@ object RecordLinkage {
     * ([[CacheScope.releaseOnFirstMaterialization]]) — the plain entry
     * points no longer leak storage into a long-lived JVM. Callers that
     * materialize the result repeatedly should bracket with
-    * [[CacheScope.scoped]] (see [[editDistanceSelfJoinScoped]]) to keep
-    * the cache warm across actions. */
+    * [[CacheScope.scoped]] to keep the cache warm across actions. */
   private def repCollapsedPairs(df: DataFrame, idCol: String,
       strCol: String, blockCols: Seq[String],
       variants: org.apache.spark.sql.expressions.UserDefinedFunction,
@@ -434,7 +433,6 @@ object RecordLinkage {
     require(threshold > 0.7 && threshold <= 1.0, "high-threshold operator")
     val verify = (a: Column, b: Column) =>
       round(graft.plans.GraftFunctions.jaro_winkler(a, b), 6) >= threshold
-    val blk = blockCols.map(col)
     val stats = df.agg(min(length(col(strCol))).as("mn"),
       max(length(col(strCol))).as("mx")).head()
     val uniform = !stats.isNullAt(0) && stats.getInt(0) == stats.getInt(1)
@@ -451,17 +449,7 @@ object RecordLinkage {
       if (delta == 0) 0L else maxBlockPopulation(df, blockCols)
     if (delta != 0 &&
         (maxBlock <= maxNaiveBlock || delta > maxDelta || delta < 0)) {
-      // probe side fanned out (round 13, guide §2.5): the broadcast-join
-      // pair scan inherits the probe's partitioning, so an unsplittable
-      // single-row-group scan ran the whole quadratic verify on ONE task
-      val a = graft.Tuning.fanOutSmallScan(df)
-        .select(blk :+ col(idCol).as("id_a") :+
-          col(strCol).as("_sa"): _*)
-      val b = df.select(blk :+ col(idCol).as("id_b") :+
-        col(strCol).as("_sb"): _*)
-      a.join(b, blockCols)
-        .filter(col("id_a") < col("id_b") && verify(col("_sa"), col("_sb")))
-        .select(blk ++ Seq(col("id_a"), col("id_b")): _*)
+      withinBlockPairs(df, idCol, strCol, blockCols, verify)
     } else {
       val d = delta
       val variants = udf((s: String) =>
@@ -476,15 +464,6 @@ object RecordLinkage {
     }
   }
 
-  /** Cost-chosen exact blocked edit-distance pairs — the NameMatcher-
-    * style physical contract: while the LARGEST block population is ≤
-    * `maxNaiveBlock`, the plain within-block pair scan wins (Σ block²
-    * bounded by blocks · maxNaiveBlock²; variant buckets can be LESS
-    * selective than small blocks — measured 15.7 s vs 3.4 s on sf0.1's
-    * 600-row blocks); beyond it, [[editDistanceSelfJoin]]'s deletion
-    * neighborhoods take over (measured 15.7 s vs 92 s quadratic on the
-    * 10× rehearsal's 6000-row blocks). Both paths are exact and
-    * identical row-for-row, so the result is scale-stable. */
   /** Largest block population, 0 on an empty input (max over zero rows is
     * NULL — a bare getLong would NPE instead of choosing the trivially
     * correct empty-result path). */
@@ -494,6 +473,15 @@ object RecordLinkage {
       .agg(count(lit(1)).as("_c"))
       .agg(coalesce(max("_c"), lit(0L))).head().getLong(0)
 
+  /** Cost-chosen exact blocked edit-distance pairs — an explicit
+    * physical contract: while the LARGEST block population is ≤
+    * `maxNaiveBlock`, the plain within-block pair scan wins (Σ block²
+    * bounded by blocks · maxNaiveBlock²; variant buckets can be LESS
+    * selective than small blocks — measured 15.7 s vs 3.4 s on sf0.1's
+    * 600-row blocks); beyond it, [[editDistanceSelfJoin]]'s deletion
+    * neighborhoods take over (measured 15.7 s vs 92 s quadratic on the
+    * 10× rehearsal's 6000-row blocks). Both paths are exact and
+    * identical row-for-row, so the result is scale-stable. */
   def blockedEditDistancePairs(df: DataFrame, idCol: String,
       strCol: String, tau: Int, blockCols: Seq[String],
       maxNaiveBlock: Long = 2000L): DataFrame = {
@@ -501,37 +489,24 @@ object RecordLinkage {
     if (maxBlock <= maxNaiveBlock) {
       val within = udf((a: String, b: String) =>
         graft.functions.HashKernels.levenshteinWithin(a, b, tau))
-      val blk = blockCols.map(col)
-      // probe side fanned out (round 13, guide §2.5): measured on q36 at
-      // sf0.1, the quadratic within-block scan ran 4.9 s on ONE task (the
-      // broadcast join keeps the unsplittable scan's single partition)
-      val a = graft.Tuning.fanOutSmallScan(df)
-        .select(blk :+ col(idCol).as("id_a") :+
-          col(strCol).as("_sa"): _*)
-      val b = df.select(blk :+ col(idCol).as("id_b") :+
-        col(strCol).as("_sb"): _*)
-      a.join(b, blockCols)
-        .filter(col("id_a") < col("id_b") && within(col("_sa"), col("_sb")))
-        .select(blk ++ Seq(col("id_a"), col("id_b")): _*)
+      withinBlockPairs(df, idCol, strCol, blockCols, within(_, _))
     } else editDistanceSelfJoin(df, idCol, strCol, tau, blockCols)
   }
 
-  /** [[editDistanceSelfJoin]] under [[CacheScope.scoped]] storage
-    * discipline — releases the internal `rows` persist once `use`
-    * returns (long-lived-JVM entry point). */
-  def editDistanceSelfJoinScoped[T](df: DataFrame, idCol: String,
-      strCol: String, tau: Int, blockCols: Seq[String])(
-      use: DataFrame => T): T =
-    CacheScope.scoped(df.sparkSession)(
-      editDistanceSelfJoin(df, idCol, strCol, tau, blockCols))(use)
-
-  /** [[jaroWinklerPairs]] under [[CacheScope.scoped]] storage
-    * discipline. */
-  def jaroWinklerPairsScoped[T](df: DataFrame, idCol: String,
-      strCol: String, threshold: Double, blockCols: Seq[String],
-      maxNaiveBlock: Long = 2000L, maxDelta: Int = 2)(
-      use: DataFrame => T): T =
-    CacheScope.scoped(df.sparkSession)(
-      jaroWinklerPairs(df, idCol, strCol, threshold, blockCols,
-        maxNaiveBlock, maxDelta))(use)
+  /** The plain within-block pair scan: every (id_a < id_b) pair of a
+    * block that passes `verify`. The probe side is fanned out: the
+    * broadcast-join pair scan inherits the probe's partitioning, so an
+    * unsplittable single-row-group scan ran the whole quadratic verify on
+    * ONE task (q36 at sf0.1: 4.9 s). */
+  private def withinBlockPairs(df: DataFrame, idCol: String,
+      strCol: String, blockCols: Seq[String],
+      verify: (Column, Column) => Column): DataFrame = {
+    val blk = blockCols.map(col)
+    val a = graft.Tuning.fanOutSmallScan(df)
+      .select(blk :+ col(idCol).as("id_a") :+ col(strCol).as("_sa"): _*)
+    val b = df.select(blk :+ col(idCol).as("id_b") :+ col(strCol).as("_sb"): _*)
+    a.join(b, blockCols)
+      .filter(col("id_a") < col("id_b") && verify(col("_sa"), col("_sb")))
+      .select(blk ++ Seq(col("id_a"), col("id_b")): _*)
+  }
 }

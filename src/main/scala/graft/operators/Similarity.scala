@@ -321,19 +321,6 @@ object Similarity {
           >= minRecall).as("recall_ok"))
   }
 
-  /** [[batchIvfTopK]] under [[CacheScope.scoped]] storage discipline:
-    * the internal cell-assignment persist (and anything nested) is
-    * released once `use` returns — the long-lived-JVM entry point; the
-    * one-shot driver contract can keep calling [[batchIvfTopK]]. */
-  def batchIvfTopKScoped[T](corpus: DataFrame, queries: DataFrame, k: Int,
-      numCells: Int = 64, nprobe: Int = 8, iterations: Int = 2,
-      corpusId: String = "vec_id", corpusVec: String = "embedding",
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      maxBlockRows: Int = 100000)(use: DataFrame => T): T =
-    CacheScope.scoped(corpus.sparkSession)(
-      batchIvfTopK(corpus, queries, k, numCells, nprobe, iterations,
-        corpusId, corpusVec, queryId, queryVec, maxBlockRows))(use)
-
   /** Per-label elementwise mean of an embedding column, in long format
     * (label, pos, mean) — class centroids for classifier probes, cluster
     * summaries, or SemDeDup cell seeds. posexplode → ONE partial-agg

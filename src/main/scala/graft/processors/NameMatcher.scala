@@ -1,139 +1,52 @@
 package graft.processors
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
-/** UDF return shape for a name-match. PUBLIC top-level with boxed nullable
-  * fields — Janino codegen requirement (see ParsedDate note). */
-case class NameHit(
-    taxonConceptID: String, acceptedName: String, taxonRank: String,
-    kingdom: String, phylum: String, classs: String, family: String,
-    genus: String, lft: java.lang.Long, rgt: java.lang.Long,
-    homonym: Boolean, fuzzy: Boolean)
-
-/** Broadcast taxon-name matcher: exact → kingdom-resolved homonym →
-  * blocked fuzzy (Levenshtein ≤ 2 within a genus-prefix block).
+/** Taxon-name matching: exact → kingdom-resolved homonym → blocked fuzzy
+  * (Levenshtein ≤ 2 within a genus-prefix block).
   *
   * Re-expresses the reference's name-matching path
-  * (`caches/ClassificationDAO.scala:42-206` in
-  * /root/reference/src/main/scala/au/org/ala/biocache/): exact match
-  * first; homonyms resolved with the supplied kingdom hint (unresolved →
-  * HOMONYM_ISSUE, no match); a fuzzy fallback catches single-edit
-  * misspellings the way the ALA taxamatch layer does. The whole names
-  * dimension is held in one broadcast structure — the same shape as the
-  * reference shipping its Lucene name index to every processing node;
-  * names dims are dimension-scale (millions of rows at most), never
-  * fact-scale.
+  * (`caches/ClassificationDAO.scala:42-206`): exact match first; homonyms
+  * resolved with the supplied kingdom hint (unresolved → HOMONYM_ISSUE, no
+  * match); a fuzzy fallback catches single- and double-edit misspellings
+  * the way the ALA taxamatch layer does.
+  *
+  * One join at every scale: the names dimension aggregates to one row per
+  * [[blockKey]] holding every entry of the block, and the records
+  * left-join it once on their own block key — AQE broadcasts the
+  * aggregate when it is small (the reference shipping its name index to
+  * every processing node) and shuffles it when it is large. Equal names
+  * share a block, so all three tiers resolve from that one array, and
+  * building the stage starts no Spark job.
   */
-final class NameMatcher private (entries: Array[NameMatcher.Entry])
-    extends Serializable {
-  import NameMatcher._
-
-  private val byName: java.util.HashMap[String, Array[Int]] = {
-    val m = new java.util.HashMap[String, List[Int]]()
-    entries.indices.foreach { i =>
-      m.merge(entries(i).nameLower, List(i), (a, b) => b ++ a)
-    }
-    val out = new java.util.HashMap[String, Array[Int]](m.size())
-    m.forEach((k, v) => out.put(k, v.toArray))
-    out
-  }
-
-  private val byBlock: java.util.HashMap[String, Array[Int]] = {
-    val m = new java.util.HashMap[String, List[Int]]()
-    entries.indices.foreach { i =>
-      m.merge(blockKey(entries(i).nameLower), List(i), (a, b) => b ++ a)
-    }
-    val out = new java.util.HashMap[String, Array[Int]](m.size())
-    m.forEach((k, v) => out.put(k, v.toArray))
-    out
-  }
-
-  private def hit(i: Int, homonym: Boolean, fuzzy: Boolean): NameHit = {
-    val e = entries(i)
-    NameHit(e.taxonConceptID, e.acceptedName, e.taxonRank, e.kingdom,
-      e.phylum, e.classs, e.family, e.genus, e.lft, e.rgt, homonym, fuzzy)
-  }
-
-  private val homonymHit =
-    NameHit(null, null, null, null, null, null, null, null, null, null,
-      homonym = true, fuzzy = false)
-
-  /** Resolve a raw scientific name (with optional kingdom hint). None when
-    * nothing matches; a hit with homonym=true and null ids when an
-    * unresolvable homonym was found. */
-  def lookup(rawName: String, kingdomHint: String): Option[NameHit] = {
-    if (rawName == null) return None
-    val n = rawName.trim.toLowerCase
-    if (n.isEmpty) return None
-    val exact = byName.get(n)
-    if (exact != null) {
-      if (exact.length == 1) return Some(hit(exact(0), homonym = false, fuzzy = false))
-      // homonym: resolve by kingdom hint; ambiguous or missing hint → flag
-      val kh = if (kingdomHint == null) "" else kingdomHint.trim.toLowerCase
-      val byKingdom = exact.filter(i => entries(i).kingdom != null &&
-        entries(i).kingdom.toLowerCase == kh)
-      if (byKingdom.length == 1)
-        return Some(hit(byKingdom(0), homonym = false, fuzzy = false))
-      return Some(homonymHit)
-    }
-    // fuzzy: single/double-edit candidates within the genus-prefix block
-    val candidates = byBlock.get(blockKey(n))
-    if (candidates == null) return None
-    var bestIdx = -1
-    var bestName: String = null
-    var c = 0
-    while (c < candidates.length) {
-      val i = candidates(c)
-      val cand = entries(i).nameLower
-      if (graft.functions.HashKernels.levenshteinWithin(n, cand, 2) &&
-        (bestName == null || cand < bestName)) {
-        bestIdx = i; bestName = cand
-      }
-      c += 1
-    }
-    if (bestIdx >= 0) Some(hit(bestIdx, homonym = false, fuzzy = true))
-    else None
-  }
-}
-
 object NameMatcher {
-  case class Entry(nameLower: String, taxonConceptID: String,
-      acceptedName: String, taxonRank: String, kingdom: String,
-      phylum: String, classs: String, family: String, genus: String,
-      lft: java.lang.Long, rgt: java.lang.Long)
+
+  /** The entry struct a block holds: `nameLower` first, so the smallest
+    * struct is the smallest name (the fuzzy tie-break), then the hit
+    * fields. phylum/classs are optional dim columns (the taxonomic-hints
+    * scope check reads them); absent ones read as null. */
+  private val EntryFields = Seq("nameLower" -> "string",
+    "taxonConceptID" -> "string", "acceptedName" -> "string",
+    "taxonRank" -> "string", "kingdom" -> "string", "phylum" -> "string",
+    "classs" -> "string", "family" -> "string", "genus" -> "string",
+    "lft" -> "bigint", "rgt" -> "bigint")
+  private val OptionalFields = Set("phylum", "classs")
+  private val EntryType =
+    EntryFields.map { case (f, t) => s"$f:$t" }.mkString("struct<", ",", ">")
+
+  /** `String.trim`'s set, U+0000–U+0020: Spark's one-argument `trim`
+    * strips spaces only, which would leave tab- or newline-padded names
+    * unmatched. */
+  private val Blank = (0 to 0x20).map(_.toChar).mkString
+
+  private def normalise(c: Column): Column =
+    lower(trim(c.cast("string"), Blank))
 
   /** Blocking key: first 4 chars of the genus word + initial of the
-    * epithet — a single edit rarely crosses it, keeping candidate lists
-    * tiny while catching the misspellings the reference's fuzzy layer
-    * targets. */
-  def blockKey(nameLower: String): String = {
-    val sp = nameLower.indexOf(' ')
-    if (sp < 0) nameLower.take(4)
-    else nameLower.take(math.min(4, sp)) + " " +
-      (if (sp + 1 < nameLower.length) nameLower.charAt(sp + 1) else ' ')
-  }
-
-  /** Entries above this bound skip the collect+broadcast matcher for the
-    * shuffled path below. At ~100-200 bytes per entry the bound caps the
-    * driver materialisation around 100-200 MB — the same explicit-contract
-    * style as the BPE trainer's ≤200k word-types bound. The ALA production
-    * name index (~5M names × 11 strings) always exceeds it and takes the
-    * shuffled path. */
-  val MaxBroadcastEntries: Int = 1000000
-
-  /** Effective bound — `graft.names.maxBroadcastEntries` system property
-    * overrides for tests that need to drive the shuffled path through the
-    * full pipeline without materialising a million-row dimension. */
-  private[processors] def maxBroadcastEntries: Int =
-    sys.props.get("graft.names.maxBroadcastEntries")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(MaxBroadcastEntries)
-
-  /** The blocking key as a Column — bit-for-bit the expression form of
-    * [[blockKey]], used by the shuffled fuzzy path. */
-  private def blockKeyCol(n: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
+    * epithet — a single edit rarely crosses it, keeping blocks tiny while
+    * catching the misspellings the reference's fuzzy layer targets. */
+  private def blockKey(n: Column): Column = {
     val sp = instr(n, " ") // 1-based position of the first space; 0 if none
     when(sp === 0, substring(n, 1, 4))
       .otherwise(concat(
@@ -142,128 +55,45 @@ object NameMatcher {
         when(length(n) > sp, n.substr(sp + 1, lit(1))).otherwise(lit(" "))))
   }
 
-  /** Shuffled classification lookup for names dimensions too large to
-    * collect + broadcast: the same exact → kingdom-resolved homonym →
-    * blocked-fuzzy semantics as [[NameMatcher.lookup]], expressed as two
-    * equi-joins — by `nameLower` for the exact/homonym tier, by
-    * [[blockKey]] for the fuzzy tier (only rows with no exact entry get a
-    * non-null block key, so the second join moves no bytes for matched
-    * rows) — with per-row candidate scans over the small collected block
-    * arrays. No driver materialisation anywhere; both joins shuffle by
-    * key and the dim side aggregates to one row per name/block.
-    *
-    * Parity caveat: when several dim entries share the minimal fuzzy
-    * nameLower, the broadcast kernel keeps the first in dim-collect order
-    * while this path breaks the tie by the remaining entry fields
-    * (deterministically) — both are "an arbitrary entry of the tied name".
-    *
-    * Appends `outCol` with the [[NameHit]]-shaped struct (null = no match).
-    */
-  def attachHitsDistributed(df: DataFrame,
-      nameForMatch: org.apache.spark.sql.Column,
-      kingdomRaw: org.apache.spark.sql.Column,
-      dim: DataFrame, outCol: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    def optCol(name: String) =
-      if (dim.columns.contains(name)) col(name).cast("string").as(name)
-      else lit(null).cast("string").as(name)
-    // nameLower FIRST: array_sort orders struct arrays field-by-field, so
-    // the fuzzy tie-break below is "lexicographically smallest name"
-    val prepared = dim.select(
-      lower(trim(col("nameLower").cast("string"))).as("nameLower"),
-      col("taxonConceptID").cast("string").as("taxonConceptID"),
-      col("acceptedName").cast("string").as("acceptedName"),
-      col("taxonRank").cast("string").as("taxonRank"),
-      col("kingdom").cast("string").as("kingdom"),
-      optCol("phylum"), optCol("classs"),
-      col("family").cast("string").as("family"),
-      col("genus").cast("string").as("genus"),
-      col("lft").cast("long").as("lft"),
-      col("rgt").cast("long").as("rgt"))
-    def entryStruct = struct(prepared.columns.map(col).toIndexedSeq: _*)
-    val byName = prepared.groupBy("nameLower")
-      .agg(collect_list(entryStruct).as("_ncands"))
-      .withColumnRenamed("nameLower", "_nmKey")
-    val byBlock = prepared
-      .withColumn("_bk", blockKeyCol(col("nameLower")))
-      .groupBy("_bk")
-      .agg(collect_list(entryStruct).as("_fcands"))
+  /** A hit struct from an entry struct (null entry → null fields). */
+  private def hit(e: Column, homonym: Boolean, fuzzy: Boolean): Column =
+    struct(EntryFields.tail.map { case (f, _) => e.getField(f).as(f) } :+
+      lit(homonym).as("homonym") :+ lit(fuzzy).as("fuzzy"): _*)
 
-    def toHit(c: Column, fuzzy: Boolean) = struct(
-      c.getField("taxonConceptID").as("taxonConceptID"),
-      c.getField("acceptedName").as("acceptedName"),
-      c.getField("taxonRank").as("taxonRank"),
-      c.getField("kingdom").as("kingdom"),
-      c.getField("phylum").as("phylum"),
-      c.getField("classs").as("classs"),
-      c.getField("family").as("family"),
-      c.getField("genus").as("genus"),
-      c.getField("lft").as("lft"),
-      c.getField("rgt").as("rgt"),
-      lit(false).as("homonym"), lit(fuzzy).as("fuzzy"))
-    val homonymStruct = struct(
-      lit(null).cast("string").as("taxonConceptID"),
-      lit(null).cast("string").as("acceptedName"),
-      lit(null).cast("string").as("taxonRank"),
-      lit(null).cast("string").as("kingdom"),
-      lit(null).cast("string").as("phylum"),
-      lit(null).cast("string").as("classs"),
-      lit(null).cast("string").as("family"),
-      lit(null).cast("string").as("genus"),
-      lit(null).cast("long").as("lft"),
-      lit(null).cast("long").as("rgt"),
-      lit(true).as("homonym"), lit(false).as("fuzzy"))
-
-    val withKey = df.withColumn("_nmKey",
-      nullif(lower(trim(nameForMatch)), lit("")))
-    val needFuzzy = col("_ncands").isNull && col("_nmKey").isNotNull
-    val joined = withKey
-      .join(byName, Seq("_nmKey"), "left")
-      .withColumn("_bk", when(needFuzzy, blockKeyCol(col("_nmKey"))))
-      .join(byBlock, Seq("_bk"), "left")
-
-    val kh = coalesce(lower(trim(kingdomRaw)), lit(""))
-    val khMatches = filter(col("_ncands"), c =>
-      c.getField("kingdom").isNotNull && lower(c.getField("kingdom")) === kh)
-    val exactResolved =
-      when(size(col("_ncands")) === 1,
-        toHit(element_at(col("_ncands"), 1), fuzzy = false))
-        .when(size(khMatches) === 1, toHit(element_at(khMatches, 1), fuzzy = false))
-        .otherwise(homonymStruct)
-    // levenshtein's threshold form returns -1 past the bound — the exact
-    // analogue of the kernel's early-exit levenshteinWithin
-    val fuzzyMatches = filter(col("_fcands"), c =>
-      levenshtein(col("_nmKey"), c.getField("nameLower"), 2) >= 0)
-    val fuzzyBest = element_at(array_sort(fuzzyMatches), 1)
-    val nm = when(col("_ncands").isNotNull, exactResolved)
-      .when(needFuzzy && coalesce(size(fuzzyMatches), lit(0)) > 0,
-        toHit(fuzzyBest, fuzzy = true))
-    joined.withColumn(outCol, nm)
-      .drop("_nmKey", "_ncands", "_bk", "_fcands")
-  }
-
-  def fromDataFrame(dim: DataFrame): NameMatcher = {
-    import org.apache.spark.sql.functions.{col, lit}
-    // phylum/classs are optional dim columns (used by the taxonomic-hints
-    // scope check); absent columns read as null
-    def optCol(name: String) =
-      if (dim.columns.contains(name)) col(name).cast("string")
-      else lit(null).cast("string")
-    val rows = dim.select(
-      col("nameLower").cast("string"), col("taxonConceptID").cast("string"),
-      col("acceptedName").cast("string"), col("taxonRank").cast("string"),
-      col("kingdom").cast("string"), optCol("phylum"), optCol("classs"),
-      col("family").cast("string"), col("genus").cast("string"),
-      col("lft").cast("long"), col("rgt").cast("long"))
-      .collect()
-    new NameMatcher(rows.map { r =>
-      Entry(
-        Option(r.getString(0)).map(_.trim.toLowerCase).orNull,
-        r.getString(1), r.getString(2), r.getString(3), r.getString(4),
-        r.getString(5), r.getString(6), r.getString(7), r.getString(8),
-        if (r.isNullAt(9)) null else Long.box(r.getLong(9)),
-        if (r.isNullAt(10)) null else Long.box(r.getLong(10)))
-    })
+  /** Appends `_nm`, the resolved hit struct (null = no match; null ids
+    * with homonym = true = an unresolvable homonym), to `df`: a blank or
+    * null `name` never matches; several exact entries resolve only when
+    * exactly one carries `kingdomHint`'s kingdom; with no exact entry the
+    * smallest entry within Levenshtein 2 of the name wins. */
+  def attachHits(df: DataFrame, name: Column, kingdomHint: Column,
+      dim: DataFrame): DataFrame = {
+    val entry = struct(EntryFields.map { case (f, t) =>
+      val c =
+        if (f == "nameLower") normalise(col(f))
+        else if (OptionalFields(f) && !dim.columns.contains(f)) lit(null)
+        else col(f)
+      c.cast(t).as(f)
+    }: _*)
+    val blocks = dim.groupBy(blockKey(normalise(col("nameLower"))).as("_bk"))
+      .agg(collect_list(entry).as("_block"))
+    val key = col("_nmKey")
+    val block = col("_block")
+    val isKey = (e: Column) => e.getField("nameLower") === key
+    val staged = df.withColumn("_nmKey", nullif(normalise(name), lit("")))
+      .join(blocks, blockKey(key) === col("_bk"), "left")
+      .withColumns(Map(
+        "_exact" -> filter(block, isKey),
+        // levenshtein's threshold form returns -1 past the bound
+        "_fuzzy" -> when(!exists(block, isKey), array_min(filter(block, e =>
+          levenshtein(key, e.getField("nameLower"), 2) >= 0)))))
+    val exact = col("_exact")
+    val kh = coalesce(normalise(kingdomHint), lit(""))
+    val byKingdom = filter(exact, e => lower(e.getField("kingdom")) === kh)
+    val nm = when(size(exact) === 1, hit(exact(0), false, false))
+      .when(size(exact) > 1, when(size(byKingdom) === 1,
+        hit(byKingdom(0), false, false))
+        .otherwise(hit(lit(null).cast(EntryType), true, false)))
+      .when(col("_fuzzy").isNotNull, hit(col("_fuzzy"), false, true))
+    staged.select(df.columns.toSeq.map(df.col) :+ nm.as("_nm"): _*)
   }
 }

@@ -21,8 +21,9 @@ import scala.collection.immutable.ListMap
   * stage whose later columns read its own first results (the kernel structs
   * `_ev`, `_lr`, `_nm`; the parsed misc fields) takes a second. Stage order
   * = expression dependency order; each dimension is one broadcast join (the
-  * previous snapshot one rowKey join), so the pipeline stays narrow and
-  * scales linearly with partitions.
+  * names dimension one block-key join, shuffled only when it is too large
+  * to broadcast; the previous snapshot one rowKey join), so the pipeline
+  * stays narrow and scales linearly with partitions.
   */
 object Processors {
 
@@ -332,10 +333,10 @@ object Processors {
 
   /** CLASS stage (reference `processor/ClassificationProcessor.scala:152-322`
     * / `caches/ClassificationDAO.scala:42-206`): exact → kingdom-resolved
-    * homonym → blocked fuzzy matching against a broadcast [[NameMatcher]]
-    * built from the names dimension (schema: nameLower, taxonConceptID,
-    * acceptedName, taxonRank, kingdom, family, genus, lft, rgt). The match
-    * metric ("exactMatch" / "fuzzyMatch") lands in
+    * homonym → blocked fuzzy matching ([[NameMatcher.attachHits]]) against
+    * the names dimension (schema: nameLower, taxonConceptID, acceptedName,
+    * taxonRank, kingdom, family, genus, lft, rgt; phylum and classs
+    * optional). The match metric ("exactMatch" / "fuzzyMatch") lands in
     * processed_nameMatchMetric, mirroring the reference's
     * name_match_metric index field. */
   def processClassification(df0: DataFrame, namesDim: DataFrame): DataFrame = {
@@ -348,24 +349,7 @@ object Processors {
       when(colOrNull(df0, "genus").isNotNull,
         nullif(concat_ws(" ", colOrNull(df0, "genus"),
           colOrNull(df0, "specificEpithet")), lit(""))))
-    // explicit scale contract: dims within MaxBroadcastEntries collect to
-    // the broadcast kernel (one in-memory probe per row); larger dims take
-    // the shuffled two-join path with identical semantics — never an
-    // unbounded driver materialisation. limit+count keeps the size probe
-    // itself cheap on huge dims.
-    val bound = NameMatcher.maxBroadcastEntries
-    val oversized = namesDim.limit(bound + 1).count() > bound
-    val withNm = if (oversized)
-      NameMatcher.attachHitsDistributed(df0, nameForMatch, kingdomRaw,
-        namesDim, "_nm")
-    else {
-      val matcher = NameMatcher.fromDataFrame(namesDim)
-      val bc = df0.sparkSession.sparkContext.broadcast(matcher)
-      val lookupUdf = udf((name: String, kingdom: String) =>
-        bc.value.lookup(name, kingdom)).withName("name_match")
-      df0.withColumn("_nm",
-        when(nameForMatch.isNotNull, lookupUdf(nameForMatch, kingdomRaw)))
-    }
+    val withNm = NameMatcher.attachHits(df0, nameForMatch, kingdomRaw, namesDim)
     withNm.withColumns(ListMap(
       "processed_taxonConceptID" -> col("_nm.taxonConceptID"),
       "processed_scientificName" -> col("_nm.acceptedName"),
@@ -434,8 +418,9 @@ object Processors {
   /** Full pipeline: stage order per reference `processor/Processors.scala:14`
     * (defaults first, attribution, classification before location, sensitive
     * generalisation after location). Produces processed_* columns, an
-    * `assertions` array, and the two kosher flags. One narrow projection +
-    * only broadcast joins — no fact-table shuffle at any stage. */
+    * `assertions` array, and the two kosher flags. One narrow projection
+    * per stage; the records shuffle only for a names dimension too large
+    * to broadcast. */
   def enrich(df: DataFrame, namesDim: Option[DataFrame] = None): DataFrame =
     enrichAll(df, Dimensions(names = namesDim))
 

@@ -97,6 +97,24 @@ class BenchBaselineSpec extends AnyFunSuite {
     assert(Bench.rerunGroups(batch, batch.toSet).isEmpty)
   }
 
+  test("a contended row reports its fastest attempt and keeps every " +
+      "reading, the one that flagged it included") {
+    def row(med: Double, other: Option[Double]) = Bench.QResult("q1", med,
+      med, med, 0L, 0L, other, None)
+    // the first attempt was flagged (40% of the host elsewhere) and lost
+    // to the re-run; its reading must stay on the record
+    val r = Bench.cleanest(Seq(row(2.5, Some(0.4)), row(1.2, Some(0.01))))
+    assert(r.med == 1.2 && r.otherCpu.contains(0.01) && r.contended)
+    assert(r.attempts == Seq((2.5, Some(0.4)), (1.2, Some(0.01))))
+    assert(Bench.attemptsJson(r) ==
+      """[{"med":2.500,"other_cpu":0.400},{"med":1.200,"other_cpu":0.010}]""")
+    // a re-run that did not start (cap spent) leaves the one reading;
+    // an unreadable /proc/stat writes null
+    val alone = Bench.cleanest(Seq(row(2.5, None)))
+    assert(alone.med == 2.5 && alone.contended)
+    assert(Bench.attemptsJson(alone) == """[{"med":2.500,"other_cpu":null}]""")
+  }
+
   test("SPARK_GRAFT_CPUS is one positive integer or the run fails") {
     // each main keeps its own default: Bench and ScaleGen 16, Profile 32,
     // Verify 4

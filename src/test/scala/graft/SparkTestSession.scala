@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** One shared local SparkSession for every suite (JVM-wide). */
 object SparkTestSession {
@@ -25,5 +28,30 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs started while `body` runs, counted by a listener that a sentinel
+    * job proves has caught up, and that is removed afterwards. */
+  def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val prop = "graft.test.jobsIn"
+    val tag = s"t${System.nanoTime()}"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(prop))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      try body finally sc.setLocalProperty(prop, null)
+      sc.setLocalProperty(prop, s"$tag-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(prop, null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$tag-end"), "listener never saw the sentinel job")
+      seen.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,7 +1,7 @@
 package graft.index
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +12,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{InterpretedSafeProjection, InterpretedUnsafeProjection, SafeProjection, UnsafeProjection}
 import org.apache.spark.sql.functions._
@@ -64,31 +63,6 @@ class KeyLookupSpec extends AnyFunSuite {
       .write.mode("overwrite")
       .option("parquet.block.row.count.limit", "10")
       .parquet(dir)
-
-  /** Jobs started while `body` runs, counted by a listener that a sentinel
-    * job proves has caught up, and that is removed afterwards. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val prop = "graft.keylookup.spec"
-    val tag = s"t${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(prop))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(prop, tag)
-      try body finally sc.setLocalProperty(prop, null)
-      sc.setLocalProperty(prop, s"$tag-end")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(prop, null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "listener never saw the sentinel job")
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("hit and miss on a writeIndex layout match the Spark filter") {
     val dir = tmp("sorted")
@@ -280,8 +254,8 @@ class KeyLookupSpec extends AnyFunSuite {
     Store.writeIndex(index, dir)
     val idx = spark.read.parquet(dir)
     Store.getByKey(idx, keys(1)).collect() // warm
-    assert(jobsIn(assert(Store.getByKey(idx, keys(2)).collect().length == 1)) == 0)
-    assert(jobsIn(assert(Store.getByKey(idx.select("id"), keys(2))
+    assert(SparkTestSession.jobsIn(assert(Store.getByKey(idx, keys(2)).collect().length == 1)) == 0)
+    assert(SparkTestSession.jobsIn(assert(Store.getByKey(idx.select("id"), keys(2))
       .collect().length == 1)) >= 1)
   }
 

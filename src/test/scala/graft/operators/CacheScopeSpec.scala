@@ -12,7 +12,7 @@ class CacheScopeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("curateCorpusScoped releases every persist the run created, " +
+  test("a scoped curateCorpus run releases every persist it created, " +
     "nested operators' included") {
     val docs = (1L to 30L).map { i =>
       val body =
@@ -29,8 +29,8 @@ class CacheScopeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
     var during: Set[Int] = Set.empty
-    val n = Curation.curateCorpusScoped(docs, bench, "doc_id", "text",
-      "quality", minQuality = 0L) { out =>
+    val n = CacheScope.scoped(spark)(Curation.curateCorpus(docs, bench,
+      "doc_id", "text", "quality", minQuality = 0L)) { out =>
       val cnt = out.count()
       during = sc.getPersistentRDDs.keySet.toSet -- before
       cnt
@@ -60,9 +60,8 @@ class CacheScopeSpec extends AnyFunSuite {
     assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 
-  // every heavy Dedup/Similarity/RecordLinkage entry point's scoped
-  // variant must (a) produce rows and (b) leave zero leaked RDDs —
-  // the round-10 extension of the curateCorpusScoped discipline
+  // every heavy Dedup/Similarity/RecordLinkage entry point run under
+  // CacheScope.scoped must (a) produce rows and (b) leave zero leaked RDDs
   test("scoped variants of the persist-heavy operators leak nothing") {
     val sc = spark.sparkContext
     val docs = (1L to 40L).map { i =>
@@ -81,33 +80,31 @@ class CacheScopeSpec extends AnyFunSuite {
     val queries = emb.limit(3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
 
-    def assertScoped[T](label: String)(run: (org.apache.spark.sql.DataFrame => Long) => Long): Unit = {
+    def assertScoped(label: String)(build: => org.apache.spark.sql.DataFrame): Unit = {
       spark.catalog.clearCache()
       val before = sc.getPersistentRDDs.keySet
-      val n = run(_.count())
+      val n = CacheScope.scoped(spark)(build)(_.count())
       assert(n >= 0, label)
       val leaked = sc.getPersistentRDDs.keySet.toSet -- before
       assert(leaked.isEmpty, s"$label leaked RDDs: $leaked")
     }
 
-    assertScoped("minhashLshPairsScoped")(use =>
-      Dedup.minhashLshPairsScoped(docs, "doc_id", "text",
-        jaccardThreshold = 0.5)(use))
-    assertScoped("dedupClustersScoped")(use =>
-      Dedup.dedupClustersScoped(docs, "doc_id", "text", n = 8,
-        threshold = 0.5)(use))
-    assertScoped("semanticDedupScoped")(use =>
-      Dedup.semanticDedupScoped(emb, "vec_id", "embedding", numCells = 2,
-        threshold = 0.9)(use))
-    assertScoped("batchIvfTopKScoped")(use =>
-      Similarity.batchIvfTopKScoped(emb, queries, k = 3, numCells = 2,
-        nprobe = 2)(use))
-    assertScoped("editDistanceSelfJoinScoped")(use =>
-      RecordLinkage.editDistanceSelfJoinScoped(names, "id", "nm", 1,
-        Seq("blk"))(use))
-    assertScoped("jaroWinklerPairsScoped")(use =>
-      RecordLinkage.jaroWinklerPairsScoped(names, "id", "nm", 0.96,
-        Seq("blk"), maxNaiveBlock = 1L)(use))
+    assertScoped("minhashLshPairs")(
+      Dedup.minhashLshPairs(docs, "doc_id", "text", jaccardThreshold = 0.5))
+    assertScoped("ngramJaccardPairs → clusterSummary")(
+      Components.clusterSummary(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 8, 0.5),
+        "id_a", "id_b"))
+    assertScoped("semanticDedup")(
+      Dedup.semanticDedup(emb, "vec_id", "embedding", numCells = 2,
+        threshold = 0.9))
+    assertScoped("batchIvfTopK")(
+      Similarity.batchIvfTopK(emb, queries, k = 3, numCells = 2, nprobe = 2))
+    assertScoped("editDistanceSelfJoin")(
+      RecordLinkage.editDistanceSelfJoin(names, "id", "nm", 1, Seq("blk")))
+    assertScoped("jaroWinklerPairs")(
+      RecordLinkage.jaroWinklerPairs(names, "id", "nm", 0.96, Seq("blk"),
+        maxNaiveBlock = 1L))
   }
 
   // round-11: the PLAIN linkage entry points self-release their internal

@@ -521,8 +521,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("enrichAll with the bulk dimensions: one projection per stage, the " +
       "records and the name match planned once") {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
+      LogicalPlan, Project}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_enrich").toString
@@ -554,15 +554,21 @@ class PlanShapeSpec extends AnyFunSuite {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
         if fs.location.rootPaths.exists(_.getName == leaf) => fs
     }.size
-    val nameMatches = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case u: ScalaUDF if u.udfName.contains("name_match") => u
-    })).size
+    // the names dimension's block arrays (NameMatcher's `_block`)
+    def blocks(plan: LogicalPlan) = plan.output.exists(_.name == "_block")
+    val nameAggregates = qe.optimizedPlan.collect {
+      case a: Aggregate if blocks(a) => a
+    }.size
+    val nameJoins = qe.optimizedPlan.collect {
+      case j: Join if blocks(j.right) => j
+    }.size
     assert(projects <= 40, s"$projects Project nodes in the analyzed plan")
     assert(scans(qe.optimizedPlan, "records") == 1,
       s"records scanned more than once:\n${qe.optimizedPlan}")
     assert(scans(qe.optimizedPlan, "last") == 1,
       s"previous snapshot joined more than once:\n${qe.optimizedPlan}")
-    assert(nameMatches == 1, s"$nameMatches name-match calls:\n${qe.optimizedPlan}")
+    assert(nameAggregates == 1 && nameJoins == 1, s"$nameAggregates names " +
+      s"aggregates, $nameJoins names joins:\n${qe.optimizedPlan}")
     assert(out.count() == 2)
   }
 }

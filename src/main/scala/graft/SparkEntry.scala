@@ -316,19 +316,20 @@ object SparkEntry {
         .orderBy("l_partkey")
     }),
 
-    // ── Dedup: MinHash+LSH near-dup candidate pairs (rows-only) ──
+    // ── Dedup: md5-MinHash LSH near-dup pairs at 5-word shingles, 32
+    //    hashes in 8 bands of 4, exact-Jaccard verify (q177's machinery
+    //    at other parameters) ──
     "q28_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        jaccardThreshold = 0.5)
+      Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text",
+          shingleWords = 5, numHashes = 32, rowsPerBand = 4, threshold = 0.5)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")),
 
     // ── Dedup: cross-corpus MinHash LSH — which "new" docs (odd ids)
     //    near-duplicate the standing corpus (even ids). Round 10: runs
     //    the PORTABLE md5 signature family (q201's machinery at
     //    different parameters — 4-word shingles, 16 hashes, 4 rows/band)
-    //    so the oracle replays the ENTIRE banding + exact-Jaccard verify;
-    //    the splitmix fast-path variant stays covered by q28 +
-    //    OperatorsSpec/Round8Spec ──
+    //    so the oracle replays the ENTIRE banding + exact-Jaccard verify ──
     "q139_cross_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.minhashCrossPortable(
@@ -341,7 +342,8 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
 
-    // ── Dedup: SimHash near-dup pairs (rows-only) ──
+    // ── Dedup: md5-SimHash near-dup pairs, Hamming ≤ 8 (q202's
+    //    fingerprints through the banded Hamming join) ──
     "q29_dedup_simhash" -> ((s, dir) =>
       Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 8)
@@ -3908,12 +3910,13 @@ object SparkEntry {
     }),
 
     // ── md5-SimHash fingerprints: every BIT replayed by the oracle's
-    //    (md5-uint64 >> b) & 1 vote algebra — the hash-gated companion of
-    //    the splitmix-based q29 ──
+    //    (md5-uint64 >> b) & 1 vote algebra; formatted as 16 hex digits
+    //    so signed/unsigned display cannot diverge ──
     "q202_simhash_portable" -> ((s, dir) =>
       graft.operators.Dedup.simhashPortable(
           t(s, dir, "documents"), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("simhash"))
+        .select(col("id").as("doc_id"),
+          lpad(lower(hex(col("sh"))), 16, "0").as("simhash"))
         .orderBy("doc_id")),
 
     // ── parquet bloom filters on the write path: point lookups skip row
@@ -4245,6 +4248,78 @@ object SparkEntry {
       |   AS token, cnt FROM e$nPass) t
       |GROUP BY token ORDER BY total DESC, token LIMIT 40""".stripMargin
   }
+
+  /** q177/q28 oracle: [[graft.operators.Dedup.minhashLshPortable]]
+    * replayed bit for bit — distinct word `shingleWords`-gram shingles,
+    * uint60(md5) signature minima over `numHashes` hashes, '_'-joined
+    * keys of `rowsPerBand` consecutive minima, band-bucket self-join,
+    * exact-Jaccard verify at `threshold`. */
+  private def minhashLshOracle(shingleWords: Int, numHashes: Int,
+      rowsPerBand: Int, threshold: Double): String =
+    raw"""WITH toks AS (
+      | SELECT doc_id, list_filter(
+      |   regexp_split_to_array(lower(trim(text)), '\s+'),
+      |   t -> len(t) > 0) AS ts
+      | FROM documents),
+      |sh AS (
+      | SELECT DISTINCT id, sh FROM (
+      |  SELECT doc_id AS id,
+      |   unnest(list_transform(range(1, len(ts) - ${shingleWords - 2}),
+      |    i -> array_to_string(list_slice(ts, i, i + ${shingleWords - 1}),
+      |     ' '))) AS sh
+      |  FROM toks WHERE len(ts) >= $shingleWords)),
+      |hv AS (
+      | SELECT id, h, min(CAST('0x' ||
+      |   substring(md5(h::VARCHAR || ':' || sh), 1, 15) AS UBIGINT)) AS mv
+      | FROM sh CROSS JOIN (SELECT unnest(range(0, $numHashes)) AS h) hh
+      | GROUP BY id, h),
+      |bk AS (
+      | SELECT id, h // $rowsPerBand AS band,
+      |  string_agg(mv::VARCHAR, '_' ORDER BY h) AS bkey
+      | FROM hv GROUP BY id, band),
+      |cand AS (
+      | SELECT DISTINCT a.id AS id_a, b.id AS id_b
+      | FROM bk a JOIN bk b
+      |  ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id),
+      |sz AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
+      |ix AS (
+      | SELECT c.id_a, c.id_b, count(*) AS i
+      | FROM cand c JOIN sh x ON x.id = c.id_a
+      |  JOIN sh y ON y.id = c.id_b AND y.sh = x.sh
+      | GROUP BY c.id_a, c.id_b),
+      |jj AS (
+      | SELECT ix.id_a, ix.id_b, ix.i::DOUBLE / (na.n + nb.n - ix.i) AS j
+      | FROM ix JOIN sz na ON na.id = ix.id_a
+      |  JOIN sz nb ON nb.id = ix.id_b)
+      |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
+      | CAST(round(j, 6) AS DOUBLE) AS jaccard FROM jj
+      |WHERE j >= $threshold ORDER BY id_a, id_b""".stripMargin
+
+  /** q202/q29 oracle CTEs ending in `fp(doc_id, sh)`: every
+    * [[graft.operators.Dedup.simhashPortable]] fingerprint bit from the
+    * (md5-uint64 >> b) & 1 weighted vote. */
+  private def simhashOracleCtes: String =
+    """WITH tokc AS (
+      | SELECT doc_id, tok, count(*) AS w FROM (
+      |  SELECT doc_id, unnest(list_filter(
+      |    regexp_split_to_array(lower(trim(text)), '\s+'),
+      |    t -> len(t) > 0)) AS tok
+      |  FROM documents) GROUP BY doc_id, tok),
+      |hv AS (
+      | SELECT doc_id, w,
+      |  CAST('0x' || substring(md5(tok), 1, 16) AS UBIGINT) AS h
+      | FROM tokc),
+      |bits AS (
+      | SELECT doc_id, b,
+      |  sum(CASE WHEN ((h >> CAST(b AS INTEGER)) & 1) = 1
+      |      THEN w ELSE -w END) AS vote
+      | FROM hv CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
+      | GROUP BY doc_id, b),
+      |fp AS (
+      | SELECT doc_id, CAST(sum(
+      |  CASE WHEN vote > 0 THEN CAST(1 AS UBIGINT) << CAST(b AS INTEGER)
+      |       ELSE CAST(0 AS UBIGINT) END) AS UBIGINT) AS sh
+      | FROM bits GROUP BY doc_id)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q97_bpe_merges" -> bpeMergesOracle(12),
@@ -7799,44 +7874,8 @@ object SparkEntry {
         |FROM seq WHERE b IS NOT NULL AND c IS NOT NULL
         |GROUP BY 1 HAVING count(*) >= 10
         |ORDER BY n DESC, pattern""".stripMargin,
-    // replays the md5-MinHash bit-for-bit: uint60(md5) signature mins,
-    // '_'-joined band keys, bucket join, exact-Jaccard verify
-    "q177_minhash_portable" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(
-        |   regexp_split_to_array(lower(trim(text)), '\s+'),
-        |   t -> len(t) > 0) AS ts
-        | FROM documents),
-        |sh AS (
-        | SELECT DISTINCT id, sh FROM (
-        |  SELECT doc_id AS id, unnest(list_transform(range(1, len(ts) - 1),
-        |    i -> array_to_string(list_slice(ts, i, i + 2), ' '))) AS sh
-        |  FROM toks WHERE len(ts) >= 3)),
-        |hv AS (
-        | SELECT id, h, min(CAST('0x' ||
-        |   substring(md5(h::VARCHAR || ':' || sh), 1, 15) AS UBIGINT)) AS mv
-        | FROM sh CROSS JOIN (SELECT unnest(range(0, 12)) AS h) hh
-        | GROUP BY id, h),
-        |bk AS (
-        | SELECT id, h // 3 AS band,
-        |  string_agg(mv::VARCHAR, '_' ORDER BY h) AS bkey
-        | FROM hv GROUP BY id, band),
-        |cand AS (
-        | SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        | FROM bk a JOIN bk b
-        |  ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id),
-        |sz AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
-        |ix AS (
-        | SELECT c.id_a, c.id_b, count(*) AS i
-        | FROM cand c JOIN sh x ON x.id = c.id_a
-        |  JOIN sh y ON y.id = c.id_b AND y.sh = x.sh
-        | GROUP BY c.id_a, c.id_b),
-        |jj AS (
-        | SELECT ix.id_a, ix.id_b, ix.i::DOUBLE / (na.n + nb.n - ix.i) AS j
-        | FROM ix JOIN sz na ON na.id = ix.id_a
-        |  JOIN sz nb ON nb.id = ix.id_b)
-        |SELECT id_a, id_b, round(j, 6) AS jaccard FROM jj
-        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin,
+    "q177_minhash_portable" -> minhashLshOracle(3, 12, 3, 0.5),
+    "q28_dedup_minhash" -> minhashLshOracle(5, 32, 4, 0.5),
     // same signatures/candidates as q177 plus exact ground truth
     // (inverted-index pairs), confusion counted over the full outer join
     "q178_lsh_eval" ->
@@ -8462,29 +8501,19 @@ object SparkEntry {
         |  JOIN szp nb ON nb.id = ix.id_b)
         |SELECT id_a, id_b, round(j, 6) AS jaccard FROM jj
         |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-    // every fingerprint bit from the (md5-uint64 >> b) & 1 weighted vote
-    "q202_simhash_portable" ->
-      """WITH tokc AS (
-        | SELECT doc_id, tok, count(*) AS w FROM (
-        |  SELECT doc_id, unnest(list_filter(
-        |    regexp_split_to_array(lower(trim(text)), '\s+'),
-        |    t -> len(t) > 0)) AS tok
-        |  FROM documents) GROUP BY doc_id, tok),
-        |hv AS (
-        | SELECT doc_id, w,
-        |  CAST('0x' || substring(md5(tok), 1, 16) AS UBIGINT) AS h
-        | FROM tokc),
-        |bits AS (
-        | SELECT doc_id, b,
-        |  sum(CASE WHEN ((h >> CAST(b AS INTEGER)) & 1) = 1
-        |      THEN w ELSE -w END) AS vote
-        | FROM hv CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
-        | GROUP BY doc_id, b)
-        |SELECT doc_id, lpad(lower(hex(CAST(sum(
-        |  CASE WHEN vote > 0 THEN CAST(1 AS UBIGINT) << CAST(b AS INTEGER)
-        |       ELSE CAST(0 AS UBIGINT) END) AS UBIGINT))), 16, '0')
-        |  AS simhash
-        |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q202_simhash_portable" -> (simhashOracleCtes +
+      """
+        |SELECT doc_id, lpad(lower(hex(sh)), 16, '0') AS simhash
+        |FROM fp ORDER BY doc_id""".stripMargin),
+    // all fingerprint pairs within Hamming 8, no banding
+    "q29_dedup_simhash" -> (simhashOracleCtes +
+      """
+        |SELECT CAST(a.doc_id AS BIGINT) AS id_a,
+        | CAST(b.doc_id AS BIGINT) AS id_b,
+        | CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
+        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 8
+        |ORDER BY id_a, id_b""".stripMargin),
     "q203_parquet_bloom" ->
       """SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id IN (7, 99, 321) ORDER BY doc_id""".stripMargin,

@@ -56,72 +56,12 @@ object HashKernels {
     seen.toArray(new Array[String](seen.size))
   }
 
-  /** Distinct word n-gram shingles over whitespace tokens. */
-  def wordShingles(text: String, n: Int): Array[String] = {
-    val toks = normalize(text).split(' ')
-    if (toks.length < n) return Array(toks.mkString(" "))
-    val seen = new java.util.LinkedHashSet[String](toks.length * 2)
-    var i = 0
-    while (i + n <= toks.length) {
-      seen.add(toks.slice(i, i + n).mkString(" ")); i += 1
-    }
-    seen.toArray(new Array[String](seen.size))
-  }
-
-  /** MinHash signature: for each of numHashes virtual permutations, the min
-    * of mix64(base ^ seed) over the shingle set. */
-  def minhash(shingles: Array[String], numHashes: Int): Array[Long] = {
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    val it = shingles.iterator
-    while (it.hasNext) {
-      val base = hash64(it.next())
-      var i = 0
-      while (i < numHashes) {
-        val h = mix64(base ^ (i.toLong * 0xC2B2AE3D27D4EB4FL))
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
-    sig
-  }
-
-  /** LSH band hashes over a minhash signature: band b = mix of its
-    * rowsPerBand consecutive signature values. */
-  def bandHashes(sig: Array[Long], numBands: Int): Array[Long] = {
-    val rowsPerBand = sig.length / numBands
-    Array.tabulate(numBands) { b =>
-      var h = 0x9E3779B97F4A7C15L * (b + 1)
-      var i = b * rowsPerBand
-      val end = i + rowsPerBand
-      while (i < end) { h = mix64(h ^ sig(i)); i += 1 }
-      h
-    }
-  }
-
   /** Fraction of equal signature positions — the Jaccard estimate. */
   def signatureSimilarity(a: Seq[Long], b: Seq[Long]): Double = {
     var eq = 0; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
     eq.toDouble / n
-  }
-
-  /** 64-bit SimHash: per-bit vote over shingle hashes. */
-  def simhash(shingles: Array[String]): Long = {
-    val votes = new Array[Int](64)
-    val it = shingles.iterator
-    while (it.hasNext) {
-      val h = hash64(it.next())
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
   }
 
   /** Distinct hashed character shingles: set semantics identical to
@@ -149,9 +89,9 @@ object HashKernels {
   }
 
   /** Distinct hashed word n-gram shingles: set semantics identical to
-    * `wordShingles` up to 64-bit hash collisions, carrying 8 bytes per gram
-    * instead of the n-word string — the explode+join sides of
-    * decontamination shuffle a fraction of the bytes. */
+    * the distinct word n-gram set up to 64-bit hash collisions, carrying
+    * 8 bytes per gram instead of the n-word string — the explode+join
+    * sides of decontamination shuffle a fraction of the bytes. */
   def wordShinglesHashed(text: String, n: Int): Array[Long] = {
     val toks = normalize(text).split(' ')
     if (toks.length < n) return Array(hash64(toks.mkString(" ")))
@@ -301,7 +241,6 @@ object HashKernels {
     prev(m) <= k
   }
 
-  /** Cosine similarity over float vectors (computed in double). */
   /** Array overload — avoids the per-call Array→IndexedSeq copy in the
     * k-means training loop and assignment UDF hot paths. */
   def cosine(a: Array[Float], b: Array[Float]): Double = {
@@ -317,6 +256,7 @@ object HashKernels {
     if (denom == 0.0) 0.0 else dot / denom
   }
 
+  /** Cosine similarity over float vectors (computed in double). */
   def cosine(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0

@@ -130,16 +130,9 @@ object TextFunctions {
         i => norm.substr(i, lit(n)))))
   }
 
-  /** Word n-gram shingles over whitespace tokens. Inline convenience form
-    * — hot paths should stage the split and call [[wordNgramsOfTokens]]
-    * (see its scaladoc for the no-CSE cost of this inline shape). */
-  def wordShingles(text: Column, n: Int): Column =
-    wordNgramsOfTokens(split(lower(trim(text)), "\\s+"), n,
-      distinctGrams = true)
-
   /** Word n-grams over an ALREADY-SPLIT token array column. Callers stage
     * the `split` in its own projection first — HOFs are interpreted with
-    * no CSE, so the inline `wordShingles`/`wordNgramsAll` forms re-run
+    * no CSE, so the inline `wordNgramsAll` form re-runs
     * split() once per PRODUCED GRAM (the `slice(toks, …)` lambda body
     * re-evaluates its child); over a staged attribute the array
     * materialises once per row. Same output, ~O(tokens) instead of
@@ -154,7 +147,7 @@ object TextFunctions {
   }
 
   /** Word n-grams WITHOUT de-duplication (positional) — the multiset the
-    * repetition filters need; `wordShingles` collapses repeats. Inline
+    * repetition filters need; `distinctGrams` collapses repeats. Inline
     * convenience form — hot paths stage the split (see
     * [[wordNgramsOfTokens]]). */
   def wordNgramsAll(text: Column, n: Int): Column =

@@ -241,14 +241,6 @@ object IndexSupport {
     ("year", "year", ParsedOnly),
     ("year", "raw_occurrence_year", RawOnly))
 
-  /** P2 projection: enriched record → flat search schema. Table-driven from
-    * `indexFields`; derived fields (point rounding grid, latLong string,
-    * occurrence year/decade, name+lsid concatenations, assertion buckets,
-    * kosher flags, sensitive columns) are built once at the end.
-    * `layerIds` adds the reference's dynamic el/cl layer columns
-    * (`index/SolrIndexDAO.scala:173-181`): one column per sampled layer id,
-    * numeric (double) for `el*`, string for `cl*`, sourced from the
-    * record's `cl` sample map. */
   /** Misc key → typed dynamic index column, reference suffix convention
     * (`Store.scala:695-719`: user fields keep an explicit `_i`/`_d` suffix,
     * anything else becomes a `_s` string field;
@@ -261,6 +253,14 @@ object IndexSupport {
     else v.as(s"${key}_s")
   }
 
+  /** P2 projection: enriched record → flat search schema. Table-driven from
+    * `indexFields`; derived fields (point rounding grid, latLong string,
+    * occurrence year/decade, name+lsid concatenations, assertion buckets,
+    * kosher flags, sensitive columns) are built once at the end.
+    * `layerIds` adds the reference's dynamic el/cl layer columns
+    * (`index/SolrIndexDAO.scala:173-181`): one column per sampled layer id,
+    * numeric (double) for `el*`, string for `cl*`, sourced from the
+    * record's `cl` sample map. */
   def project(enriched: DataFrame, layerIds: Seq[String] = Nil,
       miscKeys: Seq[String] = Nil): DataFrame = {
     val base = shouldIndex(enriched)

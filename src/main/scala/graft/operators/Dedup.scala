@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import graft.plans.GraftFunctions.{containment_long, cosine_sim,
-  jaccard_long, minhash_md5, sig_sim}
+  jaccard_long, minhash_md5}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -98,163 +98,23 @@ object Dedup {
     docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** MinHash + LSH near-duplicate candidate pairs.
-    * Pipeline: shingle → minhash(numHashes) + band hashes (one kernel pass) →
-    * collapse identical signatures to one representative → explode tiny
-    * (rep, band, bandHash) rows → bounded self-join within band buckets →
-    * verify estimated Jaccard ≥ threshold → expand back to id pairs.
-    * The band join is an equi-join on (band, bandHash): shuffle is by bucket,
-    * never all-pairs; exploded rows carry no arrays, so the join side stays
-    * bytes-per-row small.
-    *
-    * Degenerate-input safety: identical documents share a signature, so a
-    * corpus of N copies would put N rows in every band bucket (N² pairs in
-    * one task). Collapsing to one representative per distinct signature
-    * before banding removes that entirely — identical-signature groups pair
-    * through [[boundedSelfPairs]] at est_jaccard 1.0 — and residual hot
-    * buckets of distinct signatures get the same per-task bound. Output is
-    * row-for-row what the naive band self-join would produce.
-    */
-  def minhashLshPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 5, numHashes: Int = 32, numBands: Int = 8,
-      jaccardThreshold: Double = 0.8, maxBucket: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val mhb = udf { (text: String) =>
-      val sig = graft.functions.HashKernels.minhash(
-        graft.functions.HashKernels.charShingles(text, shingleLen), numHashes)
-      (sig, graft.functions.HashKernels.bandHashes(sig, numBands))
-    }
-    // the signature table feeds four plan branches (representative table,
-    // member expansion, equal-signature pairing); persist so the minhash
-    // kernel runs once per row, not once per branch
-    val sig = graft.Tuning.fanOutSmallScan(docs)
-      .select(col(idCol).as("id"), mhb(col(textCol)).as("s"))
-      .select(col("id"), col("s._1").as("sig"), col("s._2").as("bands"))
-      .withColumn("rep",
-        min(col("id")).over(Window.partitionBy(col("sig"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val repTable = sig.filter(col("id") === col("rep"))
-      .select(col("rep"), col("sig"), col("bands"))
-    val members = sig.select(col("rep"), col("id"))
-
-    val banded = repTable.select(col("rep"),
-      posexplode(col("bands")).as(Seq("band", "bandHash")))
-    val candidates =
-      boundedSelfPairs(banded, Seq("band", "bandHash"), "rep", maxBucket)
-        .distinct()
-
-    val verified = candidates
-      .join(repTable.select(col("rep").as("rep_a"), col("sig").as("sig_a")),
-        Seq("rep_a"))
-      .join(repTable.select(col("rep").as("rep_b"), col("sig").as("sig_b")),
-        Seq("rep_b"))
-      .select(col("rep_a"), col("rep_b"),
-        sig_sim(col("sig_a"), col("sig_b")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= jaccardThreshold)
-    val cross = verified
-      .join(members.select(col("rep").as("rep_a"), col("id").as("_ia")),
-        Seq("rep_a"))
-      .join(members.select(col("rep").as("rep_b"), col("id").as("_ib")),
-        Seq("rep_b"))
-      .select(least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"), col("est_jaccard"))
-    // identical signatures estimate Jaccard 1.0 by construction
-    val eq = boundedSelfPairs(members, Seq("rep"), "id", maxBucket)
-      .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard"))
-      .filter(lit(1.0) >= jaccardThreshold)
-    cross.unionByName(eq)
-  }
-
-  /** Cross-corpus MinHash+LSH near-duplicate pairs: which `probe` docs
-    * near-duplicate something already in `corpus` — the "dedup the new
-    * crawl against the existing training set" operation, which a
-    * self-join dedup cannot express without unioning the corpora and
-    * re-pairing the (already-deduped) corpus against itself.
-    *
-    * Same banded equi-join scale shape as [[minhashLshPairs]]: each side
-    * is banded independently, the join shuffles by (band, bandHash)
-    * bucket — never all-pairs — and at 100 TB the (typically much
-    * smaller) probe side's banded rows broadcast when they fit. Both
-    * sides collapse identical signatures to one representative before
-    * banding (the [[minhashLshPairs]] degenerate-input fix: a crawl full
-    * of identical boilerplate pages puts ONE row per band bucket, not one
-    * per copy); residual skew of distinct signatures sharing a bucket is
-    * partition-level and AQE's skew-join split handles it. Output:
-    * (corpus_id, probe_id, est_jaccard), distinct pairs.
-    */
-  def minhashLshPairsAgainst(
-      corpus: DataFrame, probe: DataFrame,
-      idCol: String, textCol: String,
-      shingleLen: Int = 5, numHashes: Int = 32, numBands: Int = 8,
-      jaccardThreshold: Double = 0.8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val mhb = udf { (text: String) =>
-      val sig = graft.functions.HashKernels.minhash(
-        graft.functions.HashKernels.charShingles(text, shingleLen), numHashes)
-      (sig, graft.functions.HashKernels.bandHashes(sig, numBands))
-    }
-    def sigTable(docs: DataFrame) = graft.Tuning.fanOutSmallScan(docs)
-      .select(col(idCol).as("id"), mhb(col(textCol)).as("s"))
-      .select(col("id"), col("s._1").as("sig"), col("s._2").as("bands"))
-      .withColumn("rep", min(col("id")).over(Window.partitionBy(col("sig"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigC = sigTable(corpus)
-    val sigP = sigTable(probe)
-    def repTable(sig: DataFrame) = sig.filter(col("id") === col("rep"))
-    def banded(sig: DataFrame, as: String) = repTable(sig)
-      .select(col("rep").as(as),
-        posexplode(col("bands")).as(Seq("band", "bandHash")))
-    val repCandidates = banded(sigC, "corpus_rep")
-      .join(banded(sigP, "probe_rep"), Seq("band", "bandHash"))
-      .select("corpus_rep", "probe_rep").distinct()
-    // verify on REP pairs (one est per signature pair), expand to id pairs
-    // only for the survivors — duplicate-heavy corpora verify once per
-    // distinct-content pair instead of once per copy pair
-    val verified = repCandidates
-      .join(repTable(sigC).select(col("rep").as("corpus_rep"),
-        col("sig").as("sig_c")), Seq("corpus_rep"))
-      .join(repTable(sigP).select(col("rep").as("probe_rep"),
-        col("sig").as("sig_p")), Seq("probe_rep"))
-      .select(col("corpus_rep"), col("probe_rep"),
-        sig_sim(col("sig_c"), col("sig_p")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= jaccardThreshold)
-    verified
-      .join(sigC.select(col("rep").as("corpus_rep"), col("id").as("corpus_id")),
-        Seq("corpus_rep"))
-      .join(sigP.select(col("rep").as("probe_rep"), col("id").as("probe_id")),
-        Seq("probe_rep"))
-      .select("corpus_id", "probe_id", "est_jaccard")
-  }
-
-  /** 64-bit SimHash from word shingles: weighted bit-vote over shingle
-    * hashes, expressed with higher-order functions. */
-  /** (id, simhash) for each document: text → word shingles → one-pass
-    * bit-vote kernel (`HashKernels.simhash`). */
-  def simhashes(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 2): DataFrame = {
-    val sh = udf((text: String) => graft.functions.HashKernels.simhash(
-      graft.functions.HashKernels.wordShingles(text, shingleLen)))
-    docs.select(col(idCol).as("id"), sh(col(textCol)).as("sh"))
-  }
-
-  /** SimHash near-duplicate pairs: block on bit-bands of the simhash,
-    * verify Hamming distance ≤ maxHamming.
+  /** SimHash near-duplicate pairs: the [[simhashPortable]] fingerprints
+    * through [[hammingPairsOfSignatures]] — block on bit-bands of the
+    * fingerprint, verify Hamming distance ≤ maxHamming. Output:
+    * (id_a, id_b, hamming).
     *
     * Recall bound (pigeonhole): with `numBands` bands, a pair with at most
     * `numBands - 1` differing bits leaves at least one band untouched, so
     * the banded equi-join is guaranteed to produce the candidate. Bands
-    * default to `maxHamming + 1` to make the stated threshold lossless —
+    * are `maxHamming + 1` to make the stated threshold lossless —
     * 4 bands for the reference's Hamming ≤ 3 is the classic Manku et al.
     * split; more bands mean shorter band keys and therefore larger buckets,
-    * so at very large corpora prefer a smaller maxHamming over more bands
+    * so at very large corpora prefer a smaller maxHamming
     * (bucket size grows as n / 2^(64/numBands)). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, numBandsOverride: Option[Int] = None,
-      maxBucket: Int = 4096): DataFrame = {
-    hammingPairsOfSignatures(simhashes(docs, idCol, textCol),
-      maxHamming, numBandsOverride, maxBucket)
-  }
+      maxHamming: Int = 3): DataFrame =
+    hammingPairsOfSignatures(simhashPortable(docs, idCol, textCol),
+      maxHamming)
 
   /** Banded Hamming-distance pair join over ANY 64-bit signature table
     * (`id`, `sh`) — the engine behind [[simhashPairs]], reused for image
@@ -273,9 +133,9 @@ object Dedup {
     */
   def hammingPairsOfSignatures(sigIn: DataFrame, maxHamming: Int,
       numBandsOverride: Option[Int] = None, maxBucket: Int = 4096): DataFrame = {
-    // persisted for the same reason as the minhash signature table: the
-    // signature computation (simhash / image-decode UDF) feeds the distinct
-    // pass, both expansion-join sides and the equal-signature pairing
+    // persisted: the signature computation (simhash / image-decode UDF)
+    // feeds the distinct pass, both expansion-join sides and the
+    // equal-signature pairing
     val sh = sigIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val numBands = numBandsOverride.getOrElse(maxHamming + 1)
     require(numBands >= 1 && numBands <= 64, "numBands must be in [1, 64]")
@@ -518,17 +378,18 @@ object Dedup {
   }
 
   // ───────────────────────── portable (md5) MinHash ─────────────────────────
-  // The splitmix64-based MinHash above is the fast path; this variant derives
-  // every hash from md5 so the ENTIRE approximate pipeline — signatures, band
-  // keys, bucket join, exact-Jaccard verify — is bit-reproducible on any
-  // engine with an md5 function. That turns LSH from a "rows-only, trust the
-  // spec" operator into a hash-gated one: an external oracle can replay the
-  // same bucketing and must land on identical candidate pairs.
+  // Every MinHash and SimHash hash derives from md5, so the ENTIRE
+  // approximate pipeline — signatures, band keys, bucket join, exact-Jaccard
+  // verify — is bit-reproducible on any engine with an md5 function. That
+  // turns LSH from a "rows-only, trust the spec" operator into a hash-gated
+  // one: an external oracle can replay the same bucketing and must land on
+  // identical candidate pairs.
 
   /** Distinct word `n`-gram shingles per document: (id, sh). Documents with
     * fewer than `n` whitespace tokens produce no shingles (mirrored by the
-    * oracle). Lowercased, whitespace-tokenized — the portable tokenization. */
-  /** PRECONDITION (ADVICE r12): `idCol` must be unique in `docs`. The
+    * oracle). Lowercased, whitespace-tokenized — the portable tokenization.
+    *
+    * PRECONDITION (ADVICE r12): `idCol` must be unique in `docs`. The
     * pre-r12 exploded form carried a global `(id, sh)` DISTINCT that
     * collapsed duplicate-id inputs; the array form's per-row
     * `array_distinct` does not, so a duplicate id would emit its shingle
@@ -571,15 +432,6 @@ object Dedup {
         .as("shs"))
   }
 
-  /** LSH candidate pairs from md5-derived MinHash signatures.
-    *
-    * For hash `h` of `numHashes`, the signature value is
-    * `min over shingles of uint60(md5(h || ':' || shingle))` (first 15 hex
-    * chars — 60 bits, inside a signed long). Signatures are grouped into
-    * bands of `rowsPerBand` consecutive hashes; the band key is the values
-    * joined with '_' in hash order; candidates are the distinct id pairs
-    * sharing any (band, key) bucket — an equi-join on the bucket, never
-    * all-pairs, exactly the [[minhashLshPairs]] scale shape. */
   /** md5 signature table (id, h, mv) — the per-hash minima every banding
     * below consumes. Computed by the codegen'd `minhash_md5` expression
     * (all k minima in one pass per doc over the collected shingle array)
@@ -618,8 +470,11 @@ object Dedup {
 
   /** Band-bucket candidate pairs from signature ARRAYS — the map-only
     * banding: explode (band, bkey) per doc straight out of the array,
-    * equi-join on the bucket, distinct. Two exchanges total (join +
-    * distinct) vs the exploded form's three. */
+    * pair within each bucket through [[boundedSelfPairs]], distinct.
+    * Every task's work is bounded: a bucket of more than 4096 docs (a
+    * corpus of near-identical pages sharing a band key) splits into a
+    * grid of ≤ 4096² cells instead of one straggler task; the pairs are
+    * the plain bucket self-join's. */
   private[graft] def candidatesFromArrays(sigArr: DataFrame,
       rowsPerBand: Int, numHashes: Int): DataFrame = {
     // integer banding drops trailing hashes when rowsPerBand ∤ numHashes;
@@ -636,11 +491,8 @@ object Dedup {
       posexplode_outer(bandKeyCol(col("mvs"), rowsPerBand,
         numHashes / rowsPerBand)).as(Seq("band", "bkey")))
       .filter(col("bkey").isNotNull)
-    bands.select(col("band"), col("bkey"), col("id").as("id_a"))
-      .join(bands.select(col("band"), col("bkey"), col("id").as("id_b")),
-        Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    boundedSelfPairs(bands, Seq("band", "bkey"), "id", maxBucket = 4096)
+      .distinct()
   }
 
   /** Exact Jaccard for given candidate pairs over per-doc shingle ARRAYS:
@@ -715,6 +567,15 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
+  /** LSH candidate pairs from md5-derived MinHash signatures.
+    *
+    * For hash `h` of `numHashes`, the signature value is
+    * `min over shingles of uint60(md5(h || ':' || shingle))` (first 15 hex
+    * chars — 60 bits, inside a signed long). Signatures are grouped into
+    * bands of `rowsPerBand` consecutive hashes; the band key is the values
+    * joined with '_' in hash order; candidates are the distinct id pairs
+    * sharing any (band, key) bucket — an equi-join on the bucket, never
+    * all-pairs. */
   def minhashCandidatesPortable(sh: DataFrame, numHashes: Int,
       rowsPerBand: Int): DataFrame =
     candidatesFromSignatures(signaturesPortable(sh, numHashes), rowsPerBand)
@@ -727,8 +588,7 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     // round 12: array form — signatures and verify sets are map-only off
     // ONE persisted per-doc shingle-array table; the only exchanges left
-    // are the band-bucket join + distinct and the verify pair joins
-    // (was: shingle distinct + groupBy-collect + (id,band) groupBy more)
+    // are the band-bucket pairing + distinct and the verify pair joins
     val shArr = wordShingleArrays(docs, idCol, textCol, shingleWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = candidatesFromArrays(
@@ -738,9 +598,9 @@ object Dedup {
 
   /** Cross-corpus md5-MinHash LSH with exact-Jaccard verify — the
     * "dedup the new crawl against the existing training set" operation
-    * ([[minhashLshPairsAgainst]]) in the ORACLE-REPLAYABLE form: both
-    * sides banded from md5 signatures, candidates from the cross
-    * band-bucket join, every pair verified on true shingle Jaccard.
+    * in the ORACLE-REPLAYABLE form: both sides banded from md5
+    * signatures, candidates from the cross band-bucket join, every pair
+    * verified on true shingle Jaccard.
     * Output: (id_a = corpus doc, id_b = probe doc, jaccard ≥ threshold).
     */
   def minhashCrossPortable(corpus: DataFrame, probe: DataFrame,
@@ -778,13 +638,12 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash from md5 token hashes — the oracle-replayable form of
-    * [[simhashes]]: bit b of the fingerprint is set iff
+  /** 64-bit SimHash from md5 token hashes: (id, sh), bit b of the
+    * `bigint` fingerprint `sh` set iff
     * `Σ_tokens (±1 by bit b of uint64(md5(token)))` is positive, with
-    * each DISTINCT token weighted by its in-doc count. Formatted as
-    * 16-hex-char strings so signed/unsigned display cannot diverge.
-    * One pass per doc over the token array; an external oracle replays
-    * every bit with `(md5-uint64 >> b) & 1` algebra. */
+    * each DISTINCT token weighted by its in-doc count. One pass per doc
+    * over the token array; an external oracle replays every bit with
+    * `(md5-uint64 >> b) & 1` algebra. */
   def simhashPortable(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val sim = udf { (text: String) =>
@@ -810,10 +669,10 @@ object Dedup {
         var fp = 0L
         var b = 0
         while (b < 64) { if (votes(b) > 0) fp |= 1L << b; b += 1 }
-        String.format("%016x", java.lang.Long.valueOf(fp))
+        java.lang.Long.valueOf(fp)
       }
     }
-    docs.select(col(idCol).as("id"), sim(col(textCol)).as("simhash"))
+    docs.select(col(idCol).as("id"), sim(col(textCol)).as("sh"))
   }
 
   /** Content-defined chunking (the storage-dedup / delta-sync primitive:

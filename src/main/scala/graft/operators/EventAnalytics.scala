@@ -36,16 +36,6 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n_users"))
   }
 
-  /** Ordered funnel: for each user, the furthest step reached of
-    * `steps = Seq(typeA, typeB, ...)`, where step k counts only if an
-    * event of type k happened AT OR AFTER the user's earliest qualifying
-    * time of step k−1 (strictly ordered progression). Output:
-    * (step_idx, step_name, n_users) — users reaching AT LEAST that step.
-    *
-    * One aggregate per user computes the earliest qualifying timestamp of
-    * every step in a single pass (min of each type filtered by the
-    * previous step's min — a fold over struct columns), then one tiny
-    * count per step. */
   /** First-order transition counts of the per-user event sequence (the
     * Markov-chain edge table behind "what do users do next"): events
     * ordered by time within each user, paired with `lead`, counted per
@@ -78,6 +68,16 @@ object EventAnalytics {
       .drop("_epoch")
   }
 
+  /** Ordered funnel: for each user, the furthest step reached of
+    * `steps = Seq(typeA, typeB, ...)`, where step k counts only if an
+    * event of type k happened AT OR AFTER the user's earliest qualifying
+    * time of step k−1 (strictly ordered progression). Output:
+    * (step_idx, step_name, n_users) — users reaching AT LEAST that step.
+    *
+    * One aggregate per user computes the earliest qualifying timestamp of
+    * every step in a single pass (min of each type filtered by the
+    * previous step's min — a fold over struct columns), then one tiny
+    * count per step. */
   def funnel(events: DataFrame, userCol: String, tsCol: String,
       typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "at least one step")

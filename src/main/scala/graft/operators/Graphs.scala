@@ -181,20 +181,6 @@ object Graphs {
     visited
   }
 
-  /** Fixed-round k-core peeling: each round drops every node whose degree
-    * in the SURVIVING subgraph is < k (then the edges touching it). A
-    * bounded number of synchronous rounds — each one degree aggregate plus
-    * two semi-joins, all distributed — approaches the true k-core from
-    * above; the `converged` column reports whether the LAST round removed
-    * anything, so callers know when the fixpoint is reached. (The exact
-    * sequential algorithm — degeneracy-ordered peeling — is inherently
-    * serial; synchronous rounds are the scalable form, like [[pageRank]]'s
-    * synchronous iterations.) `edges` must be symmetric ([[symmetrize]]).
-    *
-    * Output: (node, degree, converged) for survivors after `rounds` —
-    * degree measured in the FINAL induced subgraph (possibly < k when not
-    * yet converged; survivors that lost every edge report 0).
-    */
   /** Synchronous label-propagation community detection (Raghavan et al.
     * 2007, public algorithm) over an undirected edge table, run for a
     * fixed `rounds` — the scalable form of LPA (the classic sequential
@@ -235,6 +221,20 @@ object Graphs {
     labels
   }
 
+  /** Fixed-round k-core peeling: each round drops every node whose degree
+    * in the SURVIVING subgraph is < k (then the edges touching it). A
+    * bounded number of synchronous rounds — each one degree aggregate plus
+    * two semi-joins, all distributed — approaches the true k-core from
+    * above; the `converged` column reports whether the LAST round removed
+    * anything, so callers know when the fixpoint is reached. (The exact
+    * sequential algorithm — degeneracy-ordered peeling — is inherently
+    * serial; synchronous rounds are the scalable form, like [[pageRank]]'s
+    * synchronous iterations.) `edges` must be symmetric ([[symmetrize]]).
+    *
+    * Output: (node, degree, converged) for survivors after `rounds` —
+    * degree measured in the FINAL induced subgraph (possibly < k when not
+    * yet converged; survivors that lost every edge report 0).
+    */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 16)
     // localCheckpoint per round: persist alone caches DATA but the

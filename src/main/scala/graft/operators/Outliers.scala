@@ -32,11 +32,6 @@ object Outliers {
       col("stats.triggerFailsafe"))
   }
 
-  /** Expert-distribution outliers: records of a taxon outside its expert
-    * polygon, with distance outside (reference
-    * `getRecordsOutsideDistribution:397` + `getOutlierRecordDistances:412`;
-    * 50 km threshold `:53`). `distributions`: (taxonGuid, wkt) — small, so
-    * the parsed polygons broadcast; points never shuffle. */
   /** Grouped z-score outliers: rows whose value sits more than `z`
     * population standard deviations from their group's mean. The group
     * stats are ONE aggregate (small: |groups| rows) joined back — Spark
@@ -82,6 +77,11 @@ object Outliers {
       .drop("_med", "_mad")
   }
 
+  /** Expert-distribution outliers: records of a taxon outside its expert
+    * polygon, with distance outside (reference
+    * `getRecordsOutsideDistribution:397` + `getOutlierRecordDistances:412`;
+    * 50 km threshold `:53`). `distributions`: (taxonGuid, wkt) — small, so
+    * the parsed polygons broadcast; points never shuffle. */
   def expertDistributionOutliers(
       spark: SparkSession, records: DataFrame, distributions: DataFrame,
       thresholdMetres: Double = 50000): DataFrame = {

@@ -271,11 +271,6 @@ object DimensionStages {
       lead.contains(c))).map(c => out.col(s"`${c.replace("`", "``")}`")): _*)
   }
 
-  /** F11: coordinates-are-country-centre check (reference
-    * `vocab/CountryCentrePoints.scala` + `processor/LocationProcessor
-    * .scala:652-790`): a record whose coordinates equal its country's centre
-    * point (at 2-dp tolerance, the common data-entry artefact) is flagged.
-    * `centresDim`: (country, centreLat, centreLon). */
   /** Centre-point comparison at the precision of the supplied coordinates
     * (reference `vocab/CentrePoints.coordinatesMatchCentre`: the region
     * centre is rounded to the record's decimal places before comparing, so
@@ -316,9 +311,12 @@ object DimensionStages {
       .drop(key, s"${key}Lat", s"${key}Lon")
   }
 
-  /** Country-centre check (F11). `centresDim`: (country, centreLat,
-    * centreLon); reference `LocationProcessor.scala:206-208` +
-    * `vocab/CountryCentrePoints`. */
+  /** F11: coordinates-are-country-centre check (reference
+    * `vocab/CountryCentrePoints.scala` + `processor/LocationProcessor
+    * .scala:652-790`): a record whose coordinates equal its country's centre
+    * point (at 2-dp tolerance, the common data-entry artefact) is flagged.
+    * `centresDim`: (country, centreLat, centreLon); see also
+    * `LocationProcessor.scala:206-208`. */
   def checkCentrePoints(df: DataFrame, centresDim: DataFrame): DataFrame =
     centreCheckStage(df, centresDim, "country",
       Seq("processed_country", "country"),

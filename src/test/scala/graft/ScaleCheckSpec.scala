@@ -30,6 +30,14 @@ class ScaleCheckSpec extends AnyFunSuite {
       Set("q120_sorted_neighborhood", "q177_minhash_portable"))
   }
 
+  test("every query but q184 has a DuckDB oracle, and every oracle a query") {
+    // q184 reports java.util.zip deflate ratios, which no SQL engine replays
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set("q184_compress_ratio"))
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  }
+
   test("every subset query exists in SparkEntry.queries with an oracle") {
     val all = (ScaleCheck.Subset ++ ScaleCheck.subsetFor(100)).distinct
     all.foreach { q =>

@@ -10,19 +10,26 @@ class MinHashAggSpec extends AnyFunSuite {
 
   private val K = 128
 
+  /** The md5 MinHash signature q91's `minhash_md5` computes. */
+  private def md5Signature(shingles: Array[String]): Array[Long] =
+    graft.plans.MinhashMd5.compute(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        shingles.toSeq.map(org.apache.spark.unsafe.types.UTF8String
+          .fromString)), K).toLongArray()
+
   test("aggregated signature equals the signature of the pooled set") {
     val texts = Seq("alpha beta gamma delta", "gamma delta epsilon zeta",
       "zeta eta theta iota")
     val df = texts.map(t => ("g1", t)).toDF("g", "text")
     val sigUdf = udf((text: String) =>
-      HashKernels.minhash(HashKernels.charShingles(text, 4), K))
+      md5Signature(HashKernels.charShingles(text, 4)))
     val unionSig = udaf(MinHashUnionAgg)
     val got = df.select(col("g"), sigUdf(col("text")).as("sig"))
       .groupBy("g").agg(unionSig(col("sig")).as("gsig"))
       .select("gsig").as[Seq[Long]].head()
     // signature of the union of all shingle sets, computed directly
     val pooled = texts.flatMap(t => HashKernels.charShingles(t, 4)).distinct
-    val direct = HashKernels.minhash(pooled.toArray, K)
+    val direct = md5Signature(pooled.toArray)
     assert(got == direct.toSeq)
   }
 
@@ -33,7 +40,7 @@ class MinHashAggSpec extends AnyFunSuite {
       "sphinx of black quartz judge my vow")
     val df = (g1.map(("a", _)) ++ g2.map(("b", _))).toDF("g", "text")
     val sigUdf = udf((text: String) =>
-      HashKernels.minhash(HashKernels.charShingles(text, 4), K))
+      md5Signature(HashKernels.charShingles(text, 4)))
     val unionSig = udaf(MinHashUnionAgg)
     val sigs = df.select(col("g"), sigUdf(col("text")).as("sig"))
       .groupBy("g").agg(unionSig(col("sig")).as("gsig"))

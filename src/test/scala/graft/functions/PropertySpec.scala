@@ -19,6 +19,13 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** The md5 MinHash signature q91's `minhash_md5` computes. */
+  private def md5Signature(shingles: Array[String], k: Int): Array[Long] =
+    graft.plans.MinhashMd5.compute(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        shingles.toSeq.map(org.apache.spark.unsafe.types.UTF8String
+          .fromString)), k).toLongArray()
+
   private def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
     forAll(Gen.zip(ga, gb))(t => f(t._1, t._2))
 
@@ -87,7 +94,7 @@ class PropertySpec extends AnyFunSuite {
       val sb = HashKernels.charShingles(b, 5)
       val trueJ = HashKernels.jaccard(sa, sb)
       val est = HashKernels.signatureSimilarity(
-        HashKernels.minhash(sa, 128), HashKernels.minhash(sb, 128))
+        md5Signature(sa, 128).toSeq, md5Signature(sb, 128).toSeq)
       assert(math.abs(est - trueJ) < 0.3, s"est=$est true=$trueJ")
     }
   }

@@ -44,6 +44,31 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"scope leaked persistent RDDs: $leaked")
   }
 
+  test("a scoped simhashPairs run releases every persist it made") {
+    // 20 copies of one text plus 20 distinct texts: the band join and the
+    // equal-signature pairing both produce rows
+    val docs = (1L to 40L).map { i =>
+      (i, if (i <= 20) "the same boilerplate page text every time"
+        else s"distinct page $i about ${i * 3} and ${i * 11} things")
+    }.toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    var during: Set[Int] = Set.empty
+    val n = CacheScope.scoped(spark)(
+      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8)) { out =>
+      val cnt = out.count()
+      during = sc.getPersistentRDDs.keySet.toSet -- before
+      cnt
+    }
+    assert(n >= 20L * 19 / 2)
+    // hammingPairsOfSignatures' signature table and the two
+    // boundedSelfPairs tables (band buckets, equal signatures)
+    assert(during.size >= 3, s"expected 3 persists alive, saw $during")
+    val leaked = during.intersect(sc.getPersistentRDDs.keySet.toSet)
+    assert(leaked.isEmpty, s"scope leaked persistent RDDs: $leaked")
+  }
+
   test("scoped releases persists even when `use` throws") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
@@ -89,8 +114,8 @@ class CacheScopeSpec extends AnyFunSuite {
       assert(leaked.isEmpty, s"$label leaked RDDs: $leaked")
     }
 
-    assertScoped("minhashLshPairs")(
-      Dedup.minhashLshPairs(docs, "doc_id", "text", jaccardThreshold = 0.5))
+    assertScoped("minhashLshPortable")(
+      Dedup.minhashLshPortable(docs, "doc_id", "text", threshold = 0.5))
     assertScoped("ngramJaccardPairs → clusterSummary")(
       Components.clusterSummary(
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", 8, 0.5),

@@ -53,8 +53,8 @@ class OperatorsSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val docs = Seq((1L, base), (2L, base + " extra"), (3L, "entirely different text about nothing"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      jaccardThreshold = 0.5).collect()
+    val pairs = Dedup.minhashLshPortable(docs, "doc_id", "text",
+      threshold = 0.5).collect()
     assert(pairs.exists(r => r.getAs[Long]("id_a") == 1L && r.getAs[Long]("id_b") == 2L))
     assert(!pairs.exists(r => r.getAs[Long]("id_b") == 3L))
   }
@@ -67,15 +67,15 @@ class OperatorsSpec extends AnyFunSuite {
       (10L, base + " extra"),                 // near-dup of corpus doc 1
       (11L, "entirely unrelated content here") // novel
     ).toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairsAgainst(corpus, probe,
-      "doc_id", "text", jaccardThreshold = 0.5).collect()
-    assert(pairs.exists(r => r.getAs[Long]("corpus_id") == 1L &&
-      r.getAs[Long]("probe_id") == 10L))
-    assert(!pairs.exists(r => r.getAs[Long]("probe_id") == 11L))
-    // exact copy scores estimated Jaccard 1.0
-    val exact = Dedup.minhashLshPairsAgainst(corpus,
+    val pairs = Dedup.minhashCrossPortable(corpus, probe,
+      "doc_id", "text", threshold = 0.5).collect()
+    assert(pairs.exists(r => r.getAs[Long]("id_a") == 1L &&
+      r.getAs[Long]("id_b") == 10L))
+    assert(!pairs.exists(r => r.getAs[Long]("id_b") == 11L))
+    // exact copy scores Jaccard 1.0
+    val exact = Dedup.minhashCrossPortable(corpus,
       Seq((20L, base)).toDF("doc_id", "text"), "doc_id", "text").collect()
-    assert(exact.length == 1 && exact(0).getAs[Double]("est_jaccard") == 1.0)
+    assert(exact.length == 1 && exact(0).getAs[Double]("jaccard") == 1.0)
   }
 
   test("simhash hamming ~0 for near-identical docs") {
@@ -99,7 +99,7 @@ class OperatorsSpec extends AnyFunSuite {
         (b * 10L + v, txt)
       }
     }.toDF("doc_id", "text")
-    val hashes = Dedup.simhashes(docs, "doc_id", "text")
+    val hashes = Dedup.simhashPortable(docs, "doc_id", "text")
       .as[(Long, Long)].collect()
     val brute = (for {
       (ia, ha) <- hashes; (ib, hb) <- hashes

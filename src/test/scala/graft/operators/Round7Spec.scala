@@ -315,8 +315,8 @@ class Round7Spec extends AnyFunSuite {
     // fingerprint equals uint64(md5("a")) = the first 16 hex chars
     val docs = Seq((1L, "a"), (2L, "a"), (3L, "b c d")).toDF("doc_id", "text")
     val out = Dedup.simhashPortable(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) == "0cc175b9c0f1b6a8") // md5("a") prefix
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(f"${out(1L)}%016x" == "0cc175b9c0f1b6a8") // md5("a") prefix
     assert(out(1L) == out(2L))            // identical docs agree
     assert(out(1L) != out(3L))
   }

@@ -41,8 +41,7 @@ class Round8Spec extends AnyFunSuite {
     val txt = (1 to 30).map(i => s"tok$i").mkString(" ")
     val docs = ((1 to 3000).map(i => (i.toLong, txt)) ++
       (3001 to 3500).map(i => (i.toLong, ""))).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3,
-      numBandsOverride = None)
+    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
     // simhash("") and simhash(txt) may or may not be within Hamming 3 of
     // each other; count the two guaranteed equal-signature families exactly.
     val eqPairs = pairs.filter(col("hamming") === 0).count()
@@ -65,13 +64,13 @@ class Round8Spec extends AnyFunSuite {
       }
     } ++ (0 until 20).map(i => (10000L + i, "same doc every time")))
       .toDF("doc_id", "text")
-    val hashes = Dedup.simhashes(docs, "doc_id", "text")
-      .as[(Long, Long)].collect()
+    val sigs = Dedup.simhashPortable(docs, "doc_id", "text")
+    val hashes = sigs.as[(Long, Long)].collect()
     val brute = (for {
       (ia, ha) <- hashes; (ib, hb) <- hashes
       if ia < ib && java.lang.Long.bitCount(ha ^ hb) <= 8
     } yield (ia, ib)).toSet
-    val banded = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8,
+    val banded = Dedup.hammingPairsOfSignatures(sigs, maxHamming = 8,
         maxBucket = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(banded.toSet == brute,
@@ -118,23 +117,23 @@ class Round8Spec extends AnyFunSuite {
     assert(recall >= 0.7, s"batch ANN recall $recall below floor")
   }
 
-  test("cross-corpus minhash rep-collapse: dup families expand exactly once") {
+  test("cross-corpus minhash: dup families pair exactly once") {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val other = (100 to 140).map(i => s"word$i").mkString(" ")
     // 11 copies of `base` in the corpus, 5 exact copies + 1 near-dup in
-    // the probe: the banded join sees ONE row per signature per band, and
-    // the expansion must produce each (copy, copy) pair exactly once
+    // the probe: every (copy, copy) pair shares every band bucket, and
+    // must still come out exactly once
     val corpus = (Seq((1L, base), (2L, other)) ++
       (100 to 109).map(i => (i.toLong, base))).toDF("doc_id", "text")
     val probe = (Seq((10L, base + " extra"), (11L, "entirely unrelated")) ++
       (200 to 204).map(i => (i.toLong, base))).toDF("doc_id", "text")
-    val got = Dedup.minhashLshPairsAgainst(corpus, probe, "doc_id", "text",
-      jaccardThreshold = 0.5).collect()
-      .map(r => (r.getAs[Long]("corpus_id"), r.getAs[Long]("probe_id")) ->
-        r.getAs[Double]("est_jaccard")).toMap
+    val got = Dedup.minhashCrossPortable(corpus, probe, "doc_id", "text",
+      threshold = 0.5).collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) ->
+        r.getAs[Double]("jaccard")).toMap
     val corpusFam = Set(1L) ++ (100L to 109L)
     val probeFam = (200L to 204L).toSet
-    // full family cross product at est 1.0
+    // full family cross product at Jaccard 1.0
     for (c <- corpusFam; p <- probeFam) {
       assert(got.get((c, p)).contains(1.0), s"missing exact pair ($c,$p)")
     }
@@ -144,8 +143,8 @@ class Round8Spec extends AnyFunSuite {
     assert(!got.keys.exists(_._2 == 11L))
     assert(!got.keys.exists(_._1 == 2L))
     // no duplicate pairs (map building would have collapsed them silently)
-    val rows = Dedup.minhashLshPairsAgainst(corpus, probe, "doc_id", "text",
-      jaccardThreshold = 0.5).count()
+    val rows = Dedup.minhashCrossPortable(corpus, probe, "doc_id", "text",
+      threshold = 0.5).count()
     assert(rows == got.size)
   }
 
@@ -175,22 +174,22 @@ class Round8Spec extends AnyFunSuite {
     assert(!plan.contains("Cartesian"), plan)
   }
 
-  test("minhash bounded path equals naive band join on a corpus with exact dup family") {
+  test("minhash on a corpus with an exact dup family: each pair once, at Jaccard 1") {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val docs = (Seq((1L, base), (2L, base + " extra"),
       (3L, "entirely different text about nothing")) ++
       (10 to 29).map(i => (i.toLong, base))) // 20 exact copies of doc 1
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      jaccardThreshold = 0.5, maxBucket = 4)
+    val pairs = Dedup.minhashLshPortable(docs, "doc_id", "text",
+      threshold = 0.5)
     val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect()
     assert(got.length == got.toSet.size, "duplicate id pairs emitted")
-    // the exact-copy family: all C(21,2) pairs at est 1.0
+    // the exact-copy family: all C(21,2) pairs at Jaccard 1.0
     val fam = Set(1L) ++ (10L to 29L)
     val famPairs = for (a <- fam; b <- fam if a < b) yield (a, b)
     assert(famPairs.subsetOf(got.toSet))
     assert(pairs.filter(col("id_a").isin(fam.toSeq: _*) &&
-      col("id_b").isin(fam.toSeq: _*) && col("est_jaccard") =!= 1.0).count() == 0)
+      col("id_b").isin(fam.toSeq: _*) && col("jaccard") =!= 1.0).count() == 0)
     // near-dup still found, unrelated doc still excluded
     assert(got.toSet.contains((1L, 2L)))
     assert(!got.exists(p => p._1 == 3L || p._2 == 3L))

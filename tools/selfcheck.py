@@ -72,15 +72,13 @@ def main(sf_dir, out_dir, only=None, against=None):
             # The oracle gate canonicalizes via pandas dtypes, where DuckDB
             # HUGEINT (e.g. sum(INTEGER)) becomes float64 and
             # hash-mismatches Spark's int64 even when fetchall() values
-            # compare equal. Flag it here.
-            huge = [c for c, dt in zip(exp_cols,
-                    con.sql(oracle[name]).fetchdf().dtypes)
-                    if str(dt) == "float64" and any(
-                        type(r[exp_cols.index(c)]) is int
-                        for r in exp[:5] if r[exp_cols.index(c)] is not None)]
+            # compare equal. Flag it here, from the relation's column types
+            # (no second run of the oracle).
+            huge = [c for c, t in zip(exp_cols, exp_rel.types)
+                    if str(t) in ("HUGEINT", "UHUGEINT")]
             if huge:
-                print(f"WARN  {name:24s} oracle cols {huge} fetch as float64 "
-                      f"but hold ints (HUGEINT?) — CAST(... AS BIGINT)")
+                print(f"WARN  {name:24s} oracle cols {huge} are HUGEINT "
+                      f"(pandas float64) — CAST(... AS BIGINT)")
             refs.append(("oracle", exp_cols, exp))
         if against:
             other = f"{against}/{name}"

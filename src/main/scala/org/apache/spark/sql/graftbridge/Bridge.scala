@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.Analyzer
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+import org.apache.spark.sql.catalyst.expressions.{Attribute, CodegenObjectFactoryMode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -23,9 +25,8 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
-  /** A DataFrame over `plan` whose rows `encoder` (from [[rowEncoder]],
-    * for the plan's schema) deserializes, so no encoder is derived from
-    * the schema for it. */
+  /** A DataFrame over `plan` whose rows `encoder` deserializes, so no
+    * encoder is derived from the plan's schema for it. */
   def ofRows(spark: SparkSession, plan: LogicalPlan,
       encoder: ExpressionEncoder[Row]): DataFrame = {
     val s = spark.asInstanceOf[ClassicSparkSession]
@@ -34,10 +35,34 @@ object Bridge {
 
   /** The encoder `ofRows` derives for `schema`, built under `spark`'s
     * settings (`datetime.java8API` picks the external date and time
-    * types). Unresolved, so one can serve any number of DataFrames. */
-  def rowEncoder(spark: SparkSession, schema: StructType): ExpressionEncoder[Row] =
-    spark.asInstanceOf[ClassicSparkSession].withActive(
-      ExpressionEncoder(RowEncoder.encoderFor(schema)))
+    * types), and resolved and bound once, under `spark`, for attributes of
+    * `schema`. Its `resolveAndBind` returns that bound copy for attributes
+    * with `schema`'s data types and nullability in order, which a bound
+    * deserializer reads by ordinal: so collecting a Dataset whose output
+    * is `schema` runs no analyzer pass over the deserializer. Other
+    * attributes, such as those of another frame read through the encoder
+    * with `as`, are resolved as usual; `map`, `copy` and every other use
+    * see an ordinary unresolved encoder. One can serve any number of
+    * DataFrames. (DataFrame set operators, which may widen types, derive
+    * an encoder of their own.) */
+  def boundRowEncoder(spark: SparkSession, schema: StructType): ExpressionEncoder[Row] = {
+    val s = spark.asInstanceOf[ClassicSparkSession]
+    s.withActive {
+      val e = ExpressionEncoder(RowEncoder.encoderFor(schema))
+      new BoundRowEncoder(e,
+        e.resolveAndBind(DataTypeUtils.toAttributes(schema), s.sessionState.analyzer))
+    }
+  }
+
+  private final class BoundRowEncoder(e: ExpressionEncoder[Row], bound: ExpressionEncoder[Row])
+      extends ExpressionEncoder[Row](e.encoder, e.objSerializer, e.objDeserializer) {
+    private val fields = schema.map(f => (f.dataType, f.nullable))
+
+    override def resolveAndBind(attrs: Seq[Attribute],
+        analyzer: Analyzer): ExpressionEncoder[Row] =
+      if (attrs.map(a => (a.dataType, a.nullable)) == fields) bound
+      else super.resolveAndBind(attrs, analyzer)
+  }
 
   def planOf(df: DataFrame): LogicalPlan = df.queryExecution.logical
 

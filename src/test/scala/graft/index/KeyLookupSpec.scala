@@ -13,6 +13,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{InterpretedSafeProjection, InterpretedUnsafeProjection, SafeProjection, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TestHooks
@@ -592,4 +593,93 @@ class KeyLookupSpec extends AnyFunSuite {
         assert(KeyLookup.Groups.decodes == decoded)
       }
   }
+
+  test("direct results under one reader share one bound encoder: collect runs no analyzer pass") {
+    val idx = written("bound")
+    val (a, b) = (Store.getByKey(idx, keys(16)), Store.getByKey(idx, keys(17)))
+    assert(a ne b)
+    assert(a.collect().length == 1 && b.collect().length == 1)
+    val enc = TestHooks.resolvedEncoder(a)
+    assert(TestHooks.resolvedEncoder(b) eq enc)
+    // the filter path resolves its own; another setting binds another copy
+    assert(TestHooks.resolvedEncoder(idx.filter(col("id") === keys(16))) ne enc)
+    withSetting("graft.keylookup.spec.bound", "1") {
+      val c = Store.getByKey(idx, keys(16))
+      assert(rows(c) == rows(a))
+      assert(TestHooks.resolvedEncoder(c) ne enc)
+    }
+  }
+
+  test("a direct result unioned with a widened or an added column matches the filter path") {
+    val idx = written("widen")
+    val (k, other) = (keys(18), keys(19))
+    val got = Store.getByKey(idx, k)
+    val want = idx.filter(col("id") === k)
+    def same(g: DataFrame, w: DataFrame): Unit = {
+      assert(g.schema == w.schema)
+      assert(rows(g) == rows(w))
+    }
+    // occurrence_year int, widened to double by the union
+    val wide = idx.filter(col("id") === other)
+      .withColumn("occurrence_year", col("occurrence_year").cast("double"))
+    assert(idx.schema("occurrence_year").dataType.typeName == "integer")
+    val unioned = got.union(wide)
+    assert(unioned.schema("occurrence_year").dataType.typeName == "double")
+    same(unioned, want.union(wide))
+    assert(rows(unioned).size == 2)
+    // a column the direct result lacks, added by name
+    val extra = idx.filter(col("id") === other).withColumn("extra", lit(7))
+    val byName = got.unionByName(extra, allowMissingColumns = true)
+    assert(byName.columns.length == idx.columns.length + 1)
+    same(byName, want.unionByName(extra, allowMissingColumns = true))
+    assert(rows(byName).map(_.getAs[Any]("extra")).toSet == Set(null, 7))
+  }
+
+  test("a direct result's encoder serves its bound copy only to its types and nullability") {
+    // DataFrame set operators derive a new encoder for their result; the
+    // direct result's own meets other attributes through `as`
+    val idx = written("encoder")
+    val k = keys(21)
+    val got = Store.getByKey(idx, k)
+    assert(got.collect().length == 1)
+    val bound = TestHooks.resolvedEncoder(got)
+    val enc = got.encoder.asInstanceOf[ExpressionEncoder[Row]]
+    val analyzer = got.sparkSession.sessionState.analyzer
+    val attrs = idx.filter(col("id") === k).queryExecution.analyzed.output
+    // other names and expression ids, the same types and nullability
+    assert(enc.resolveAndBind(attrs.map(_.withName("x").newInstance()), analyzer) eq bound)
+    assert(enc.resolveAndBind(attrs.updated(3, attrs(3).withNullability(false)),
+      analyzer) ne bound)
+    // a frame whose types differ deserializes as with the index's own encoder
+    def outcome(df: DataFrame): Either[String, Seq[Row]] =
+      scala.util.Try(rows(df)).toEither.left.map(_.getClass.getName)
+    val want = idx.filter(col("id") === k)
+    val year = want.withColumn("occurrence_year", col("occurrence_year").cast("double"))
+    val front = want.select(lit("front").as("front") +: want.columns.toSeq.map(col): _*)
+    for (df <- Seq(year, front))
+      assert(outcome(df.as(enc)) == outcome(df.as(want.encoder)))
+    assert(outcome(year.as(enc)).isLeft)
+  }
+
+  test("filter, limit, head and as on a direct result return the filter path's rows") {
+    import KeyLookupSpec.Hit
+    val idx = written("typed")
+    val k = keys(20)
+    val got = Store.getByKey(idx, k)
+    val want = idx.filter(col("id") === k)
+    val pred = col("occurrence_id").isNotNull
+    assert(rows(got.filter(pred)) == rows(want.filter(pred)) && rows(got.filter(pred)).size == 1)
+    assert(got.filter(col("occurrence_id") === "absent").collect().isEmpty)
+    assert(rows(got.limit(1)) == rows(want.limit(1)))
+    assert(got.head() == want.head())
+    assert(got.head().schema == want.head().schema)
+    val hits = got.as[Hit].collect().toSeq
+    assert(hits == want.as[Hit].collect().toSeq)
+    assert(hits.map(_.id) == Seq(k))
+  }
+}
+
+object KeyLookupSpec {
+  /** A few index columns, read by name. */
+  final case class Hit(id: String, occurrence_id: String, occurrence_year: Option[Int])
 }

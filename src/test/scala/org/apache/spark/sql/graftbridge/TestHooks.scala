@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Dataset, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 
 /** Spec-only reach into `private[sql]` session internals. */
 object TestHooks {
@@ -17,4 +18,10 @@ object TestHooks {
     extension(e)
     e.registerFunctions(FunctionRegistry.builtin.clone())
   }
+
+  /** The encoder `collect` deserializes `ds`'s rows with: the Dataset's
+    * private lazy `resolvedEnc`, resolved and bound on first use. */
+  def resolvedEncoder(ds: Dataset[_]): AnyRef =
+    classOf[ClassicDataset[_]].getMethod("org$apache$spark$sql$classic$Dataset$$resolvedEnc")
+      .invoke(ds)
 }

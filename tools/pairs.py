@@ -18,6 +18,17 @@ is appended to ``--log`` as one JSON line as soon as it finishes, so an
 interrupted series can still be reported. Each checkout builds itself on
 its first run.
 
+Each workload's report ends with one verdict line per end-to-end metric:
+``regressed`` when the change's median is worse than the base's by more
+than the metric's ``bound`` in ``BENCHMARK.json``, otherwise ``ok``.
+``--claim METRIC@WORKLOAD`` (repeatable) adds a line that reads ``claim
+met`` only when the change won at least 9 of every 10 pairs on that metric
+(a tie counts for neither side) and its median gap exceeds the base's
+interquartile range; otherwise ``claim not met`` and why. ``--report``
+gives the same verdicts from a saved log:
+
+    python3 tools/pairs.py --report pairs.jsonl --claim p50_ms@serve
+
 With ``--trace``, one traced run per side (on the first seed) follows the
 untraced pairs, and the report adds each side's median of the named
 per-layer metrics over its traced runs: ``processors.enrich.plan_ms``,
@@ -32,7 +43,8 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.join(os.path.dirname(HERE), "lifebench"))
+ROOT = os.path.dirname(HERE)
+sys.path.insert(0, os.path.join(ROOT, "lifebench"))
 sys.dont_write_bytecode = True  # leave no cache file under lifebench/
 
 import metrics  # noqa: E402
@@ -76,13 +88,48 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def report(rows):
+def bounds():
+    """Each end-to-end metric's regression bound, as a share of the base
+    median, from the repository's ``BENCHMARK.json``."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {m["name"]: m["bound"] for m in json.load(f)["end_to_end"]}
+
+
+def regressed(better, bound, base, change):
+    """Whether `change` is worse than `base` by more than `bound` of it."""
+    worse = change - base if better == "lower" else base - change
+    return base != 0 and worse / abs(base) > bound
+
+
+def claim_line(claim, b, c, wins, n, better):
+    """The verdict on `claim` ("METRIC@WORKLOAD"), given the base's and the
+    change's quartiles `b` and `c` over `n` pairs, `wins` of them won by the
+    change: met when it won at least 9 of every 10 pairs and its median gap
+    exceeds the base's interquartile range in the claimed direction."""
+    if not n:
+        return f"  claim {claim}: claim not met (no pairs)"
+    why = []
+    if wins * 10 < 9 * n:
+        why.append(f"change better in only {wins}/{n} pairs")
+    if (c[1] - b[1]) * (-1 if better == "lower" else 1) <= b[2] - b[0]:
+        why.append(f"median gap {c[1] - b[1]:+.4g} not beyond base IQR "
+                   f"{b[2] - b[0]:.4g} in the claimed direction")
+    head = "claim met" if not why else "claim not met"
+    return (f"  claim {claim}: {head} (change better {wins}/{n}; "
+            f"median {b[1]:.4g} -> {c[1]:.4g}; base IQR {b[0]:.4g}-{b[2]:.4g})"
+            + (f": {'; '.join(why)}" if why else ""))
+
+
+def report(rows, claims=()):
     """Prints the summary of `rows`: dicts with side, seed, workload and
-    the workload's entry of a record. Traced rows feed only the per-layer
-    medians of the metrics in `LAYERS`."""
+    the workload's entry of a record, with a verdict per end-to-end metric
+    and one per claim in `claims` ("METRIC@WORKLOAD"). Traced rows feed
+    only the per-layer medians of the metrics in `LAYERS`."""
     traced = [r for r in rows if r.get("trace")]
     rows = [r for r in rows if not r.get("trace")]
     better = {n: b for n, _, b in metrics.END_TO_END}
+    bound = bounds()
+    claimed = [tuple(c.split("@", 1)) for c in claims]
     for w in sorted({r["workload"] for r in rows}):
         mine = [r for r in rows if r["workload"] == w]
         by = {(r["side"], r["seed"]): r for r in mine}
@@ -93,6 +140,7 @@ def report(rows):
         print(f"== {w}: {len(seeds)} pairs (seeds {','.join(map(str, seeds))}); "
               f"failed-op ratio base {failed['base']} change {failed['change']}; "
               f"cpu steal max {max(steal, default=0):.1%}")
+        verdicts, judged = [], []
         for group in ("end_to_end", "named"):
             names = [n for n, _, _ in metrics.END_TO_END] if group == "end_to_end" \
                 else sorted({k for r in mine for k in r["entry"].get("named", {})})
@@ -113,11 +161,25 @@ def report(rows):
                     shown = abs(c[1] - b[1]) > b[2] - b[0]
                     line += (f"  change better {wins}/{len(pairs)}; gap "
                              f"{'exceeds' if shown else 'within'} base IQR")
+                    worse = regressed(better[name], bound[name], b[1], c[1])
+                    verdicts.append(f"  verdict {name:<14} "
+                                    f"{'regressed' if worse else 'ok'} ({gap:+.1%}, "
+                                    f"bound {bound[name]:.0%})")
+                    if (name, w) in claimed:
+                        judged.append(claim_line(f"{name}@{w}", b, c, wins,
+                                                 len(pairs), better[name]))
                 print(line)
         per_seed = [f"{s}: " + " ".join(
             f"{by[(side, s)]['entry']['end_to_end']['p50_ms']:.4g}" for side in SIDES)
             for s in seeds]
         print("  p50_ms per seed (base change): " + "; ".join(per_seed))
+        for v in verdicts + judged:
+            print(v)
+    seen = {r["workload"] for r in rows}
+    for metric, workload in claimed:
+        if workload not in seen:
+            print(f"== {workload}: no pairs")
+            print(claim_line(f"{metric}@{workload}", None, None, 0, 0, better[metric]))
     for w in sorted({r["workload"] for r in traced}):
         print(f"== {w}: traced runs, per-layer medians")
         for name in LAYERS:
@@ -152,10 +214,20 @@ def main():
     ap.add_argument("--trace", action="store_true",
                     help="after the pairs, one traced run per side; report "
                          "its per-layer medians")
+    ap.add_argument("--claim", action="append", default=[], metavar="METRIC@WORKLOAD",
+                    help="judge a claimed gain: met when the change won at "
+                         "least 9/10 pairs and the median gap exceeds the "
+                         "base IQR")
     a = ap.parse_args()
+    names = {n for n, _, _ in metrics.END_TO_END}
+    for c in a.claim:
+        metric, at, workload = c.partition("@")
+        if metric not in names or not at or not workload:
+            ap.error(f"--claim {c}: give METRIC@WORKLOAD with METRIC one of "
+                     f"{', '.join(sorted(names))}")
     if a.report:
         with open(a.report) as f:
-            report([json.loads(line) for line in f if line.strip()])
+            report([json.loads(line) for line in f if line.strip()], a.claim)
         return 0
     if not (a.base and a.change):
         ap.error("give BASE and CHANGE checkouts, or --report LOG")
@@ -179,7 +251,7 @@ def main():
         print(f"seed {seed} {side}{' traced' if trace else ''}: " + ", ".join(
             f"{r['workload']} p50_ms {r['entry']['end_to_end']['p50_ms']:.4g}"
             for r in got), flush=True)
-    report(rows)
+    report(rows, a.claim)
     return 0
 
 
